@@ -33,46 +33,80 @@ def _minhash_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
+# MinHash kernel working set: the flat shingle axis is walked in blocks
+# of _SHINGLE_BLOCK, permutations in chunks of _PERM_CHUNK, through ONE
+# reused (_PERM_CHUNK, _SHINGLE_BLOCK) int64 buffer (1 MB, L2-sized).
+# Peak memory is the batch's flat hashes plus that buffer plus the
+# signature rows — linear in the batch's shingle count with no num_perm
+# factor, so it stays flat however many rows a task carries (5.3 MB for
+# a 1024 x 400-shingle batch; the unblocked (16, total_shingles) kernel
+# peaked at 157 MB).  Measured on 4 vCPUs: 2^13 is the fastest block of
+# 2^11..2^15, and a 2^15 block (4 MB buffer) raised the pipeline's
+# Python-worker PSS by ~24 MB at local[4].
+_SHINGLE_BLOCK = 1 << 13
+_PERM_CHUNK = 16
+
+
+def minhash_batch(hashes: pd.Series, a: np.ndarray, b: np.ndarray) -> pd.Series:
+    """MinHash signatures of one batch: row i -> array of
+    min_x((a_j * x + b_j) mod p) over its shingle hashes x (taken mod p),
+    or None for a NULL/empty row.
+
+    All shingle hashes of the batch are flattened onto one axis (no
+    per-row Python loop in the math).  Each block of that axis yields
+    per-row partial minima via minimum.reduceat at the row starts that
+    fall inside it (plus the block start, for a row continuing from the
+    previous block); the partials are folded into the signature rows,
+    so a row spanning blocks gets the same minimum as an unblocked
+    pass — signatures are bit-identical to the direct formula."""
+    n = len(hashes)
+    lengths = np.fromiter(
+        (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=n
+    )
+    valid = lengths > 0
+    if not valid.any():
+        return pd.Series([None] * n)
+    num_perm = a.size
+    # fresh array from concatenate: reduce mod p in place (x in [0, p))
+    x = np.concatenate(
+        [np.asarray(h, dtype=np.int64) for h in hashes if h is not None and len(h)]
+    )
+    np.remainder(x, MINHASH_PRIME, out=x)
+    starts = np.zeros(int(valid.sum()), dtype=np.int64)
+    np.cumsum(lengths[valid][:-1], out=starts[1:])
+    sig_valid = np.full((starts.size, num_perm), MINHASH_PRIME, dtype=np.int64)
+    buf = np.empty((min(_PERM_CHUNK, num_perm), min(_SHINGLE_BLOCK, x.size)), np.int64)
+    for s0 in range(0, x.size, _SHINGLE_BLOCK):
+        xb = x[s0 : s0 + _SHINGLE_BLOCK]
+        # rows r0..r1-1 overlap this block; r0 may have started earlier
+        r0 = int(np.searchsorted(starts, s0, side="right")) - 1
+        r1 = int(np.searchsorted(starts, s0 + xb.size, side="left"))
+        seg = starts[r0:r1] - s0
+        seg[0] = 0
+        for c0 in range(0, num_perm, _PERM_CHUNK):
+            c1 = min(c0 + _PERM_CHUNK, num_perm)
+            hm = buf[: c1 - c0, : xb.size]
+            # a*x + b < 2^62 + 2^31: safe in int64
+            np.multiply(a[c0:c1, None], xb[None, :], out=hm)
+            np.add(hm, b[c0:c1, None], out=hm)
+            np.remainder(hm, MINHASH_PRIME, out=hm)
+            part = sig_valid[r0:r1, c0:c1]
+            np.minimum(part, np.minimum.reduceat(hm, seg, axis=1).T, out=part)
+    out = np.empty(n, dtype=object)
+    for j, i in enumerate(np.nonzero(valid)[0]):
+        out[i] = sig_valid[j]
+    return pd.Series(out)
+
+
 def make_minhash_udf(cfg: DedupConfig):
     """pandas UDF: array<long> shingle hashes -> array<long> MinHash
     signature of length cfg.num_perm; NULL for rows with no shingles
-    (short docs ride the exact-only path)."""
+    (short docs ride the exact-only path).  The math is minhash_batch."""
     a, b = _minhash_params(cfg.num_perm, cfg.seed)
-    num_perm = cfg.num_perm
-    # chunk the permutation axis so the (chunk, total_shingles) work
-    # matrix stays ~10 MB regardless of Arrow batch size (cache- and
-    # allocator-friendly across 32 concurrent workers)
-    perm_chunk = max(1, min(num_perm, 16))
 
     @F.pandas_udf(ArrayType(LongType()))
     def minhash_sig(hashes: pd.Series) -> pd.Series:
-        n = len(hashes)
-        lengths = np.fromiter(
-            (0 if h is None else len(h) for h in hashes), dtype=np.int64, count=n
-        )
-        valid = lengths > 0
-        if not valid.any():
-            return pd.Series([None] * n)
-        # flatten ALL shingle hashes of the batch: one numpy kernel per
-        # permutation chunk + minimum.reduceat at row offsets — no
-        # per-row Python loop
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h in hashes if h is not None and len(h)]
-        )
-        x = flat % MINHASH_PRIME
-        np.add(x, MINHASH_PRIME, out=x, where=x < 0)
-        starts = np.zeros(int(valid.sum()), dtype=np.int64)
-        np.cumsum(lengths[valid][:-1], out=starts[1:])
-        sig_valid = np.empty((starts.size, num_perm), dtype=np.int64)
-        for c0 in range(0, num_perm, perm_chunk):
-            c1 = min(c0 + perm_chunk, num_perm)
-            # (chunk, total_shingles); a*x+b < 2^62 — safe in int64
-            hm = (a[c0:c1, None] * x[None, :] + b[c0:c1, None]) % MINHASH_PRIME
-            sig_valid[:, c0:c1] = np.minimum.reduceat(hm, starts, axis=1).T
-        out = np.empty(n, dtype=object)
-        for j, i in enumerate(np.nonzero(valid)[0]):
-            out[i] = sig_valid[j]
-        return pd.Series(out)
+        return minhash_batch(hashes, a, b)
 
     return minhash_sig
 

@@ -239,7 +239,7 @@ def near_dup_pipeline(
         c = runner.run_stage(
             "cands",
             # s.df reads from the stage checkpoint — already a barrier
-            lambda: candidate_pairs(s.df, cfg, id_col, sigs_materialized=True)[0],
+            lambda: candidate_pairs(s.df, cfg, id_col)[0],
             upstream_fingerprint=runner.fingerprint("sigs"),
         )
         return s, c

@@ -30,9 +30,10 @@ Skew handling (north_rule: "salts skewed LSH buckets"):
   spreads a bucket over G(G+1)/2 tasks at the price of 3 extra
   exchanges of the full membership.
 - The sizing join shuffles on (band, band_hash); AQE skew-join
-  splitting handles residual imbalance, and the signature table is
-  range-partitioned on the band key to keep bucket rows co-located
-  (north_rule: "range-partitions signatures").
+  splitting handles residual imbalance.  The pipeline's signature
+  checkpoint is hash-partitioned on the doc key, not range-partitioned
+  on the band key: a range exchange samples its child, which re-ran the
+  MinHash UDF (operators.dedup_pipeline, the sigs stage).
 """
 
 from __future__ import annotations
@@ -65,9 +66,11 @@ def signatures(
     precedent, Common.pm:100,107).
     """
     # Parallelism guard: the Arrow/pandas stage must not run on one
-    # core when a checkpoint read-back arrives narrow (see
-    # plans.partitioning).
-    df = ensure_min_partitions(df, cfg.shuffle_partitions, id_col)
+    # core when a checkpoint read-back arrives narrow, and fans out to
+    # the cores, not to shuffle_partitions (see plans.partitioning).
+    df = ensure_min_partitions(
+        df, df.sparkSession.sparkContext.defaultParallelism, id_col
+    )
     minhash_udf = make_minhash_udf(cfg)
     # two-step projection: token hashes bound as a real column FIRST,
     # windows second (see window_hashes PERF CONTRACT)
@@ -102,15 +105,13 @@ def candidate_pairs(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     materialize: bool = True,
-    sigs_materialized: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (a, b, n_bands) with a < b, plus the skew
     report (band, band_hash, bucket_size) of truncated buckets.
 
-    `sigs_materialized` is kept for API stability; since r6 the
-    materialized path always builds its own band-hash-array barrier
-    (which reads `sigs` exactly once), so the flag no longer changes
-    the plan — only materialize=False skips barriers entirely.
+    The materialized path builds its own band-hash-array barrier (which
+    reads `sigs` exactly once); materialize=False skips barriers
+    entirely.
 
     J1 in SURVEY §2.5: same-key self-pairing, the grouping-as-join
     pattern the reference uses everywhere (A1–A3).

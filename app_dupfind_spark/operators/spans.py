@@ -238,10 +238,11 @@ def shared_span_pairs(
         F.substring(F.col(text_col), 1, max_chars).alias("text_b"),
     )
     joined = pairs.select("a", "b").join(ta, "a").join(tb, "b")
-    # spread the Python LCS kernel across the pool — the pair table is
-    # small enough that AQE would otherwise coalesce it onto one core
+    # spread the Python LCS kernel across the cores — the pair table is
+    # small enough that AQE would otherwise coalesce it onto one core,
+    # and a Python task costs a fixed ~0.25 s (plans.partitioning)
     joined = joined.repartition(
-        max(joined.sparkSession.sparkContext.defaultParallelism, 8), "a", "b"
+        joined.sparkSession.sparkContext.defaultParallelism, "a", "b"
     )
 
     out_schema = StructType(

@@ -35,10 +35,12 @@ def get_spark(
         # Arrow batches for pandas UDFs; bounded batch size keeps the
         # Python workers' memory flat regardless of partition size.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # modest batches keep each python worker's signature-math
-        # working set ~10 MB: with 32 workers per node, large batches
-        # cause simultaneous first-touch arena growth (tens of seconds
-        # of page faults on the first full-size UDF pass)
+        # modest batches bound each python worker's per-batch Arrow
+        # buffers and the MinHash kernel's flat hash array (its work
+        # matrix is bounded by shingle blocks, functions.hashing):
+        # large batches across many workers per node cause
+        # simultaneous first-touch arena growth (tens of seconds of
+        # page faults on the first full-size UDF pass)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # Constraint propagation OFF.  Catalyst's
         # UnionBase.rewriteConstraints throws

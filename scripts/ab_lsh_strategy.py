@@ -86,11 +86,11 @@ def _child(strategy: str, pages: str, cpus: int, id_col: str) -> None:
     sigs.count()
     # untimed warmup on a small slice: pay codegen/JIT for this plan
     warm = sigs.limit(2_000).localCheckpoint()
-    pairs_w, _ = candidate_pairs(warm, cfg, id_col, sigs_materialized=True)
+    pairs_w, _ = candidate_pairs(warm, cfg, id_col)
     pairs_w.write.format("noop").mode("overwrite").save()
 
     t0 = time.time()
-    pairs, _ = candidate_pairs(sigs, cfg, id_col, sigs_materialized=True)
+    pairs, _ = candidate_pairs(sigs, cfg, id_col)
     pairs.write.format("noop").mode("overwrite").save()
     sec = time.time() - t0
     print(json.dumps({"strategy": strategy, "sec": round(sec, 3)}))

@@ -131,7 +131,7 @@ def test_pair_strategies_identical(spark, pages, cfg):
     got = {}
     for strategy in ("arrays", "salted_join"):
         scfg = DedupConfig(lsh_pair_strategy=strategy)
-        pairs, _ = candidate_pairs(sigs, scfg, "url", sigs_materialized=True)
+        pairs, _ = candidate_pairs(sigs, scfg, "url")
         got[strategy] = {
             (r["a"], r["b"], r["n_bands"]) for r in pairs.collect()
         }
@@ -186,7 +186,7 @@ def test_arrays_pair_plan_shape(spark):
         "doc_id long, text string",
     )
     sigs = signatures(df, cfg, "doc_id", "text").localCheckpoint()
-    pairs, _ = candidate_pairs(sigs, cfg, "doc_id", sigs_materialized=True)
+    pairs, _ = candidate_pairs(sigs, cfg, "doc_id")
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") <= 3, plan
     assert "Window" not in plan, plan

@@ -1,0 +1,76 @@
+"""Python stages fan out to the cores (plans.partitioning).
+
+Partition counts are read from the physical plan with AQE off, so no
+job runs: the guards use explicit-count repartitions, which AQE never
+coalesces, so the static count is the runtime count."""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
+
+from app_dupfind_spark.config import DedupConfig
+from app_dupfind_spark.operators.minhash_lsh import signatures
+from app_dupfind_spark.operators.spans import shared_span_pairs
+from app_dupfind_spark.plans.partitioning import num_partitions
+
+
+@contextmanager
+def _static_plan(spark):
+    """Plan-only partition counts: AQE and broadcast joins (whose
+    preparation runs jobs) off; asserts no job ran meanwhile."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k) for k in keys}
+    sc = spark.sparkContext
+    tracker, group = sc.statusTracker(), sc.getLocalProperty("spark.jobGroup.id")
+    jobs = len(tracker.getJobIdsForGroup(group))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert len(tracker.getJobIdsForGroup(group)) == jobs
+
+
+def _docs(spark, n: int = 40) -> DataFrame:
+    return spark.createDataFrame(
+        [(i, " ".join(f"w{j}" for j in range(i, i + 30))) for i in range(n)],
+        "doc_id long, text string",
+    )
+
+
+def test_signatures_fan_out_to_default_parallelism(spark):
+    cfg = DedupConfig()
+    cores = spark.sparkContext.defaultParallelism
+    narrow = _docs(spark).coalesce(1)
+    wide = _docs(spark).repartition(cores * 2)
+    with _static_plan(spark):
+        assert num_partitions(narrow) == 1
+        got = num_partitions(signatures(narrow, cfg, "doc_id", "text"))
+        # not cfg.shuffle_partitions: one Python task per core
+        assert got == cores != cfg.shuffle_partitions
+        # an input already past the guard passes through untouched
+        assert num_partitions(signatures(wide, cfg, "doc_id", "text")) == cores * 2
+
+
+def test_span_lcs_kernel_fans_out_to_default_parallelism(spark, monkeypatch):
+    docs = _docs(spark).selectExpr("cast(doc_id as string) as id", "text")
+    pairs = spark.createDataFrame([("0", "1"), ("2", "3")], "a string, b string")
+    fed = []
+    original = type(pairs).mapInPandas
+
+    def spy(self, *args, **kwargs):
+        fed.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "mapInPandas", spy)
+    # a 4-core pool: below the old max(cores, 8) floor
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda _: 4))
+    shared_span_pairs(pairs, docs, 100, "id", "text")
+    assert len(fed) == 1
+    with _static_plan(spark):
+        assert num_partitions(fed[0]) == 4
