@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 # Mersenne prime 2^31-1: MinHash permutation modulus.  Chosen so that
 # a*h+b stays < 2^62 in int64 (no 128-bit math needed in numpy).
@@ -41,10 +41,9 @@ class DedupConfig:
     # (/root/reference/lib/App/dupfind/App.pm:128)
     probe_width: int = 32
     # ordered weed passes; reference default [first_middle_last]
-    # (/root/reference/lib/App/dupfind/App.pm:94-95)
+    # (App.pm:94-95); () skips weeding entirely (reference --weedout
+    # no, App.pm:233)
     weed_passes: tuple[str, ...] = ("first_middle_last",)
-    # skip weeding entirely (reference --weedout no, App.pm:233)
-    weed_enabled: bool = True
     # max text length considered (reference read_limit 1 GiB, Guts.pm:36)
     max_chars: int = 1 << 30
 
@@ -56,25 +55,14 @@ class DedupConfig:
     # --- LSH banding: num_perm = bands * rows_per_band ---
     lsh_bands: int = 32
     lsh_rows: int = 4
-    # buckets larger than this are truncated (boilerplate guard); every
-    # truncation is logged — never silent.  At web scale a mega-bucket
-    # is a stop-shingle artifact, not a dup cluster.
+    # buckets larger than this are truncated (boilerplate guard; at web
+    # scale a mega-bucket is a stop-shingle artifact, not a dup cluster).
+    # candidate_pairs returns them as a skew report, which the pipeline
+    # drops: a truncation is silent today (ROADMAP direction 2).
     lsh_bucket_cap: int = 2000
-    # pair generation for under-cap buckets (minhash_lsh.candidate_pairs):
-    # 'arrays'      — collect each capped bucket's sorted member array on
-    #                 the sizing join's partitioning (no extra exchange)
-    #                 and emit i<j pairs with a nested JVM explode; the
-    #                 bucket cap bounds per-task quadratic work at
-    #                 cap(cap-1)/2 emissions.  3 exchanges total.
-    # 'salted_join' — adaptive triangle-block salted self-join (spreads
-    #                 ONE bucket's pair enumeration over G(G+1)/2 tasks);
-    #                 6 exchanges of the full bucket membership.  Keep
-    #                 for caps large enough that cap^2/2 emissions in one
-    #                 task would straggle (cap >~ 10^5).
-    lsh_pair_strategy: str = "arrays"
 
     # --- verification ---
-    simhash_bits: int = 64
+    # Hamming gate on the 64-bit SimHash (hashing.py)
     simhash_max_hamming: int = 3
     # primary near-dup gate on MinHash-estimated Jaccard (Broder-style
     # web dedup operating point, with margin below 0.8 to cover
@@ -116,14 +104,10 @@ class DedupConfig:
 
     # --- execution ---
     shuffle_partitions: int = 32
-    salt_buckets: int = 16      # salting fan-out for skewed aggregations
     # intra-stage fan-out barrier strategy (plans/barriers.py):
     # 'local' (localCheckpoint — fastest, not executor-loss tolerant),
-    # 'reliable' (checkpoint to sc checkpoint dir — cluster default),
-    # 'persist' (DISK_ONLY_2 — middle ground, keeps lineage)
+    # 'reliable' (checkpoint to sc checkpoint dir — cluster default)
     barrier_strategy: str = "local"
-
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def __post_init__(self) -> None:
         if self.num_perm != self.lsh_bands * self.lsh_rows:
@@ -140,15 +124,10 @@ class DedupConfig:
             )
         if self.shingle_k < 1 or self.probe_width < 1:
             raise ValueError("shingle_k and probe_width must be >= 1")
-        if self.barrier_strategy not in ("local", "reliable", "persist"):
+        if self.barrier_strategy not in ("local", "reliable"):
             raise ValueError(
-                f"barrier_strategy must be 'local', 'reliable' or "
-                f"'persist', got {self.barrier_strategy!r}"
-            )
-        if self.lsh_pair_strategy not in ("arrays", "salted_join"):
-            raise ValueError(
-                f"lsh_pair_strategy must be 'arrays' or 'salted_join', "
-                f"got {self.lsh_pair_strategy!r}"
+                f"barrier_strategy must be 'local' or 'reliable', "
+                f"got {self.barrier_strategy!r}"
             )
         if self.verify_mode not in ("exact", "estimate"):
             raise ValueError(
@@ -158,9 +137,7 @@ class DedupConfig:
     def config_hash(self) -> str:
         """Stable hash of the config — stamped into checkpoint manifests
         so a resume never silently mixes configs."""
-        d = asdict(self)
-        d.pop("extra", None)
-        blob = json.dumps(d, sort_keys=True, default=str).encode()
+        blob = json.dumps(asdict(self), sort_keys=True, default=str).encode()
         return hashlib.sha256(blob).hexdigest()[:16]
 
 

@@ -120,13 +120,6 @@ def connected_components(
     """(node, component) for every node appearing in `pairs`; component
     is the minimum node id of the connected component (matching the
     reference's min-member cluster identity, Common.pm:248-251)."""
-    # 'persist' KEEPS lineage (barriers.py: "do not use around
-    # iterative self-joins") — inside this loop it compounds the plan
-    # exponentially, the exact hazard the barrier exists to prevent.  A
-    # global barrier_strategy='persist' must not poison CC: downgrade
-    # to 'local' for the iterative rounds only (ADVICE r4).
-    if barrier_strategy == "persist":
-        barrier_strategy = "local"
     # lazy barrier: the checksum action right after it both
     # materializes the barrier and reads the aggregate — ONE Spark
     # job per iteration instead of two (driver job latency is the fixed

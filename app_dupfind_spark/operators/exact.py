@@ -166,7 +166,7 @@ def exact_dup_cascade(
     base = with_size(base, text_col).where(F.col("size") <= cfg.max_chars)
     probe = (
         weed_key(cfg, text_col)
-        if (cfg.weed_enabled and cfg.weed_passes)
+        if cfg.weed_passes
         else F.lit(None).cast("string")
     )
     skinny = base.select(
@@ -191,7 +191,7 @@ def exact_dup_cascade(
     # Stage 2: weed passes (A2 + P2), zero-size bypass (P3): size-0 rows
     # skip probing (their samples are undefined in the reference,
     # Common.pm:100,107) and ride straight to the digest stage.
-    if cfg.weed_enabled and cfg.weed_passes:
+    if cfg.weed_passes:
         zero = survivors.where(F.col("size") == 0)
         nonzero = survivors.where(F.col("size") > 0)
         weeded = having_at_least(

@@ -15,20 +15,16 @@ Plan shape:
         -> per-bucket sorted member arrays -> nested explode (i < j)
         -> groupBy (a, b) -> (a, b, n_bands) candidate pairs
 
-Skew handling (north_rule: "salts skewed LSH buckets"):
+Skew handling:
 - Bucket sizes are measured first (one cheap aggregation).  Buckets
   larger than cfg.lsh_bucket_cap are dropped from pair generation and
-  REPORTED (returned as a DataFrame + counted) — at web scale a
-  mega-bucket is boilerplate/stop-shingle mass, and m^2 pair explosion
-  from one key is precisely the straggler the reference's
-  one-group-per-work-item queue suffered from (MapReduce.pm:122-125).
-- Under the cap, per-task pair emission is bounded by cap(cap-1)/2 —
-  the cap IS the skew bound on the default 'arrays' strategy.  The
-  adaptive triangle-block SALTED self-join remains selectable
-  (cfg.lsh_pair_strategy='salted_join') for deployments that raise the
-  cap to where one bucket's quadratic emission would straggle; it
-  spreads a bucket over G(G+1)/2 tasks at the price of 3 extra
-  exchanges of the full membership.
+  returned as the skew report (the pipeline drops it: ROADMAP
+  direction 2) — at web scale a mega-bucket is boilerplate/stop-shingle
+  mass, and m^2 pair explosion from one key is precisely the straggler
+  the reference's one-group-per-work-item queue suffered from
+  (MapReduce.pm:122-125).
+- Under the cap, per-bucket pair emission is bounded by cap(cap-1)/2 —
+  the cap IS the skew bound.
 - The sizing join shuffles on (band, band_hash); AQE skew-join
   splitting handles residual imbalance.  The pipeline's signature
   checkpoint is hash-partitioned on the doc key, not range-partitioned
@@ -127,33 +123,17 @@ def candidate_pairs(
     the (materialized) signature table, so the Arrow/pandas UDF still
     evaluates once.
 
-    Pair generation then follows cfg.lsh_pair_strategy:
-
-    - 'arrays' (default): the n_docs*bands bucket membership — the
-      pipeline's bulkiest intermediate — stops moving after the sizing
-      join.  Each surviving bucket's sorted member array is collected
-      ON THE JOIN'S (band, band_hash) PARTITIONING (no exchange) and
-      i<j pairs stream out of one nested JVM explode; (a, b) is unique
-      per band by construction (one bucket per doc per band), so
-      n_bands is a single groupBy count.  3 exchanges end-to-end, no
-      mid-stage barrier.  Safe against mega-buckets: the semi-join
-      drops above-cap buckets BEFORE any array aggregates, so no
-      unbounded collect_list buffer can build, and PER-BUCKET quadratic
-      work is bounded by cap(cap-1)/2 emissions (~2M rows at the
-      default cap).  A shuffle partition that hashes several near-cap
-      buckets together multiplies that bound in one task (the explode
-      stage is not a join, so AQE cannot split it); the salted_join
-      escape hatch covers that pathological regime (ADVICE r5).
-    - 'salted_join': the adaptive triangle-block salted self-join
-      (below), which spreads even one bucket's pair enumeration over
-      G(G+1)/2 tasks — the shape to pick if the cap is raised to where
-      cap^2/2 emissions in one task would straggle.  Costs 3 more
-      exchanges of the full membership plus a fan-out barrier.
-
-    Both strategies emit identical (a, b, n_bands) rows
-    (tests/test_minhash_lsh.py parity test); the default won every
-    drift-paired round at the 756k-page point (median per-round ratio
-    0.70, PAIRED_lsh_strategy.json) on top of the plan-shape argument.
+    Pair generation: the bucket membership (n_docs*bands rows, the
+    pipeline's bulkiest intermediate) stops moving after the sizing
+    join.  Each surviving bucket's sorted member array is collected on
+    the join's (band, band_hash) partitioning (no exchange), i<j pairs
+    stream out of one nested JVM explode, and n_bands is one groupBy
+    count, since (a, b) is unique per band.  3 exchanges end-to-end.
+    The semi-join drops above-cap buckets BEFORE any array aggregates,
+    so per-bucket work is bounded by cap(cap-1)/2 emissions (~2M rows
+    at the default cap); a shuffle partition that hashes several
+    near-cap buckets together multiplies that bound in one task (the
+    explode is not a join, so AQE cannot split it).
     """
     if materialize:
         # bind the band-hash pass behind a barrier: the bucket
@@ -174,12 +154,15 @@ def candidate_pairs(
         # the raw plan would be pushed below ensure_min_partitions'
         # repartition with the UDF inlined and evaluate the whole
         # Arrow stage serially on the narrow scan layout (the
-        # q_minhash_signatures pushdown hazard).
+        # q_minhash_signatures pushdown hazard).  The when() is needed:
+        # band_hashes(NULL) is a non-NULL array that would bucket every
+        # shingle-less doc together in all bands.
         banded_arr = materialize_barrier(
             sigs.select(
                 id_col,
-                band_hashes(
-                    F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows
+                F.when(
+                    F.col("minhash").isNotNull(),
+                    band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
                 ).alias("__bands"),
             ),
             cfg,
@@ -199,21 +182,9 @@ def candidate_pairs(
             & (F.col("bucket_size") <= cfg.lsh_bucket_cap)
         ),
         ["band", "band_hash"],
-    ).select("band", "band_hash", id_col, "bucket_size")
+    ).select("band", "band_hash", id_col)
     skew_report = sizes.where(F.col("bucket_size") > cfg.lsh_bucket_cap)
-
-    if cfg.lsh_pair_strategy == "arrays":
-        pairs = _pairs_from_bucket_arrays(member, id_col)
-        return pairs, skew_report
-
-    if materialize:
-        # the self-join fans the DAG out again; bind the sized
-        # membership behind a barrier (the pipeline runner's parquet
-        # checkpoints play this role across stages; this covers
-        # standalone use)
-        member = materialize_barrier(member, cfg)
-    pairs = _pairs_from_salted_join(member, cfg, id_col)
-    return pairs, skew_report
+    return _pairs_from_bucket_arrays(member, id_col), skew_report
 
 
 def _pairs_from_bucket_arrays(member: DataFrame, id_col: str) -> DataFrame:
@@ -244,8 +215,8 @@ def _pairs_from_bucket_arrays(member: DataFrame, id_col: str) -> DataFrame:
         )
         # guard against duplicate ids in one bucket (ADVICE r5): if the
         # input ever carried two rows with the same id, sort_array +
-        # slice would emit (x, x) self-pairs that 'salted_join' filters
-        # — a codegen predicate, no extra exchange, parity preserved
+        # slice would emit (x, x) self-pairs — a codegen predicate, no
+        # extra exchange
         .where(F.col("a") != F.col("b"))
         # one bucket per doc per band -> (a, b) unique per band -> the
         # per-pair row count IS the co-bucketed band count
@@ -253,51 +224,3 @@ def _pairs_from_bucket_arrays(member: DataFrame, id_col: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_bands"))
     )
 
-
-def _pairs_from_salted_join(
-    member: DataFrame, cfg: DedupConfig, id_col: str
-) -> DataFrame:
-    """SALTED bucket self-join (north_rule), ADAPTIVE: each member gets
-    a salt g = xxhash64(id) mod G_b where G_b grows with ITS bucket's
-    size (1 for ordinary buckets — zero replication overhead — up to
-    cfg.salt_buckets for buckets near the cap).  The left side is
-    replicated to every block g' >= g and the join key includes the
-    block, so one big bucket's quadratic pair enumeration spreads
-    over G_b(G_b+1)/2 independent tasks instead of one straggler
-    (the reference's one-group-per-work-item pitfall,
-    MapReduce.pm:122-125).  Typical dup buckets (2-5 docs) pay
-    nothing; only genuinely hot buckets fan out.
-    """
-    Gmax = max(1, cfg.salt_buckets)
-    g_b = F.least(
-        F.greatest((F.col("bucket_size") / 256).cast("int"), F.lit(1)),
-        F.lit(Gmax),
-    )
-    salted = member.withColumn("G", g_b).withColumn(
-        "g", F.pmod(F.xxhash64(F.col(id_col)), F.col("G")).cast("int")
-    )
-    a = salted.select(
-        "band",
-        "band_hash",
-        F.col(id_col).alias("a"),
-        F.explode(F.sequence(F.col("g"), F.col("G") - 1)).alias("blk"),
-    )
-    b = salted.select(
-        "band", "band_hash", F.col(id_col).alias("b"), F.col("g").alias("blk")
-    )
-    # normalize to unordered (least, greatest) — the pair surfaces from
-    # whichever side's salt is smaller, in either id order — and dedup
-    # per band (same-salt pairs appear twice per band)
-    pairs = (
-        a.join(b, ["band", "band_hash", "blk"])
-        .where(F.col("a") != F.col("b"))
-        .select(
-            "band",
-            F.least("a", "b").alias("a"),
-            F.greatest("a", "b").alias("b"),
-        )
-        .dropDuplicates(["a", "b", "band"])
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    )
-    return pairs

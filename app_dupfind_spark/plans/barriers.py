@@ -23,10 +23,6 @@ threaded through this ONE helper:
   ``sc.setCheckpointDir`` — the pipeline runner and job entry set it
   automatically (``ensure_checkpoint_dir``); standalone operator calls
   must do the same or get a clear error here, at plan time.
-- ``persist``: ``persist(StorageLevel.DISK_ONLY_2)`` + an eager
-  count — 2-replica disk blocks, survives a SINGLE executor loss
-  without checkpoint-dir writes, but keeps lineage (do not use around
-  iterative self-joins) and loses both replicas on rack-level faults.
 
 Cluster recommendation (SCALE.md): ``reliable`` on multi-executor
 clusters whenever a stage's wall-clock is long enough that an executor
@@ -37,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-BARRIER_STRATEGIES = ("local", "reliable", "persist")
+BARRIER_STRATEGIES = ("local", "reliable")
 
 
 def ensure_checkpoint_dir(spark: SparkSession, path: str) -> None:
@@ -70,13 +66,6 @@ def materialize_barrier(
                 "runner and jobs/run_pipeline.py do this automatically)"
             )
         return df.checkpoint(eager=eager)
-    if s == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY_2)
-        if eager:
-            out.count()
-        return out
     raise ValueError(
         f"unknown barrier strategy {s!r}; valid: {BARRIER_STRATEGIES}"
     )

@@ -48,7 +48,9 @@ def parse_config(kvs: list[str]) -> DedupConfig:
         elif isinstance(cur, float):
             overrides[k] = float(v)
         elif isinstance(cur, tuple):
-            overrides[k] = tuple(v.split(","))
+            # an empty value is the empty tuple: weed_passes= skips
+            # weeding (reference --weedout no)
+            overrides[k] = tuple(v.split(",")) if v else ()
         else:
             overrides[k] = v
     return DedupConfig(**overrides)

@@ -96,29 +96,3 @@ def test_fixpoint_checksum_distinguishes_old_sum_collision(spark):
     assert ca[2] == cb[2]
     # the full-width bit_xor channel must separate them
     assert ca != cb
-
-
-def test_persist_barrier_downgraded_in_iterative_loop(spark, monkeypatch):
-    """ADVICE r4: barrier_strategy='persist' keeps lineage — the
-    exponential-plan hazard barriers.py forbids around iterative
-    self-joins.  connected_components must downgrade it to 'local' for
-    its rounds instead of honoring it verbatim."""
-    import app_dupfind_spark.operators.components as comp
-
-    seen = []
-    real = comp.materialize_barrier
-
-    def spy(df, cfg=None, *, strategy=None, eager=True):
-        seen.append(strategy)
-        return real(df, cfg, strategy=strategy, eager=eager)
-
-    monkeypatch.setattr(comp, "materialize_barrier", spy)
-    df = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
-    got = {
-        r["node"]: r["component"]
-        for r in comp.connected_components(
-            df, barrier_strategy="persist"
-        ).collect()
-    }
-    assert got == {1: 1, 2: 1, 3: 1}
-    assert seen and all(s == "local" for s in seen)

@@ -31,3 +31,35 @@ def test_weed_pass_ordering_is_part_of_identity():
     a = DedupConfig(weed_passes=("first", "last"))
     b = DedupConfig(weed_passes=("last", "first"))
     assert a.config_hash() != b.config_hash()
+
+
+def test_cli_empty_weed_passes_skips_weeding(spark, pages):
+    # reference --weedout no is an empty pass list; weeding is a pure
+    # optimization, so the clusters must not change
+    from app_dupfind_spark.operators.exact import exact_dup_clusters
+    from jobs.run_pipeline import parse_config
+
+    cfg = parse_config(["weed_passes="])
+    assert cfg.weed_passes == ()
+
+    def clusters(c):
+        rows = exact_dup_clusters(pages, c).select("url", "cluster_id").collect()
+        return sorted(map(tuple, rows))
+
+    assert clusters(cfg) == clusters(DedupConfig())
+
+
+@pytest.mark.parametrize(
+    "kv",
+    [
+        "lsh_pair_strategy=arrays",
+        "salt_buckets=16",
+        "simhash_bits=64",
+        "weed_enabled=false",
+    ],
+)
+def test_cli_rejects_removed_fields(kv):
+    from jobs.run_pipeline import parse_config
+
+    with pytest.raises(AttributeError):
+        parse_config([kv])

@@ -58,8 +58,8 @@ def test_zero_size_docs_cluster_via_bypass(spark, pages, corpus, cfg):
 def test_weed_stage_never_splits_true_duplicates(spark, pages, corpus):
     """Recall preservation: enabling weeding must not change the final
     clusters (the reference's weed passes are pure optimizations)."""
-    with_weed = exact_dup_clusters(pages, DedupConfig(weed_enabled=True))
-    without = exact_dup_clusters(pages, DedupConfig(weed_enabled=False))
+    with_weed = exact_dup_clusters(pages, DedupConfig())
+    without = exact_dup_clusters(pages, DedupConfig(weed_passes=()))
     a = sorted(map(tuple, with_weed.select("url", "cluster_id").collect()))
     b = sorted(map(tuple, without.select("url", "cluster_id").collect()))
     assert a == b

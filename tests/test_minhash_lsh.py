@@ -4,6 +4,9 @@ candidate recall over the fixture near-dup clusters."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -12,6 +15,10 @@ from app_dupfind_spark.functions.hashing import _minhash_params
 from app_dupfind_spark.functions.text import token_hashes, tokens, window_hashes, word_shingles
 from app_dupfind_spark.operators.minhash_lsh import candidate_pairs, signatures
 from app_dupfind_spark.operators.verify import attach_signatures, verify_pairs
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+
+from native_oracle import native_lsh_pairs, native_signatures  # noqa: E402
 
 
 def _numpy_minhash(hashes: list[int], a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -123,20 +130,22 @@ def test_bucket_cap_truncates_and_reports(spark, cfg):
     assert skew.count() == small_cap.lsh_bands  # all 32 bands skewed
 
 
-def test_pair_strategies_identical(spark, pages, cfg):
-    """'arrays' (default) and 'salted_join' must emit identical
-    (a, b, n_bands) rows — the strategy knob trades plan shape, never
-    results."""
-    sigs = signatures(pages, cfg, "url", "text").localCheckpoint()
-    got = {}
-    for strategy in ("arrays", "salted_join"):
-        scfg = DedupConfig(lsh_pair_strategy=strategy)
-        pairs, _ = candidate_pairs(sigs, scfg, "url")
-        got[strategy] = {
-            (r["a"], r["b"], r["n_bands"]) for r in pairs.collect()
-        }
-    assert got["arrays"] == got["salted_join"]
-    assert got["arrays"], "fixture corpus must produce candidate pairs"
+def test_candidate_pairs_match_native_oracle(spark, pages, cfg):
+    """candidate_pairs' (a, b, n_bands) rows on the fixture corpus equal
+    the independent numpy oracle (scripts/native_oracle.py: from-spec
+    XXH64 band hashes, Python bucket enumeration)."""
+    rows = sorted((r["url"], r["text"]) for r in pages.collect())
+    urls = [u for u, _ in rows]
+    nat = native_signatures(range(len(rows)), [t for _, t in rows], cfg)
+    # oracle ids are ranks in url order, so its a < b is Spark's a < b
+    want = {
+        (urls[a], urls[b], n)
+        for (a, b), n in native_lsh_pairs(nat, cfg).items()
+    }
+    pairs, _ = candidate_pairs(signatures(pages, cfg, "url", "text"), cfg, "url")
+    got = {(r["a"], r["b"], r["n_bands"]) for r in pairs.collect()}
+    assert got == want
+    assert got, "fixture corpus must produce candidate pairs"
 
 
 def test_candidate_plan_has_no_bucket_window(spark):
