@@ -90,17 +90,13 @@ class DedupConfig:
     span_max_chars: int = 20_000
 
     # --- near-dup verification mode ---
-    # "exact":    gate LSH candidates on EXACT shingle-Jaccard >= tau
-    #             (pair-targeted inverted-index count — cost linear in
-    #             candidates).  Deterministic truth, no estimator noise.
+    # "exact":    gate EVERY LSH candidate on EXACT shingle-Jaccard >= tau
+    #             (intersection of the two docs' shingle-hash arrays, one
+    #             row per pair — cost linear in candidates).
+    #             Deterministic truth, no estimator noise.
     # "estimate": gate on MinHash-estimated Jaccard OR the SimHash
     #             Hamming gate (cheapest: no second touch of shingles).
     verify_mode: str = "exact"
-    # exact mode's banding: pairs whose MinHash estimate clears the
-    # threshold by this margin are accepted/rejected outright (~5 sigma
-    # at num_perm=128 -> error odds ~3e-7/pair); only the borderline
-    # band pays the pair-targeted exact-Jaccard recompute.
-    est_clear_margin: float = 0.2
 
     # --- execution ---
     shuffle_partitions: int = 32

@@ -11,8 +11,9 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
     -> span_cand (optional) long-shingle candidate index
     (exact, sigs->cands and span_cand depend only on canon and run
     CONCURRENTLY from a driver thread pool — guide §2.6 back-fill)
-    -> verify   cfg.verify_mode: 'exact' = pair-targeted exact
-                shingle-Jaccard gate (deterministic truth, no estimator
+    -> verify   cfg.verify_mode: 'exact' = exact shingle-Jaccard gate
+                on every candidate, one row per pair over the candidate
+                docs' shingle arrays (deterministic truth, no estimator
                 noise at the threshold boundary); 'estimate' = MinHash
                 estimate OR SimHash Hamming gate (no second shingle
                 touch)
@@ -52,7 +53,6 @@ from app_dupfind_spark.operators.jaccard import exact_jaccard_for_pairs
 from app_dupfind_spark.operators.minhash_lsh import candidate_pairs, signatures
 from app_dupfind_spark.operators.spans import span_candidates, shared_span_pairs
 from app_dupfind_spark.operators.verify import attach_signatures, verify_pairs
-from app_dupfind_spark.plans.barriers import materialize_barrier
 from app_dupfind_spark.plans.pipeline import PipelineRunner, input_fingerprint
 
 
@@ -88,55 +88,22 @@ def assemble_clusters(
 
 def _exact_verify(
     cands: DataFrame,
-    sigs: DataFrame,
     docs: DataFrame,
     cfg: DedupConfig,
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """verify_mode='exact', BANDED: the MinHash estimate (signatures
-    already in hand — no text touched) decides pairs that clear the
-    threshold by cfg.est_clear_margin in either direction (~5 sigma:
-    per-pair error odds ~3e-7); only the borderline band pays the
-    pair-targeted exact-Jaccard recompute (operators/jaccard.py), so
-    the second shingle pass runs over borderline DOCS, not every
-    candidate doc.  est_jaccard carries the EXACT value for banded
-    pairs and the estimate for clear accepts; method says which."""
-    from app_dupfind_spark.operators.verify import minhash_est_jaccard
-
-    tau, m = cfg.jaccard_threshold, cfg.est_clear_margin
-    # minhash-only attach (r6): this mode never reads SimHash, and the
-    # sigs checkpoint may legitimately not carry it (see _sigs_fn) —
-    # selecting only the columns the gate needs also keeps the join
-    # payload narrow (guide §2.3 project-before-the-exchange)
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("minhash").alias("minhash_a"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("minhash").alias("minhash_b"))
-    scored = (
-        cands.select("a", "b").join(sa, "a").join(sb, "b")
-        .where(F.col("minhash_a").isNotNull() & F.col("minhash_b").isNotNull())
-        .withColumn(
-            "est", minhash_est_jaccard(F.col("minhash_a"), F.col("minhash_b"))
-        )
-        .select("a", "b", "est")
-    )
-    # pairs-only frame feeding two branches: bind it once
-    scored = materialize_barrier(scored, cfg)
-    clear = scored.where(F.col("est") >= tau + m).select(
-        "a",
-        "b",
-        F.col("est").alias("est_jaccard"),
-        F.lit(None).cast("int").alias("hamming"),
-        F.lit("minhash").alias("method"),
-    )
-    border = scored.where(
-        (F.col("est") < tau + m) & (F.col("est") > tau - m)
-    ).select("a", "b")
-    exact = (
+    """verify_mode='exact': every candidate pair passes the exact
+    shingle-Jaccard gate jaccard >= tau (operators/jaccard.py, one row
+    per pair over the candidate docs' shingle arrays), so est_jaccard
+    is the EXACT value for every accepted pair and the verdict has no
+    estimator noise at the threshold."""
+    return (
         exact_jaccard_for_pairs(
-            border, docs, cfg.shingle_k, id_col, text_col,
+            cands, docs, cfg.shingle_k, id_col, text_col,
             barrier_strategy=cfg.barrier_strategy,
         )
-        .where(F.col("jaccard") >= tau)
+        .where(F.col("jaccard") >= cfg.jaccard_threshold)
         .select(
             "a",
             "b",
@@ -145,7 +112,6 @@ def _exact_verify(
             F.lit("jaccard").alias("method"),
         )
     )
-    return clear.unionByName(exact)
 
 
 def near_dup_pipeline(
@@ -226,9 +192,9 @@ def near_dup_pipeline(
         # by equi-join/groupBy, so range clustering bought nothing
         # hash clustering doesn't.  SimHash is computed only when a
         # downstream consumer exists (r6): the default 'exact' verify
-        # gates on the MinHash estimate + exact Jaccard and never
-        # reads it, so the exact-mode stage skips the second Arrow
-        # kernel and halves the checkpoint's signature payload.
+        # gates on exact Jaccard alone and never reads it, so the
+        # exact-mode stage skips the second Arrow kernel and halves the
+        # checkpoint's signature payload.
         return signatures(
             canon.df, cfg, id_col, text_col,
             with_simhash=(cfg.verify_mode != "exact"),
@@ -291,9 +257,7 @@ def near_dup_pipeline(
     else:
         def _verify() -> DataFrame:
             if cfg.verify_mode == "exact":
-                return _exact_verify(
-                    cands.df, sigs.df, canon.df, cfg, id_col, text_col
-                )
+                return _exact_verify(cands.df, canon.df, cfg, id_col, text_col)
             return verify_pairs(
                 attach_signatures(cands.df, sigs.df, id_col), cfg
             )

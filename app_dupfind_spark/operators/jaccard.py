@@ -1,14 +1,20 @@
-"""Exact n-gram Jaccard similarity via an inverted shingle index.
+"""Exact n-gram Jaccard similarity over distinct shingle-hash sets.
 
 This is the *exact* verifier of the near-dup family (MinHash/LSH is its
-approximate accelerator).  Rather than all-pairs, it builds the
-inverted index (shingle -> docs) and counts co-occurrences — the
-classic "similarity join by token" plan:
+approximate accelerator).  Two plans share one per-doc input, the
+barriered array of each doc's distinct shingle hashes
+(`doc_shingle_arrays`):
 
-    docs -> explode(distinct shingles) -> self-join on shingle
-         -> groupBy(pair).count()      -> Jaccard from inclusion-exclusion
+- `exact_jaccard_for_pairs` scores a GIVEN pair list: it joins each
+  pair to both docs' arrays and intersects them, one row per pair.
+- `jaccard_pairs` finds ALL pairs above a threshold.  Rather than
+  all-pairs, it builds the inverted index (shingle -> docs) and counts
+  co-occurrences — the classic "similarity join by token" plan:
 
-Scale notes:
+      docs -> explode(distinct shingles) -> self-join on shingle
+           -> groupBy(pair).count()      -> Jaccard from inclusion-exclusion
+
+Scale notes for the inverted index (`jaccard_pairs`):
 - Shingles occurring in only one doc generate no pairs; a HAVING count>=2
   on the shingle key prunes them BEFORE the self-join (the reference's
   singleton-elimination P2 applied to the token universe).
@@ -21,79 +27,65 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.functions.text import token_hashes, window_hashes
-from app_dupfind_spark.plans.barriers import materialize_barrier
+from app_dupfind_spark.plans.barriers import bind_columns, materialize_barrier
 from app_dupfind_spark.plans.partitioning import ensure_min_partitions
 
 
-def doc_shingles(
+def doc_shingle_arrays(
     df: DataFrame,
     k: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = False,
     barrier_strategy: str = "local",
 ) -> DataFrame:
-    """(id, shingle) exploded distinct word k-shingles, plus per-doc
-    shingle count n_shingles (needed for the Jaccard denominator).
+    """(id, shingles): each doc's DISTINCT word k-shingles as one array
+    of 64-bit xxhash64 keys (empty below k tokens), bound behind a
+    barrier.
 
-    Shingles are 64-bit xxhash64 keys, not strings: the self-join and
-    every shuffle move 8-byte longs instead of ~30-byte UTF-8 — at web
-    scale the shingle column dominates shuffle volume, and hash-join on
-    longs is markedly faster (collisions at 2^64 are immaterial next to
-    the MinHash approximation downstream).
+    Shingles are hashes, not strings: every join and shuffle moves
+    8-byte longs instead of ~30-byte UTF-8 — at web scale the shingle
+    column dominates shuffle volume, and hash-join on longs is markedly
+    faster (collisions at 2^64 are immaterial next to the MinHash
+    approximation downstream).
 
-    With materialize=True the per-doc shingle-hash ARRAYS are bound
-    behind a barrier and n_shingles/explode read the stored arrays
-    (r6): no per-doc count window (the window form sorts the whole
-    exploded index by id), the barrier holds one row per DOC instead
-    of one per shingle, and downstream fan-out replays a cheap explode
-    of stored arrays instead of the interpreted window pass (measured
-    2.6-3.6 s -> 2.4-2.6 s for jaccard_pairs at 50k).  The barrier is
-    REQUIRED for this shape: unbarriered, InferFiltersFromGenerate
-    infers `size(window_hashes(..)) > 0` from the explode and filter
-    pushdown re-inlines the whole interpreted HOF below the
-    parallelism-guard repartition, evaluating it serially on the
-    narrow scan layout (measured 487 s vs 0.8 s — the
-    q_minhash_signatures hazard).  materialize=False therefore keeps
-    the single-pass window form for barrier-free callers."""
+    The barrier holds one row per DOC, and every consumer (both join
+    roles of the pair verifier; the document-frequency aggregate and
+    both join roles of the inverted index) replays stored arrays.  It
+    is REQUIRED, not only a fan-out saving: unbarriered,
+    InferFiltersFromGenerate infers `size(window_hashes(..)) > 0` from
+    a downstream explode and filter pushdown re-inlines the whole
+    interpreted HOF below the parallelism-guard repartition, evaluating
+    it serially on the narrow scan layout (measured 487 s vs 0.8 s —
+    the q_minhash_signatures hazard)."""
     # parallelism guard: a small parquet input arrives as one partition
     # and the interpreted window-hash work would run on one core
     df = ensure_min_partitions(
         df, df.sparkSession.sparkContext.defaultParallelism, id_col
     )
-    if materialize:
-        arr = materialize_barrier(
-            df.select(
-                F.col(id_col), token_hashes(F.col(text_col)).alias("__th")
-            ).select(
-                F.col(id_col), window_hashes(F.col("__th"), k).alias("__wh")
-            ),
-            strategy=barrier_strategy,
-        )
-        return arr.select(
-            F.col(id_col),
-            F.size("__wh").cast("int").alias("n_shingles"),
-            F.explode("__wh").alias("shingle"),
-        ).select(id_col, "n_shingles", "shingle")
-    # the window array is referenced exactly ONCE (inside explode) —
-    # size()/where() references would re-evaluate the interpreted
-    # window expression per reference; n_shingles comes from a count
-    # window over the exploded rows instead (already hash-partitioned
-    # by id, so no extra exchange)
-    exploded = df.select(
-        F.col(id_col), token_hashes(F.col(text_col)).alias("__th")
-    ).select(
-        F.col(id_col),
-        F.explode(window_hashes(F.col("__th"), k)).alias("shingle"),
+    return materialize_barrier(
+        df.select(
+            F.col(id_col), token_hashes(F.col(text_col)).alias("__th")
+        ).select(
+            F.col(id_col), window_hashes(F.col("__th"), k).alias("shingles")
+        ),
+        strategy=barrier_strategy,
     )
-    w = Window.partitionBy(id_col)
-    return exploded.withColumn(
-        "n_shingles", F.count(F.lit(1)).over(w).cast("int")
-    ).select(id_col, "n_shingles", "shingle")
+
+
+def _jaccard(pairs: DataFrame) -> DataFrame:
+    """Append jaccard = n_common / (n_a + n_b - n_common), 6 places."""
+    return pairs.withColumn(
+        "jaccard",
+        F.round(
+            F.col("n_common")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+            6,
+        ),
+    ).select("a", "b", "n_common", "n_a", "n_b", "jaccard")
 
 
 def exact_jaccard_for_pairs(
@@ -102,22 +94,27 @@ def exact_jaccard_for_pairs(
     k: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
     barrier_strategy: str = "local",
 ) -> DataFrame:
-    """Exact shingle-Jaccard for a GIVEN pair list (a, b) — the
-    pair-targeted verifier behind cfg.verify_mode='exact'.
+    """Exact shingle-Jaccard for a GIVEN list of DISTINCT pairs (a, b) —
+    the pair-targeted verifier behind cfg.verify_mode='exact'.
 
-    Scale shape: shingles are computed only for docs appearing in some
-    pair (semi-join prune), and the co-occurrence count joins pair ->
-    shingles(a) -> shingles(b) on (b, shingle) — total shuffle volume
-    is sum over pairs of |shingles(a)|, LINEAR in candidate pairs.  The
-    naive alternative (jaccard_pairs over the candidate-doc subset)
-    enumerates every shingle-sharing pair in the subset — a quadratic
-    blow-up the LSH prefilter exists to avoid.
+    Array shape: shingle arrays are computed only for docs appearing in
+    some pair (semi-join prune) and bound once (`doc_shingle_arrays`);
+    each pair joins its two docs' arrays on `a` and on `b`, and
+    n_common = size(array_intersect(sa, sb)) — one row per pair, no
+    shingle explode and no aggregate.  Shuffle volume is the sum over
+    pairs of |shingles(a)| + |shingles(b)| as packed long arrays,
+    LINEAR in candidate pairs.  The naive alternative (jaccard_pairs
+    over the candidate-doc subset) enumerates every shingle-sharing
+    pair in the subset — a quadratic blow-up the LSH prefilter exists
+    to avoid.
 
-    Pairs with zero common shingles (or an unshingleable side) drop
-    out — callers gate on jaccard >= tau > 0, so absence == rejection.
+    Each input row yields at most one output row, so a duplicated input
+    pair is scored twice: callers pass distinct pairs
+    (`candidate_pairs` guarantees it).  Pairs with zero common shingles
+    (or an unshingleable side) drop out — callers gate on
+    jaccard >= tau > 0, so absence == rejection.
     Returns (a, b, n_common, n_a, n_b, jaccard).
     """
     ids = (
@@ -126,34 +123,20 @@ def exact_jaccard_for_pairs(
         .distinct()
     )
     sub = docs.join(ids, id_col, "left_semi")
-    # the shingle table feeds both join roles; the array barrier
-    # inside doc_shingles binds the expensive pass once
-    sh = doc_shingles(
-        sub, k, id_col, text_col,
-        materialize=materialize, barrier_strategy=barrier_strategy,
+    arr = doc_shingle_arrays(sub, k, id_col, text_col, barrier_strategy)
+    sa = arr.select(F.col(id_col).alias("a"), F.col("shingles").alias("sa"))
+    sb = arr.select(F.col(id_col).alias("b"), F.col("shingles").alias("sb"))
+    # bound, not aliased: callers gate on jaccard, and a gate over an
+    # alias would be pushed into the join condition, intersecting the
+    # arrays once per reference (plans/barriers.py: bind_columns)
+    counted = bind_columns(
+        pairs.select("a", "b").join(sa, "a").join(sb, "b"),
+        ["a", "b"],
+        n_common=F.size(F.array_intersect("sa", "sb")).cast("long"),
+        n_a=F.size("sa"),
+        n_b=F.size("sb"),
     )
-    sa = sh.select(
-        F.col(id_col).alias("a"), F.col("n_shingles").alias("n_a"), "shingle"
-    )
-    sb = sh.select(
-        F.col(id_col).alias("b"), F.col("n_shingles").alias("n_b"), "shingle"
-    )
-    return (
-        pairs.select("a", "b")
-        .join(sa, "a")
-        .join(sb, ["b", "shingle"])
-        .groupBy("a", "b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .select("a", "b", "n_common", "n_a", "n_b", "jaccard")
-    )
+    return _jaccard(counted.where(F.col("n_common") > 0))
 
 
 def jaccard_pairs(
@@ -163,7 +146,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_shingle_df: int | None = None,
-    materialize: bool = True,
     capped_count_col: str | None = None,
     barrier_strategy: str = "local",
 ) -> DataFrame:
@@ -176,12 +158,15 @@ def jaccard_pairs(
     result instead of a side channel (a literal 0 when no cap is set).
     """
     # the index fans out three ways (document frequency + both join
-    # sides); the array barrier inside doc_shingles binds the shingle
-    # computation once, and each branch replays a cheap explode of the
-    # stored per-doc arrays
-    exploded = doc_shingles(
-        df, k, id_col, text_col,
-        materialize=materialize, barrier_strategy=barrier_strategy,
+    # sides); each branch replays a cheap explode of the barriered
+    # per-doc arrays, and n_shingles (the Jaccard denominator) is read
+    # off the array — no per-doc count window, which would sort the
+    # whole exploded index by id
+    arr = doc_shingle_arrays(df, k, id_col, text_col, barrier_strategy)
+    exploded = arr.select(
+        F.col(id_col),
+        F.size("shingles").alias("n_shingles"),
+        F.explode("shingles").alias("shingle"),
     )
 
     # document frequency per shingle; singleton shingles can't pair
@@ -189,8 +174,7 @@ def jaccard_pairs(
     if capped_count_col is not None and max_shingle_df is not None:
         # two consumers (the pairing filter + the truncation counter):
         # bind the aggregate once instead of re-running the full
-        # explode+groupBy per branch.  Unconditional on `materialize`:
-        # with materialize=False the unbarriered aggregate would
+        # explode+groupBy per branch; unbarriered, the aggregate would
         # roughly DOUBLE the most expensive stage (ADVICE r3).
         dfreq_all = materialize_barrier(dfreq_all, strategy=barrier_strategy)
     dfreq = dfreq_all.where(F.col("df") >= 2)
@@ -209,22 +193,12 @@ def jaccard_pairs(
         F.col(id_col).alias("b"),
         F.col("n_shingles").alias("n_b"),
     )
-    pairs = (
+    pairs = _jaccard(
         a.join(b, "shingle")
         .where(F.col("a") < F.col("b"))
         .groupBy("a", "b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "n_common", "n_a", "n_b", "jaccard")
-    )
+    ).where(F.col("jaccard") >= threshold)
     if capped_count_col is not None:
         if max_shingle_df is None:
             n_capped = df.sparkSession.range(1).select(

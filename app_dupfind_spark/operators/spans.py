@@ -85,7 +85,7 @@ def span_candidates(
     # (window_hashes is array_distinct per doc — hashes arrive unique,
     # no extra distinct shuffle needed.)  The index fans out twice
     # (dfreq + the member probe): bind the PER-DOC ARRAYS behind the
-    # barrier (r6, same shape as doc_shingles/minhash_lsh) — one row
+    # barrier (r6, same shape as doc_shingle_arrays/minhash_lsh) — one row
     # per doc instead of one per window, the interpreted window pass
     # runs once, and consumers replay a cheap explode.  The explode
     # must sit AFTER the barrier: unbarriered, the inferred

@@ -12,8 +12,10 @@ Verifiers, cheapest-first (the cascade discipline again):
 2. `simhash` — bit_count(xor) Hamming gate, for the near-identical
    regime (hamming <= 3 of 64 ≈ cosine > 0.995).  Catches template
    pages whose shingle sets differ more than their weighted bits.
-3. exact Jaccard (operators.jaccard) — gold verifier, optional, only
-   for borderline pairs (|est - τ| small), because it re-touches text.
+3. exact Jaccard (operators.jaccard) — gold verifier, the pipeline's
+   default (verify_mode='exact'): it replaces 1 and 2 for EVERY
+   candidate pair, re-touching text once per candidate doc (one row per
+   pair over the docs' shingle arrays).
 
 J2 in SURVEY §2.5: two hash joins attach each side's signature to the
 pair, then the verdict is pure JVM column math — no Python, no text.
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.functions.hashing import hamming64
+from app_dupfind_spark.plans.barriers import bind_columns
 
 
 def attach_signatures(
@@ -65,15 +68,19 @@ def verify_pairs(pairs_with_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
     here and are dropped — such docs are exact-path-only by
     construction (they had no shingles to bucket on).
     """
-    est = minhash_est_jaccard(F.col("minhash_a"), F.col("minhash_b"))
-    ham = hamming64(F.col("simhash_a"), F.col("simhash_b"))
-    out = (
+    # bound, not aliased: the method gate references est_jaccard, and
+    # a gate over an alias would evaluate the 128-wide estimate again
+    # in the Filter (plans/barriers.py: bind_columns)
+    scored = bind_columns(
         pairs_with_sigs.where(
             F.col("minhash_a").isNotNull() & F.col("minhash_b").isNotNull()
-        )
-        .withColumn("est_jaccard", est)
-        .withColumn("hamming", ham)
-        .withColumn(
+        ),
+        ["a", "b"],
+        est_jaccard=minhash_est_jaccard(F.col("minhash_a"), F.col("minhash_b")),
+        hamming=hamming64(F.col("simhash_a"), F.col("simhash_b")),
+    )
+    out = (
+        scored.withColumn(
             "method",
             F.when(F.col("est_jaccard") >= cfg.jaccard_threshold, F.lit("minhash"))
             .when(F.col("hamming") <= cfg.simhash_max_hamming, F.lit("simhash")),
@@ -81,41 +88,3 @@ def verify_pairs(pairs_with_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
         .where(F.col("method").isNotNull())
     )
     return out.select("a", "b", "est_jaccard", "hamming", "method")
-
-
-def simhash_verify(pairs_with_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """SimHash-only gate (near-identical regime), kept as a standalone
-    operator for the simhash query surface."""
-    h = hamming64(F.col("simhash_a"), F.col("simhash_b"))
-    return (
-        pairs_with_sigs.withColumn("hamming", h)
-        .where(
-            F.col("simhash_a").isNotNull()
-            & F.col("simhash_b").isNotNull()
-            & (F.col("hamming") <= cfg.simhash_max_hamming)
-        )
-        .select("a", "b", "hamming", F.lit("simhash").alias("method"))
-    )
-
-
-def verified_pairs(
-    candidates: DataFrame,
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    exact_jaccard: DataFrame | None = None,
-) -> DataFrame:
-    """Full verification: attach signatures, gate, optionally union
-    exact-Jaccard confirmations (reference precedent for the re-merge:
-    Common.pm:107 re-inserts the bypass branch)."""
-    out = verify_pairs(attach_signatures(candidates, sigs, id_col), cfg)
-    if exact_jaccard is not None:
-        jac = exact_jaccard.select(
-            "a",
-            "b",
-            F.col("jaccard").alias("est_jaccard"),
-            F.lit(None).cast("int").alias("hamming"),
-            F.lit("jaccard").alias("method"),
-        )
-        out = out.unionByName(jac).dropDuplicates(["a", "b"])
-    return out

@@ -27,11 +27,16 @@ threaded through this ONE helper:
 Cluster recommendation (SCALE.md): ``reliable`` on multi-executor
 clusters whenever a stage's wall-clock is long enough that an executor
 loss is plausible mid-stage; ``local`` otherwise.
+
+`bind_columns` is the other kind of barrier: it writes nothing and only
+stops the optimizer from copying an expensive expression into the
+filters above it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 BARRIER_STRATEGIES = ("local", "reliable")
 
@@ -69,3 +74,19 @@ def materialize_barrier(
     raise ValueError(
         f"unknown barrier strategy {s!r}; valid: {BARRIER_STRATEGIES}"
     )
+
+
+def bind_columns(df: DataFrame, keep: list[str], **exprs: Column) -> DataFrame:
+    """`keep` plus each of `exprs` as a column, evaluated ONCE per row.
+
+    A select alias does not bind: Spark substitutes the alias into any
+    Filter above it, and pushes a filter over a join's output into the
+    join condition.  Neither a Filter nor a BroadcastHashJoin condition
+    shares common subexpressions, so an expression that a gate and the
+    output both reference runs once per reference (array_intersect 4x
+    per pair in the exact verify gate).  A generator's output is opaque
+    to that substitution: `inline` of a one-struct array emits the
+    struct's fields as columns, and filters on them stay above the
+    Generate node, which evaluates each expression once."""
+    row = F.struct(*[e.alias(n) for n, e in exprs.items()])
+    return df.select(*keep, F.inline(F.array(row)))

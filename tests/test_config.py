@@ -56,6 +56,7 @@ def test_cli_empty_weed_passes_skips_weeding(spark, pages):
         "salt_buckets=16",
         "simhash_bits=64",
         "weed_enabled=false",
+        "est_clear_margin=0.2",
     ],
 )
 def test_cli_rejects_removed_fields(kv):
