@@ -5,7 +5,7 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
 
   pages (url, warc_ts, html, text, lang)
     -> canon    A5 keep-first per url (earliest warc_ts)
-    -> exact    size/weed/xxhash64 cascade -> exact dup members
+    -> exact    one (size | size,probe | xxhash64) count -> exact dup members
     -> sigs     shingle -> MinHash + SimHash signatures
     -> cands    LSH band buckets -> candidate pairs (skew-capped)
     -> span_cand (optional) long-shingle candidate index
@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.operators.components import connected_components
 from app_dupfind_spark.operators.exact import (
+    clusters_from_digests,
     exact_dup_cascade,
     keep_first,
 )
@@ -57,17 +58,13 @@ from app_dupfind_spark.plans.pipeline import PipelineRunner, input_fingerprint
 
 
 def exact_star_edges(dup_members: DataFrame, id_col: str = "url") -> DataFrame:
-    """Exact digest groups as (member, group_min) star edges for CC.
-
-    groupBy-min + join back, never a digest-partitioned window
-    (VERDICT r4 #1): a window-min funnels a degenerate exact
-    mega-cluster through one task; the aggregate gets map-side combine
-    and the join is AQE-skew-splittable.  Plan-shape-tested."""
-    mins = dup_members.groupBy("digest").agg(F.min(id_col).alias("m"))
+    """Exact digest groups as (member, group_min) star edges for CC:
+    the non-canonical rows of `clusters_from_digests` (groupBy-min +
+    join back, never a digest-partitioned window)."""
     return (
-        dup_members.join(mins, "digest")
-        .where(F.col(id_col) != F.col("m"))
-        .select(F.col(id_col).alias("a"), F.col("m").alias("b"))
+        clusters_from_digests(dup_members, id_col)
+        .where(~F.col("is_canonical"))
+        .select(F.col(id_col).alias("a"), F.col("cluster_id").alias("b"))
     )
 
 
@@ -163,9 +160,8 @@ def near_dup_pipeline(
     fp = runner.fingerprint("canon")
 
     def _exact() -> DataFrame:
-        obs = {k: Observation() for k in ("scan", "size", "weed", "digest")}
-        for k, o in obs.items():
-            runner.track("exact", k, o)
+        obs = Observation()
+        runner.track("exact", "cascade", obs)
         return exact_dup_cascade(canon.df, cfg, id_col, text_col, counters=obs)
 
     # --- concurrent independent stages (guide §2.6) -----------------

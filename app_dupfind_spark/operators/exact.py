@@ -3,42 +3,42 @@
 Reference shape (/root/reference/lib/App/dupfind/Common.pm:38-204):
 group by size -> drop singleton groups -> re-group by byte samples
 ("weed" passes) -> drop singletons -> group by full xxHash64 digest ->
-drop singletons -> sorted clusters.  Every stage only ever SHRINKS the
-candidate set, and the expensive full-content hash runs last, on the
-fewest rows.
+drop singletons -> sorted clusters.  The reference orders the keys
+cheap-to-expensive so it never READS a file the cheap keys pruned
+(Guts.pm:218-222).
 
-Spark realization: the "master dupes hash" {key => [members]}
-(Common.pm:337-367) is kept in its exploded relational form
-(key, member) and every "drop singleton groups" is a group-size HAVING
-implemented as a count window — one shuffle per stage, no driver-side
-state, no collect.
+Spark realization: every key (size, fused weed probe, xxhash64 digest)
+is projected in ONE pass over the text, before any shuffle, so the
+staged pruning buys nothing — equal text => equal size and probe, and
+the digest groups are the same whether or not the cheaper HAVINGs ran
+first.  The cascade is therefore ONE count aggregate over grouping sets
+(), (size), (size, probe) and (digest): the digest level decides the
+output, the other levels are the reference's run-summary counters
+(App.pm:424-429) for free.  The "master dupes hash" {key => [members]}
+(Common.pm:337-367) stays in its exploded relational form
+(key, member); no driver-side state, no collect.
 
 Scale notes (100 TB):
-- Stages communicate survivors as DataFrames; each HAVING is one hash
-  shuffle on the stage key.  Probe keys for one weed stage are fused
-  into a single composite grouping key => all configured passes cost
-  ONE shuffle, not one per pass (the reference pays a full re-group per
-  pass, Guts.pm:71-98).
-- The final digest group-by is global (crosses size groups), exactly
-  like the reference's rekeying (Common.pm:187): partial aggregation
-  (map-side combine) makes this cheap because true dup groups are tiny.
-- Never carries `html:binary` or the full text through a shuffle except
-  where the digest needs it; callers should select the minimal columns.
+- One Expand + one hash aggregate with map-side partial aggregation per
+  grouping set: each map task forwards one row per key per level, so a
+  10^8-row size-0 or boilerplate group stays skew-safe.  Probe keys for
+  all configured weed passes are fused into one composite key, so the
+  weed level is one grouping set however many passes are configured
+  (the reference pays a full re-group per pass, Guts.pm:71-98).
+- The digest level is global (crosses size groups), exactly like the
+  reference's rekeying (Common.pm:187).
+- Never carries `html:binary` or the full text through a shuffle;
+  callers should select the minimal columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.functions.probes import WEED_PASS_REGISTRY
 from app_dupfind_spark.plans.barriers import materialize_barrier
-
-# xxhash64('' , seed=42) — Spark's pinned seed.  The reference assigns
-# all zero-size files the digest of the empty string without reading
-# them (Common.pm:127-128); Catalyst constant-folds this literal.
-XXHASH64_SEED = 42
 
 
 def with_size(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -47,11 +47,7 @@ def with_size(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def having_at_least(
-    df: DataFrame,
-    keys: list[str | Column],
-    n: int = 2,
-    observation: Observation | None = None,
-    counter_prefix: str = "grp",
+    df: DataFrame, keys: list[str | Column], n: int = 2
 ) -> DataFrame:
     """P2: singleton-group elimination — THE load-bearing reduction,
     applied after every stage (ref Common.pm:63-65, 196-198;
@@ -66,12 +62,6 @@ def having_at_least(
     Null-safe: NULL probe keys group together and survive (the
     reference retains probe-failed files as potential dups,
     Guts.pm:137,158 — recall-preserving failure mode).
-
-    `observation` (A6): in-flight counters `<prefix>_members` (rows in
-    surviving groups) and `<prefix>_groups`, attached to the aggregate
-    — which feeds exactly ONE consumer (the semi-join build side), so
-    the count is exact with zero extra passes.  The reference's
-    size-dup/real-dup run counters (App.pm:424-429) ride here.
     """
     key_cols = [F.col(k) if isinstance(k, str) else k for k in keys]
     names = [f"__k{i}" for i in range(len(key_cols))]
@@ -80,14 +70,8 @@ def having_at_least(
         keyed.groupBy(*names)
         .agg(F.count(F.lit(1)).alias("__grp_n"))
         .where(F.col("__grp_n") >= n)
+        .select(*[F.col(m).alias(f"{m}_s") for m in names])
     )
-    if observation is not None:
-        survivors = survivors.observe(
-            observation,
-            F.sum("__grp_n").alias(f"{counter_prefix}_members"),
-            F.count(F.lit(1)).alias(f"{counter_prefix}_groups"),
-        )
-    survivors = survivors.select(*[F.col(m).alias(f"{m}_s") for m in names])
     # eqNullSafe: NULL keys are a real group (P4) and must survive the
     # join back — plain equi-join semantics would silently drop them
     cond = None
@@ -130,82 +114,72 @@ def exact_dup_cascade(
     cfg: DedupConfig,
     id_col: str = "url",
     text_col: str = "text",
-    counters: dict[str, Observation] | None = None,
-    materialize: bool = True,
+    counters: Observation | None = None,
 ) -> DataFrame:
-    """Full cascade: size HAVING -> weed HAVING -> digest HAVING.
+    """Exact dups as one grouping-sets count over the skinny keys.
 
     Returns (id_col, size, digest) for every member of a multi-member
     digest group — the relational "master dupes hash" after the digest
     stage (Common.pm:187-198).
 
-    `materialize` binds the skinny projection behind a localCheckpoint:
-    each downstream HAVING references its input from two plan branches
-    (aggregate + semi-join probe), so without a barrier the TEXT column
-    would be re-scanned and re-hashed once per branch product — at
-    100 TB that's the dominant cost.  With the barrier, text is read
-    exactly once and every re-reference replays ~30-byte rows.
+    The skinny projection (id, size, probe, digest) sits behind a
+    barrier: it is read by the aggregate and by the semi-join back, and
+    without the barrier each reference would re-scan and re-hash the
+    text.  The aggregate's n >= 2 groups sit behind a second barrier,
+    whose eager action runs the aggregate exactly once, even when AQE
+    later prunes the semi-join that reads them as empty.
 
-    `counters` (A6): optional Observations keyed 'scan', 'size',
-    'weed', 'digest' — the reference's run-summary counter triplet
-    (App.pm:424-429) collected in-flight.  'scan' rides the skinny
-    projection (exact only with `materialize`, which forces the single
-    evaluation); the others ride each HAVING's aggregate.
+    `counters` (A6): an optional Observation that receives the
+    reference's run-summary counters (App.pm:424-429) from the
+    unfiltered aggregate: `scan_members`, and for each level `size`,
+    `weed` (only with `cfg.weed_passes`) and `digest`,
+    `<level>_members` (rows in groups of n >= 2) and `<level>_groups`.
+    Size-0 docs count in every level: they share one (size, probe).
     """
-    # ALL text-derived keys are projected in ONE pass over the scan and
-    # the text column is DROPPED before any shuffle: the cascade's
-    # staged HAVINGs then move (id, size, probe, digest) — ~30 bytes —
-    # instead of whole documents.  The reference staged probe-then-
-    # digest to avoid READING files it could prune (Guts.pm:218-222);
-    # with text already columnar, xxhash64 costs ~nothing relative to
-    # shuffling text, so computing every key upfront and pruning on
-    # skinny rows is the scale-correct inversion of the same idea.
-    # The logical cascade (size -> weed -> digest, P2 after each) is
-    # unchanged — only the projection point moved.
     base = df.select(id_col, text_col).where(F.col(text_col).isNotNull())
     base = with_size(base, text_col).where(F.col("size") <= cfg.max_chars)
-    probe = (
-        weed_key(cfg, text_col)
-        if cfg.weed_passes
-        else F.lit(None).cast("string")
-    )
-    skinny = base.select(
-        F.col(id_col),
-        F.col("size"),
-        probe.alias("__probe"),
-        text_digest(text_col).alias("digest"),
-    )
-    counters = counters or {}
-    if "scan" in counters:
-        skinny = skinny.observe(
-            counters["scan"], F.count(F.lit(1)).alias("scan_members")
-        )
-    if materialize:
-        skinny = materialize_barrier(skinny, cfg)
-
-    # Stage 1: same-size candidates (A1 + P2).
-    survivors = having_at_least(
-        skinny, ["size"], observation=counters.get("size"), counter_prefix="size"
+    keys = ["size", "__probe", "digest"] if cfg.weed_passes else ["size", "digest"]
+    skinny = materialize_barrier(
+        base.select(
+            F.col(id_col),
+            F.col("size"),
+            *([weed_key(cfg, text_col).alias("__probe")] if cfg.weed_passes else []),
+            text_digest(text_col).alias("digest"),
+        ),
+        cfg,
     )
 
-    # Stage 2: weed passes (A2 + P2), zero-size bypass (P3): size-0 rows
-    # skip probing (their samples are undefined in the reference,
-    # Common.pm:100,107) and ride straight to the digest stage.
+    # grouping_id() sets bit (len(keys)-1-i) when keys[i] is NOT grouped
+    levels = {"size": ["size"], "digest": ["digest"]}
     if cfg.weed_passes:
-        zero = survivors.where(F.col("size") == 0)
-        nonzero = survivors.where(F.col("size") > 0)
-        weeded = having_at_least(
-            nonzero, ["size", "__probe"],
-            observation=counters.get("weed"), counter_prefix="weed",
-        )
-        survivors = weeded.unionByName(zero)
+        levels["weed"] = ["size", "__probe"]
 
-    # Stage 3: global digest grouping (A3 + P2).
-    dup_members = having_at_least(
-        survivors, ["digest"], observation=counters.get("digest"),
-        counter_prefix="digest",
+    def gid(grouped: list[str]) -> int:
+        return sum(
+            1 << (len(keys) - 1 - i) for i, k in enumerate(keys) if k not in grouped
+        )
+
+    groups = skinny.groupingSets([[], *levels.values()], *keys).agg(
+        F.grouping_id().alias("__gid"), F.count(F.lit(1)).alias("__n")
     )
-    return dup_members.select(id_col, "size", "digest")
+    if counters is not None:
+        gid_col, n = F.col("__gid"), F.col("__n")
+        exprs = [
+            F.coalesce(F.sum(F.when(gid_col == gid([]), n)), F.lit(0))
+            .alias("scan_members")
+        ]
+        for name, grouped in levels.items():
+            hit = (gid_col == gid(grouped)) & (n >= 2)
+            exprs += [
+                F.coalesce(F.sum(F.when(hit, n)), F.lit(0)).alias(f"{name}_members"),
+                F.count(F.when(hit, F.lit(1))).alias(f"{name}_groups"),
+            ]
+        groups = groups.observe(counters, *exprs)
+    dup_groups = materialize_barrier(groups.where(F.col("__n") >= 2), cfg)
+    dup_digests = dup_groups.where(F.col("__gid") == gid(["digest"])).select("digest")
+    return skinny.join(dup_digests, "digest", "left_semi").select(
+        id_col, "size", "digest"
+    )
 
 
 def clusters_from_digests(

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
+from app_dupfind_spark.operators import exact as exact_mod
 from app_dupfind_spark.operators.exact import (
     clusters_from_digests,
     exact_dup_cascade,
@@ -17,6 +19,7 @@ from app_dupfind_spark.operators.exact import (
     keep_first,
     with_size,
 )
+from app_dupfind_spark.plans.barriers import materialize_barrier
 
 
 def _expected_exact_clusters(corpus):
@@ -47,7 +50,7 @@ def test_canonical_is_lex_first_member(spark, pages, corpus, cfg):
 
 def test_zero_size_docs_cluster_via_bypass(spark, pages, corpus, cfg):
     # the 3 empty docs must form one cluster (ref zero-size path,
-    # Common.pm:127-128)
+    # Common.pm:127-128): equal empty text => one (size, probe, digest)
     clusters = exact_dup_clusters(pages, cfg)
     empties = [u for u, k in corpus.kinds.items() if k == "empty"]
     got = clusters.where(F.col("url").isin(empties)).collect()
@@ -65,13 +68,82 @@ def test_weed_stage_never_splits_true_duplicates(spark, pages, corpus):
     assert a == b
 
 
-def test_weed_prunes_decoys_before_digest(spark, pages, corpus, cfg):
+def _cascade_counters(df, cfg):
+    obs = Observation()
+    rows = exact_dup_cascade(df, cfg, counters=obs).collect()
+    return rows, obs.get
+
+
+def test_weed_level_splits_decoys(spark, pages, corpus, cfg):
     """Decoys share size+first/last-32 with their base but differ in the
-    middle; the fused probe (incl. middle char) must split most of them
-    before the digest stage — and the cascade output contains none."""
-    dups = exact_dup_cascade(pages, cfg)
-    decoys = [u for u, k in corpus.kinds.items() if k in ("decoy", "decoy_base")]
-    assert dups.where(F.col("url").isin(decoys)).count() == 0
+    middle; the fused probe (incl. middle char) splits them into more,
+    smaller weed groups than the size level has — and the cascade
+    output contains none of them."""
+    rows, c = _cascade_counters(pages, cfg)
+    decoys = {u for u, k in corpus.kinds.items() if k in ("decoy", "decoy_base")}
+    assert not decoys & {r["url"] for r in rows}
+    assert c["weed_groups"] < c["size_groups"]
+
+
+def test_counters_survive_an_empty_result(spark, cfg):
+    """A same-size pair whose probes differ leaves no exact group: all
+    seven A6 counters must still be reported (an observation under a
+    subtree that AQE prunes as empty is never populated)."""
+    df = spark.createDataFrame(
+        [("u1", "aaaa bbbb"), ("u2", "aaaa cccc"), ("u3", "zz")],
+        "url string, text string",
+    )
+    rows, c = _cascade_counters(df, cfg)
+    assert rows == []
+    assert c == {
+        "scan_members": 3,
+        "size_members": 2, "size_groups": 1,
+        "weed_members": 0, "weed_groups": 0,
+        "digest_members": 0, "digest_groups": 0,
+    }
+
+
+def test_weed_counters_include_empty_docs(spark, cfg):
+    """Size-0 docs are counted in every level: the weed level can never
+    report fewer members than the digest level below it."""
+    base = "".join(chr(ord("a") + i % 26) for i in range(100))
+    # same length, first/middle/last probe chars equal, differs at 40
+    twin = base[:40] + "#" + base[41:]
+    df = spark.createDataFrame(
+        [("e1", ""), ("e2", ""), ("e3", ""), ("p1", base), ("p2", twin)],
+        "url string, text string",
+    )
+    rows, c = _cascade_counters(df, cfg)
+    assert sorted(r["url"] for r in rows) == ["e1", "e2", "e3"]
+    assert (c["weed_members"], c["weed_groups"]) == (5, 2)
+    assert (c["digest_members"], c["digest_groups"]) == (3, 1)
+    assert c["weed_members"] >= c["digest_members"]
+
+
+def test_cascade_is_one_grouping_sets_aggregate(spark, pages, cfg, monkeypatch):
+    """The size, weed and digest levels are one Expand feeding one
+    count aggregate keyed by the grouping id — no separate size-keyed
+    or (size, probe)-keyed aggregate + semi-join per level.  Every
+    frame the cascade binds behind a barrier is checked, plus its
+    output."""
+    def plan(df):  # the physical plan as planned, before it runs
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    plans = []
+
+    def spy(df, cfg=None, **kw):
+        plans.append(plan(df))
+        return materialize_barrier(df, cfg, **kw)
+
+    monkeypatch.setattr(exact_mod, "materialize_barrier", spy)
+    plans.append(plan(exact_dup_cascade(pages, cfg)))
+    text = "\n".join(plans)
+    assert text.count("Expand [") == 1, text
+    aggs = [ln for ln in text.splitlines() if "HashAggregate(" in ln]
+    # one partial (map-side) + one final aggregate, both per grouping set
+    assert len(aggs) == 2, aggs
+    for ln in aggs:
+        assert "spark_grouping_id" in ln and "count(1)" in ln, ln
 
 
 def test_having_at_least_null_safe(spark):

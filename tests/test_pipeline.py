@@ -211,6 +211,12 @@ def test_a6_counters_reference_triplet(result, corpus):
     assert ex["scan_members"] == len(corpus.rows)
     # cascade only ever shrinks (the reference's monotone cascade)
     assert ex["scan_members"] >= ex["size_members"] >= ex["weed_members"] >= ex["digest_members"]
+    # size-dup counters: members/count of multi-member length groups
+    by_size = defaultdict(int)
+    for r in corpus.rows:
+        by_size[len(r["text"])] += 1
+    assert ex["size_members"] == sum(n for n in by_size.values() if n >= 2)
+    assert ex["size_groups"] == sum(1 for n in by_size.values() if n >= 2)
     # real dups: members of multi-member digest groups == exact stage rows_out
     exact_rows = next(m for m in runner.metrics if m["stage"] == "exact")["rows_out"]
     assert ex["digest_members"] == exact_rows

@@ -196,7 +196,7 @@ def test_pipeline_path_has_no_digest_keyed_window(spark):
         [("u1", "alpha beta"), ("u2", "alpha beta"), ("u3", "gamma")],
         "url string, text string",
     )
-    dm = exact_dup_cascade(docs, DedupConfig(), "url", "text", materialize=False)
+    dm = exact_dup_cascade(docs, DedupConfig(), "url", "text")
     for name, df in (
         ("clusters_from_digests", clusters_from_digests(dm, "url")),
         ("exact_star_edges", exact_star_edges(dm, "url")),
