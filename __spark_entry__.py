@@ -18,7 +18,7 @@ from app_dupfind_spark.queries import ORACLES, QUERIES, q_near_dup_clusters
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: full exact+near dedup pipeline (xxhash64 cascade,
-    MinHash/LSH, estimated-Jaccard verify, connected components) over
+    MinHash/LSH, exact-Jaccard verify, connected components) over
     the sf0.001 documents table."""
     return q_near_dup_clusters(spark, "/root/testdata/sf0.001")
 

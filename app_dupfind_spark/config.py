@@ -58,15 +58,15 @@ class DedupConfig:
     # buckets larger than this are truncated (boilerplate guard; at web
     # scale a mega-bucket is a stop-shingle artifact, not a dup cluster).
     # candidate_pairs returns them as a skew report, which the pipeline
-    # drops: a truncation is silent today (ROADMAP direction 2).
+    # drops: a truncation is silent today (ROADMAP direction 3).
     lsh_bucket_cap: int = 2000
 
     # --- verification ---
     # Hamming gate on the 64-bit SimHash (hashing.py)
     simhash_max_hamming: int = 3
-    # primary near-dup gate on MinHash-estimated Jaccard (Broder-style
-    # web dedup operating point, with margin below 0.8 to cover
-    # estimator noise at num_perm=128)
+    # near-dup gate on EXACT shingle-Jaccard, checked for every LSH
+    # candidate (Broder-style web dedup operating point; the 32x4
+    # banding surfaces a pair at J=0.7 with probability > 0.999)
     jaccard_threshold: float = 0.7
 
     # --- connected components ---
@@ -88,15 +88,6 @@ class DedupConfig:
     # both sides see the same prefix, so the stage is self-consistent
     # (spans past the cap are out of contract, documented in spans.py)
     span_max_chars: int = 20_000
-
-    # --- near-dup verification mode ---
-    # "exact":    gate EVERY LSH candidate on EXACT shingle-Jaccard >= tau
-    #             (intersection of the two docs' shingle-hash arrays, one
-    #             row per pair — cost linear in candidates).
-    #             Deterministic truth, no estimator noise.
-    # "estimate": gate on MinHash-estimated Jaccard OR the SimHash
-    #             Hamming gate (cheapest: no second touch of shingles).
-    verify_mode: str = "exact"
 
     # --- execution ---
     shuffle_partitions: int = 32
@@ -124,10 +115,6 @@ class DedupConfig:
             raise ValueError(
                 f"barrier_strategy must be 'local' or 'reliable', "
                 f"got {self.barrier_strategy!r}"
-            )
-        if self.verify_mode not in ("exact", "estimate"):
-            raise ValueError(
-                f"verify_mode must be 'exact' or 'estimate', got {self.verify_mode!r}"
             )
 
     def config_hash(self) -> str:

@@ -6,17 +6,15 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
   pages (url, warc_ts, html, text, lang)
     -> canon    A5 keep-first per url (earliest warc_ts)
     -> exact    one (size | size,probe | xxhash64) count -> exact dup members
-    -> sigs     shingle -> MinHash + SimHash signatures
+    -> sigs     shingle -> MinHash signatures
     -> cands    LSH band buckets -> candidate pairs (skew-capped)
     -> span_cand (optional) long-shingle candidate index
     (exact, sigs->cands and span_cand depend only on canon and run
     CONCURRENTLY from a driver thread pool — guide §2.6 back-fill)
-    -> verify   cfg.verify_mode: 'exact' = exact shingle-Jaccard gate
-                on every candidate, one row per pair over the candidate
-                docs' shingle arrays (deterministic truth, no estimator
-                noise at the threshold boundary); 'estimate' = MinHash
-                estimate OR SimHash Hamming gate (no second shingle
-                touch)
+    -> verify   exact shingle-Jaccard gate on every candidate, one row
+                per pair over the candidate docs' shingle arrays
+                (deterministic truth, no estimator noise at the
+                threshold boundary)
     -> spans    (optional) long-shared-span pairs the whole-doc LSH
                 cannot see
     -> cc       large-star/small-star components over exact ∪ near edges
@@ -53,7 +51,6 @@ from app_dupfind_spark.operators.exact import (
 from app_dupfind_spark.operators.jaccard import exact_jaccard_for_pairs
 from app_dupfind_spark.operators.minhash_lsh import candidate_pairs, signatures
 from app_dupfind_spark.operators.spans import span_candidates, shared_span_pairs
-from app_dupfind_spark.operators.verify import attach_signatures, verify_pairs
 from app_dupfind_spark.plans.pipeline import PipelineRunner, input_fingerprint
 
 
@@ -90,7 +87,7 @@ def _exact_verify(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """verify_mode='exact': every candidate pair passes the exact
+    """Every candidate pair passes the exact
     shingle-Jaccard gate jaccard >= tau (operators/jaccard.py, one row
     per pair over the candidate docs' shingle arrays), so est_jaccard
     is the EXACT value for every accepted pair and the verdict has no
@@ -186,25 +183,22 @@ def near_dup_pipeline(
         # vs 1.5-1.7 s for the hash exchange on the 50k point, guide
         # §2.4: no shuffle should run twice).  Every consumer re-keys
         # by equi-join/groupBy, so range clustering bought nothing
-        # hash clustering doesn't.  SimHash is computed only when a
-        # downstream consumer exists (r6): the default 'exact' verify
-        # gates on exact Jaccard alone and never reads it, so the
-        # exact-mode stage skips the second Arrow kernel and halves the
-        # checkpoint's signature payload.
+        # hash clustering doesn't.  No SimHash (r6): verify gates on
+        # exact Jaccard alone and never reads it, so the stage skips
+        # the second Arrow kernel and halves the checkpoint's signature
+        # payload.
         return signatures(
-            canon.df, cfg, id_col, text_col,
-            with_simhash=(cfg.verify_mode != "exact"),
+            canon.df, cfg, id_col, text_col, with_simhash=False
         ).repartition(cfg.shuffle_partitions, id_col)
 
-    def _lsh_chain() -> tuple:
+    def _lsh_chain():
         s = runner.run_stage("sigs", _sigs_fn, upstream_fingerprint=fp)
-        c = runner.run_stage(
+        return runner.run_stage(
             "cands",
             # s.df reads from the stage checkpoint — already a barrier
             lambda: candidate_pairs(s.df, cfg, id_col)[0],
             upstream_fingerprint=runner.fingerprint("sigs"),
         )
-        return s, c
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -225,7 +219,7 @@ def near_dup_pipeline(
                 upstream_fingerprint=fp,
             )
         exact = f_exact.result()
-        sigs, cands = f_lsh.result()
+        cands = f_lsh.result()
         span_cand = f_span_cand.result() if f_span_cand is not None else None
 
     _order = {
@@ -251,15 +245,10 @@ def near_dup_pipeline(
             upstream_fingerprint=runner.fingerprint("cands"),
         )
     else:
-        def _verify() -> DataFrame:
-            if cfg.verify_mode == "exact":
-                return _exact_verify(cands.df, canon.df, cfg, id_col, text_col)
-            return verify_pairs(
-                attach_signatures(cands.df, sigs.df, id_col), cfg
-            )
-
         verified = runner.run_stage(
-            "verify", _verify, upstream_fingerprint=runner.fingerprint("cands")
+            "verify",
+            lambda: _exact_verify(cands.df, canon.df, cfg, id_col, text_col),
+            upstream_fingerprint=runner.fingerprint("cands"),
         )
 
     # Span stage (M5): long-shared-span pairs the whole-doc LSH cannot

@@ -9,20 +9,23 @@ barriered array of each doc's distinct shingle hashes
   pair to both docs' arrays and intersects them, one row per pair.
 - `jaccard_pairs` finds ALL pairs above a threshold.  Rather than
   all-pairs, it builds the inverted index (shingle -> docs) and counts
-  co-occurrences — the classic "similarity join by token" plan:
+  co-occurrences — the classic "similarity join by token" plan, with
+  the shingle as the key of the shared key-pair kernel:
 
-      docs -> explode(distinct shingles) -> self-join on shingle
-           -> groupBy(pair).count()      -> Jaccard from inclusion-exclusion
+      docs -> explode(distinct shingles)
+           -> operators.cobucket.key_pairs    (a, b, n_common)
+           -> join n_a, n_b                   -> Jaccard from
+                                                 inclusion-exclusion
 
 Scale notes for the inverted index (`jaccard_pairs`):
-- Shingles occurring in only one doc generate no pairs; a HAVING count>=2
-  on the shingle key prunes them BEFORE the self-join (the reference's
-  singleton-elimination P2 applied to the token universe).
+- Shingles occurring in only one doc generate no pairs; the kernel's
+  size join drops them BEFORE any member array is collected (the
+  reference's singleton-elimination P2 applied to the token universe).
 - Ubiquitous shingles (web boilerplate) are the skew hazard: a shingle
-  in m docs yields m^2 pairs.  `max_shingle_df` caps document frequency
-  — standard positional-filter practice; every truncation is logged via
-  the returned metrics, never silent.
-- The pair aggregation is a map-side-combinable count on (a,b) keys.
+  in m docs yields m(m-1)/2 pairs.  `max_shingle_df` caps document
+  frequency — standard positional-filter practice; with
+  `capped_count_col` the number of capped shingles rides every result
+  row, never silent.
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.functions.text import token_hashes, window_hashes
+from app_dupfind_spark.operators.cobucket import key_pairs, key_sizes
 from app_dupfind_spark.plans.barriers import bind_columns, materialize_barrier
 from app_dupfind_spark.plans.partitioning import ensure_min_partitions
 
@@ -97,7 +101,7 @@ def exact_jaccard_for_pairs(
     barrier_strategy: str = "local",
 ) -> DataFrame:
     """Exact shingle-Jaccard for a GIVEN list of DISTINCT pairs (a, b) —
-    the pair-targeted verifier behind cfg.verify_mode='exact'.
+    the pair-targeted verifier behind the pipeline's verify stage.
 
     Array shape: shingle arrays are computed only for docs appearing in
     some pair (semi-join prune) and bound once (`doc_shingle_arrays`);
@@ -157,47 +161,27 @@ def jaccard_pairs(
     constant column — the "never silent" truncation audit, riding the
     result instead of a side channel (a literal 0 when no cap is set).
     """
-    # the index fans out three ways (document frequency + both join
-    # sides); each branch replays a cheap explode of the barriered
-    # per-doc arrays, and n_shingles (the Jaccard denominator) is read
-    # off the array — no per-doc count window, which would sort the
-    # whole exploded index by id
+    # the index fans out twice (the document-frequency aggregate + the
+    # member probe of the shared key-pair kernel), each branch replaying
+    # a cheap explode of the barriered per-doc arrays; n_a/n_b (the
+    # Jaccard denominators) are read off the arrays, one row per doc
     arr = doc_shingle_arrays(df, k, id_col, text_col, barrier_strategy)
-    exploded = arr.select(
-        F.col(id_col),
-        F.size("shingles").alias("n_shingles"),
-        F.explode("shingles").alias("shingle"),
-    )
-
-    # document frequency per shingle; singleton shingles can't pair
-    dfreq_all = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
+    member = arr.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    sizes = key_sizes(member, ["shingle"])
     if capped_count_col is not None and max_shingle_df is not None:
         # two consumers (the pairing filter + the truncation counter):
         # bind the aggregate once instead of re-running the full
         # explode+groupBy per branch; unbarriered, the aggregate would
         # roughly DOUBLE the most expensive stage (ADVICE r3).
-        dfreq_all = materialize_barrier(dfreq_all, strategy=barrier_strategy)
-    dfreq = dfreq_all.where(F.col("df") >= 2)
-    if max_shingle_df is not None:
-        dfreq = dfreq.where(F.col("df") <= max_shingle_df)
-
-    pairing = exploded.join(dfreq.select("shingle"), "shingle")
-
-    a = pairing.select(
-        F.col("shingle"),
-        F.col(id_col).alias("a"),
-        F.col("n_shingles").alias("n_a"),
+        sizes = materialize_barrier(sizes, strategy=barrier_strategy)
+    shared, _ = key_pairs(
+        member, ["shingle"], id_col, max_size=max_shingle_df,
+        n_col="n_common", sizes=sizes,
     )
-    b = pairing.select(
-        F.col("shingle"),
-        F.col(id_col).alias("b"),
-        F.col("n_shingles").alias("n_b"),
-    )
+    n_shingles = arr.select(F.col(id_col), F.size("shingles").alias("n"))
     pairs = _jaccard(
-        a.join(b, "shingle")
-        .where(F.col("a") < F.col("b"))
-        .groupBy("a", "b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+        shared.join(n_shingles.toDF("a", "n_a"), "a")
+        .join(n_shingles.toDF("b", "n_b"), "b")
     ).where(F.col("jaccard") >= threshold)
     if capped_count_col is not None:
         if max_shingle_df is None:
@@ -205,9 +189,9 @@ def jaccard_pairs(
                 F.lit(0).cast("long").alias(capped_count_col)
             )
         else:
-            # one scalar over the (already materialized) shingle index;
+            # one scalar over the (already materialized) shingle sizes;
             # broadcast onto every pair row — a 1-row cross join
-            n_capped = dfreq_all.where(F.col("df") > max_shingle_df).agg(
+            n_capped = sizes.where(F.col("size") > max_shingle_df).agg(
                 F.count(F.lit(1)).cast("long").alias(capped_count_col)
             )
         pairs = pairs.crossJoin(F.broadcast(n_capped))

@@ -11,15 +11,16 @@ Plan shape:
         -> [Arrow] minhash pandas UDF             (numpy batch math)
         -> [JVM] band hashes (xxhash64 on slices) (one codegen pass)
         -> posexplode -> (band, band_hash) buckets
-        -> bucket sizing (groupBy count + join back, cap filter)
-        -> per-bucket sorted member arrays -> nested explode (i < j)
-        -> groupBy (a, b) -> (a, b, n_bands) candidate pairs
+        -> operators.cobucket.key_pairs           (bucket sizes, cap,
+                                                   sorted member arrays,
+                                                   nested i<j explode)
+        -> (a, b, n_bands) candidate pairs
 
 Skew handling:
 - Bucket sizes are measured first (one cheap aggregation).  Buckets
   larger than cfg.lsh_bucket_cap are dropped from pair generation and
   returned as the skew report (the pipeline drops it: ROADMAP
-  direction 2) — at web scale a mega-bucket is boilerplate/stop-shingle
+  direction 3) — at web scale a mega-bucket is boilerplate/stop-shingle
   mass, and m^2 pair explosion from one key is precisely the straggler
   the reference's one-group-per-work-item queue suffered from
   (MapReduce.pm:122-125).
@@ -44,6 +45,7 @@ from app_dupfind_spark.functions.hashing import (
     make_simhash_udf,
 )
 from app_dupfind_spark.functions.text import token_hashes, window_hashes
+from app_dupfind_spark.operators.cobucket import key_pairs
 from app_dupfind_spark.plans.barriers import materialize_barrier
 from app_dupfind_spark.plans.partitioning import ensure_min_partitions
 
@@ -85,17 +87,6 @@ def signatures(
     return out
 
 
-def band_buckets(sigs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
-    """Explode signatures into (id, band, band_hash) bucket membership."""
-    banded = sigs.where(F.col("minhash").isNotNull()).select(
-        id_col,
-        F.posexplode(band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows)).alias(
-            "band", "band_hash"
-        ),
-    )
-    return banded
-
-
 def candidate_pairs(
     sigs: DataFrame,
     cfg: DedupConfig,
@@ -105,122 +96,56 @@ def candidate_pairs(
     """LSH candidate pairs (a, b, n_bands) with a < b, plus the skew
     report (band, band_hash, bucket_size) of truncated buckets.
 
-    The materialized path builds its own band-hash-array barrier (which
-    reads `sigs` exactly once); materialize=False skips barriers
-    entirely.
+    The materialized path binds the band-hash arrays behind a barrier
+    (which reads `sigs` exactly once); materialize=False reads the same
+    projection without it.
 
     J1 in SURVEY §2.5: same-key self-pairing, the grouping-as-join
-    pattern the reference uses everywhere (A1–A3).
-
-    Plan shape: bucket sizes come from a partial-aggregated
-    groupBy-count + join back on (band, band_hash), never a count
-    WINDOW (r5, closing the last mega-group-keyed window on a default
-    path): a boilerplate mega-bucket — 10^8 docs sharing every band
-    hash at web scale — would route through ONE window partition of
-    one task just to learn the size that disqualifies it, while the
-    aggregate gets map-side combine and the equi-join is
-    AQE-skew-splittable.  Both the aggregate and the probe side read
-    the (materialized) signature table, so the Arrow/pandas UDF still
-    evaluates once.
-
-    Pair generation: the bucket membership (n_docs*bands rows, the
-    pipeline's bulkiest intermediate) stops moving after the sizing
-    join.  Each surviving bucket's sorted member array is collected on
-    the join's (band, band_hash) partitioning (no exchange), i<j pairs
-    stream out of one nested JVM explode, and n_bands is one groupBy
-    count, since (a, b) is unique per band.  3 exchanges end-to-end.
-    The semi-join drops above-cap buckets BEFORE any array aggregates,
-    so per-bucket work is bounded by cap(cap-1)/2 emissions (~2M rows
-    at the default cap); a shuffle partition that hashes several
-    near-cap buckets together multiplies that bound in one task (the
-    explode is not a join, so AQE cannot split it).
+    pattern the reference uses everywhere (A1–A3).  Buckets are the
+    keys of `operators.cobucket.key_pairs` (sizes by map-side-combined
+    count, capped sorted member arrays, nested i<j explode); the skew
+    report is its `sizes` frame above the cap.  Both the sizing
+    aggregate and the member probe read the band-hash barrier, so the
+    Arrow/pandas UDF evaluates once.
     """
+    # bind the band-hash pass behind a barrier: the bucket pipeline
+    # reads its input twice (sizing aggregate + member probe) and
+    # measured a 30x re-evaluation penalty when fed the raw UDF plan.
+    # The barrier stores the BAND-HASH ARRAYS, not the raw MinHash
+    # (r6): band_hashes computes ONCE before the barrier instead of
+    # once per read side, and the stored row is 32 longs instead of
+    # 128 (a localCheckpoint materializes every input column — column
+    # pruning does not reach through it — guide §4.1: keep only what
+    # the consumer needs).  Measured 2.7-3.2 s -> 2.3 s for the
+    # standalone pair query at 50k; with sigs already checkpointed
+    # (the pipeline's cands stage) the extra barrier job still nets
+    # ~10% because sigs is then read once, not twice.
+    # NULL-signature rows keep a NULL band array through the barrier;
+    # the isNotNull filter runs AFTER it — a filter on the raw plan
+    # would be pushed below ensure_min_partitions' repartition with the
+    # UDF inlined and evaluate the whole Arrow stage serially on the
+    # narrow scan layout (the q_minhash_signatures pushdown hazard).
+    # The when() is needed: band_hashes(NULL) is a non-NULL array that
+    # would bucket every shingle-less doc together in all bands.
+    banded_arr = sigs.select(
+        id_col,
+        F.when(
+            F.col("minhash").isNotNull(),
+            band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
+        ).alias("__bands"),
+    )
     if materialize:
-        # bind the band-hash pass behind a barrier: the bucket
-        # pipeline reads its input twice (sizing aggregate + member
-        # probe) and measured a 30x re-evaluation penalty when fed the
-        # raw UDF plan.  The barrier stores the BAND-HASH ARRAYS, not
-        # the raw MinHash (r6): band_hashes computes ONCE before the
-        # barrier instead of once per read side, and the stored row is
-        # 32 longs instead of 128 (a localCheckpoint materializes
-        # every input column — column pruning does not reach through
-        # it — guide §4.1: keep only what the consumer needs).
-        # Measured 2.7-3.2 s -> 2.3 s for the standalone pair query at
-        # 50k; with sigs already checkpointed (the pipeline's cands
-        # stage) the extra barrier job still nets ~10% because sigs is
-        # then read once, not twice.
-        # NULL-signature rows keep a NULL band array through the
-        # barrier; the isNotNull filter runs AFTER it — a filter on
-        # the raw plan would be pushed below ensure_min_partitions'
-        # repartition with the UDF inlined and evaluate the whole
-        # Arrow stage serially on the narrow scan layout (the
-        # q_minhash_signatures pushdown hazard).  The when() is needed:
-        # band_hashes(NULL) is a non-NULL array that would bucket every
-        # shingle-less doc together in all bands.
-        banded_arr = materialize_barrier(
-            sigs.select(
-                id_col,
-                F.when(
-                    F.col("minhash").isNotNull(),
-                    band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
-                ).alias("__bands"),
-            ),
-            cfg,
-        )
-        buckets = banded_arr.where(F.col("__bands").isNotNull()).select(
-            id_col, F.posexplode("__bands").alias("band", "band_hash")
-        )
-    else:
-        buckets = band_buckets(sigs, cfg, id_col)
-
-    sizes = buckets.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_size")
+        banded_arr = materialize_barrier(banded_arr, cfg)
+    buckets = banded_arr.where(F.col("__bands").isNotNull()).select(
+        id_col, F.posexplode("__bands").alias("band", "band_hash")
     )
-    member = buckets.join(
-        sizes.where(
-            (F.col("bucket_size") >= 2)
-            & (F.col("bucket_size") <= cfg.lsh_bucket_cap)
-        ),
-        ["band", "band_hash"],
-    ).select("band", "band_hash", id_col)
-    skew_report = sizes.where(F.col("bucket_size") > cfg.lsh_bucket_cap)
-    return _pairs_from_bucket_arrays(member, id_col), skew_report
-
-
-def _pairs_from_bucket_arrays(member: DataFrame, id_col: str) -> DataFrame:
-    """Emit i<j pairs from each capped bucket's sorted member array.
-
-    groupBy(band, band_hash) runs on the sizing join's output
-    partitioning — no exchange — and sort_array makes a < b free (the
-    inner explode slices strictly after the outer element).  The
-    nested Generate streams: no m^2 pair array is ever materialized
-    per row, only the m-element member array (<= cap * 8 bytes).
-    """
-    arrays = member.groupBy("band", "band_hash").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("members")
+    # one bucket per doc per band -> (a, b) unique per band -> the
+    # per-pair count IS the co-bucketed band count
+    pairs, sizes = key_pairs(
+        buckets, ["band", "band_hash"], id_col,
+        max_size=cfg.lsh_bucket_cap, n_col="n_bands",
     )
-    return (
-        arrays.select(
-            "band",
-            F.col("members"),
-            F.posexplode("members").alias("i", "a"),
-        )
-        .select(
-            "a",
-            # slice is 1-based: elements strictly after 0-based index i
-            # start at position i+2; over-long length clamps to the end
-            F.explode(
-                F.slice("members", F.col("i") + F.lit(2), F.size("members"))
-            ).alias("b"),
-        )
-        # guard against duplicate ids in one bucket (ADVICE r5): if the
-        # input ever carried two rows with the same id, sort_array +
-        # slice would emit (x, x) self-pairs — a codegen predicate, no
-        # extra exchange
-        .where(F.col("a") != F.col("b"))
-        # one bucket per doc per band -> (a, b) unique per band -> the
-        # per-pair row count IS the co-bucketed band count
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("n_bands"))
-    )
-
+    skew_report = sizes.where(
+        F.col("size") > cfg.lsh_bucket_cap
+    ).withColumnRenamed("size", "bucket_size")
+    return pairs, skew_report

@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.functions.text import token_hashes, window_hashes
+from app_dupfind_spark.operators.cobucket import key_pairs
 from app_dupfind_spark.plans.barriers import materialize_barrier
 from app_dupfind_spark.plans.partitioning import ensure_min_partitions
 
@@ -98,36 +99,11 @@ def span_candidates(
         cfg,
     )
     sh = arr.select("id", F.explode("__wh").alias("sh"))
-    # pair generation in the LSH 'arrays' shape (minhash_lsh.py, r6):
-    # sizes first (map-side-combined aggregate), then each surviving
-    # shingle's sorted member array streams i<j pairs from one nested
-    # JVM explode.  vs the former index self-join this removes the
-    # second full read of the index plus the shuffled self-join of
-    # df^2 rows (measured 2.7-4.9 s -> ~2.3 s on the 50k point).  The
-    # collect_list buffer is bounded by max_shingle_df (the sizes
-    # semi-join runs BEFORE any array aggregates), and sort_array
-    # makes a < b free — same skew contract as the LSH bucket path.
-    sizes = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    member = sh.join(
-        sizes.where(
-            (F.col("df") >= 2) & (F.col("df") <= max_shingle_df)
-        ).select("sh"),
-        "sh",
-    )
-    arrays = member.groupBy("sh").agg(
-        F.sort_array(F.collect_list("id")).alias("ms")
-    )
-    return (
-        arrays.select("ms", F.posexplode("ms").alias("i", "a"))
-        .select(
-            "a",
-            # slice is 1-based: elements strictly after 0-based index i
-            F.explode(
-                F.slice("ms", F.col("i") + F.lit(2), F.size("ms"))
-            ).alias("b"),
-        )
-        .distinct()
-    )
+    # the shared key-pair kernel (operators.cobucket): the collect_list
+    # buffer is bounded by max_shingle_df (the size join runs BEFORE
+    # any array aggregates), the same skew contract as the LSH buckets
+    pairs, _ = key_pairs(sh, ["sh"], "id", max_size=max_shingle_df)
+    return pairs.select("a", "b")
 
 
 # double polynomial rolling hash: collisions ~2^-60 per comparison, so

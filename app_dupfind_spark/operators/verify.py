@@ -12,10 +12,11 @@ Verifiers, cheapest-first (the cascade discipline again):
 2. `simhash` — bit_count(xor) Hamming gate, for the near-identical
    regime (hamming <= 3 of 64 ≈ cosine > 0.995).  Catches template
    pages whose shingle sets differ more than their weighted bits.
-3. exact Jaccard (operators.jaccard) — gold verifier, the pipeline's
-   default (verify_mode='exact'): it replaces 1 and 2 for EVERY
-   candidate pair, re-touching text once per candidate doc (one row per
-   pair over the docs' shingle arrays).
+3. exact Jaccard (operators.jaccard) — gold verifier and the
+   pipeline's only gate: it replaces 1 and 2 for EVERY candidate pair,
+   re-touching text once per candidate doc (one row per pair over the
+   docs' shingle arrays).  1 and 2 (`verify_pairs`) stay as the batch
+   truth the streaming matcher mirrors (scripts/stream_replay_check.py).
 
 J2 in SURVEY §2.5: two hash joins attach each side's signature to the
 pair, then the verdict is pure JVM column math — no Python, no text.

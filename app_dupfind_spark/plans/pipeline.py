@@ -347,16 +347,18 @@ class PipelineRunner:
         self._pending_obs.setdefault(stage, []).append((name, obs))
 
     def _harvest(self, stage: str) -> None:
-        for _name, obs in self._pending_obs.pop(stage, []):
+        for name, obs in self._pending_obs.pop(stage, []):
+            slot = self.counters.setdefault(stage, {})
             try:
                 vals = obs.get  # populated: the stage action just ran
             except Exception:
                 # AQE empty-relation propagation can PRUNE an observed
                 # subtree (an upstream HAVING emptied at runtime) — the
-                # observation is then never populated.  No rows flowed,
-                # so the counter is absent rather than fabricated.
+                # observation is then never populated.  Its counters are
+                # not fabricated, but the loss is recorded, so a missing
+                # counter never reads as "no rows".
+                slot[f"unobserved_{name}"] = 1
                 continue
-            slot = self.counters.setdefault(stage, {})
             for k, v in vals.items():  # keys = the expression aliases
                 if v is not None:
                     slot[k] = v

@@ -263,7 +263,7 @@ def q_jaccard_components(spark, sf_dir):
 
 def q_near_dup_clusters(spark, sf_dir):
     """Flagship: full exact+near pipeline over documents (LSH candidates,
-    MinHash-estimated-Jaccard gate at 0.7, exact-dup union, CC)."""
+    exact-Jaccard gate at 0.7, exact-dup union, CC)."""
     d = _docs(spark, sf_dir).withColumn("__ord", F.col("doc_id"))
     # memory-mode checkpoints + pinned source fingerprint: the query
     # surface creates a FRESH checkpoint dir per call, so durable

@@ -48,8 +48,8 @@ def get_spark(
         # constraint references an attribute that plan deduplication
         # re-aliased — triggered (input-size/AQE-dependently) by the
         # CC stage's self-unions over checkpointed plans; reproduced
-        # by tests/test_pipeline.py::test_estimate_mode_end_to_end
-        # once the LSH 'arrays' strategy shifted upstream stats.  The
+        # by an end-to-end pipeline test once the LSH 'arrays' strategy
+        # shifted upstream stats.  The
         # engine's plans declare their filters and non-null guards
         # explicitly (constraint INFERENCE adds nothing here), and
         # inference is also a known compile-time quadratic hazard on

@@ -16,7 +16,8 @@ evidence, mirroring the reference's golden-structure tests,
 /root/reference/t/007_digest.t).
 
 Run:  python scripts/native_oracle.py [sf_dir] [out_json]
-defaults: /root/testdata/sf0.01  ORACLE_NATIVE_r05.json
+sf_dir defaults to the sf0.01 test data; the JSON report is written
+only when out_json is given.  Exits 1 if any query mismatches.
 """
 
 from __future__ import annotations
@@ -375,11 +376,11 @@ def run_spark(sf_dir: str):
     return out
 
 
-def main() -> None:
+def main() -> int:
     import hashlib
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "ORACLE_NATIVE_r05.json"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else None
     native = run_native(sf_dir)
     spark = run_spark(sf_dir)
     report = {"sf_dir": sf_dir, "queries": {}}
@@ -405,9 +406,12 @@ def main() -> None:
         print(("OK    " if eq else "MISMATCH ") + name,
               len(native[name]), "rows")
     report["all_equal"] = ok_all
-    Path(out_path).write_text(json.dumps(report, indent=1))
-    print(f"wrote {out_path}; all_equal={ok_all}")
+    if out_path is not None:
+        Path(out_path).write_text(json.dumps(report, indent=1))
+        print(f"wrote {out_path}")
+    print(f"all_equal={ok_all}")
+    return 0 if ok_all else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

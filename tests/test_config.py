@@ -57,6 +57,7 @@ def test_cli_empty_weed_passes_skips_weeding(spark, pages):
         "simhash_bits=64",
         "weed_enabled=false",
         "est_clear_margin=0.2",
+        "verify_mode=estimate",
     ],
 )
 def test_cli_rejects_removed_fields(kv):

@@ -95,7 +95,7 @@ def _fixture_candidates(pages, cfg):
 
 
 def test_exact_verify_matches_set_oracle(spark, pages, corpus, cfg):
-    """verify_mode='exact' gates EVERY LSH candidate on exact Jaccard:
+    """The verify stage gates EVERY LSH candidate on exact Jaccard:
     its (a, b, est_jaccard) equals the candidates with oracle J >= tau,
     including pairs whose MinHash estimate lies far above tau (once
     accepted on the estimate alone)."""
@@ -148,13 +148,12 @@ def test_exact_gate_intersects_once_per_pair(spark, pages, cfg):
     assert conds and all(l == "Join condition: None" for l in conds), plan
 
 
-def test_estimate_gate_scores_once_per_pair(spark, pages):
-    """verify_mode='estimate': the 128-wide MinHash estimate is
-    evaluated once per pair, not again in the method gate."""
-    from app_dupfind_spark.config import DedupConfig
+def test_estimate_gate_scores_once_per_pair(spark, pages, cfg):
+    """verify_pairs (the estimate gate the streaming matcher mirrors):
+    the 128-wide MinHash estimate is evaluated once per pair, not again
+    in the method gate."""
     from app_dupfind_spark.operators.verify import attach_signatures, verify_pairs
 
-    cfg = DedupConfig(verify_mode="estimate")
     sigs, cands = _fixture_candidates(pages, cfg)
     plan = _formatted_plan(verify_pairs(attach_signatures(cands, sigs, "url"), cfg))
     assert plan.count("zip_with(") == 1, plan

@@ -96,3 +96,24 @@ def test_lcs_suffix_automaton_vs_dp():
                     dp[i][j] = dp[i - 1][j - 1] + 1
                     best = max(best, dp[i][j])
         assert lcs_suffix_automaton(x, y) == best, (x, y)
+
+
+def test_main_fails_on_mismatch_and_writes_only_on_request(
+    monkeypatch, tmp_path
+):
+    """The check exits 1 on any mismatching query, and writes its JSON
+    report only to an explicitly passed path (never a default file in
+    the working directory)."""
+    import native_oracle
+
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(native_oracle, "run_native", lambda sf: {"q": [(1, 2)]})
+    monkeypatch.setattr(native_oracle, "run_spark", lambda sf: {"q": [(1, 3)]})
+    monkeypatch.setattr(sys, "argv", ["native_oracle.py", "sf"])
+    assert native_oracle.main() == 1
+    assert list(tmp_path.iterdir()) == []
+
+    monkeypatch.setattr(native_oracle, "run_spark", lambda sf: {"q": [(1, 2)]})
+    monkeypatch.setattr(sys, "argv", ["native_oracle.py", "sf", "out.json"])
+    assert native_oracle.main() == 0
+    assert [p.name for p in tmp_path.iterdir()] == ["out.json"]

@@ -243,18 +243,18 @@ def test_input_change_invalidates_same_checkpoint_dir(spark, pages, tmp_path):
     assert clusters2.count() == smaller.count()
 
 
-def test_estimate_mode_end_to_end(spark, pages, corpus, tmp_path):
-    """verify_mode='estimate' (MinHash estimate OR SimHash Hamming, no
-    second shingle touch) must also clear the recall gate on the
-    fixtures: the near archetypes sit far above the threshold and the
-    border archetypes far below, so estimator noise (sigma ~0.044 at
-    num_perm=128) cannot flip either side."""
-    cfg = DedupConfig(verify_mode="estimate")
-    clusters, _ = near_dup_pipeline(
-        spark, pages, cfg, str(tmp_path / "ckpt_est"), persist_mode="memory"
+@pytest.mark.parametrize("persist_mode", ["memory", "parquet"])
+def test_unpopulated_observation_leaves_a_counter(spark, tmp_path, persist_mode):
+    """An Observation the stage's action never populated (e.g. under a
+    subtree AQE pruned as empty) is recorded as `unobserved_<name>`
+    instead of vanishing — a lost counter never reads as 'no rows'."""
+    from pyspark.sql import Observation
+
+    from app_dupfind_spark.plans.pipeline import PipelineRunner
+
+    runner = PipelineRunner(
+        spark, DedupConfig(), str(tmp_path / "ck"), persist_mode=persist_mode
     )
-    rows = [(r["url"], r["cluster_id"]) for r in clusters.collect()]
-    found = _pairs_from_clusters(rows)
-    truth = corpus.pair_set(None)
-    assert len(found & truth) / len(truth) == 1.0
-    assert not (found - truth), f"false pairs: {found - truth}"
+    runner.track("stage", "lost", Observation())
+    runner.run_stage("stage", lambda: spark.range(3))
+    assert runner.counters["stage"] == {"unobserved_lost": 1}
