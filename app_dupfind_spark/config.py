@@ -90,7 +90,6 @@ class DedupConfig:
     span_max_chars: int = 20_000
 
     # --- execution ---
-    shuffle_partitions: int = 32
     # intra-stage fan-out barrier strategy (plans/barriers.py):
     # 'local' (localCheckpoint — fastest, not executor-loss tolerant),
     # 'reliable' (checkpoint to sc checkpoint dir — cluster default)

@@ -11,8 +11,8 @@ edge set converges to a star forest where every node points at its
 component minimum.  O(log^2 n) rounds; dup clusters are near-cliques so
 it converges in 2–3 rounds in practice.
 
-Also provided: min-label propagation (hash-min), a simpler O(diameter)
-algorithm used as a cross-check in tests.
+A simpler O(diameter) min-label propagation (hash-min) lives in
+tests/test_components.py as a cross-check.
 
 Scale notes:
 - A lazy barrier after every round cuts the lineage — iterative
@@ -146,38 +146,3 @@ def connected_components(
         F.col("u").alias("node"), "component"
     )
 
-
-def label_propagation_components(
-    pairs: DataFrame, max_iterations: int = 50, a: str = "a", b: str = "b"
-) -> DataFrame:
-    """Cross-check implementation: iterate label(u) = min(label(u),
-    min over neighbors' labels) until fixpoint.  O(diameter) rounds."""
-    edges = _canonical_edges(pairs, a, b)
-    sym = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=True)
-    labels = sym.select("u").distinct().withColumn("label", F.col("u"))
-    for _ in range(max_iterations):
-        neigh = (
-            sym.join(labels.withColumnRenamed("u", "v"), "v")
-            .groupBy("u")
-            .agg(F.min("label").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neigh, "u", "left")
-            .select(
-                "u",
-                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))

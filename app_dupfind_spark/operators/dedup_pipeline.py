@@ -6,8 +6,9 @@ Stage graph (SURVEY §3.4), each stage checkpointable via PipelineRunner:
   pages (url, warc_ts, html, text, lang)
     -> canon    A5 keep-first per url (earliest warc_ts)
     -> exact    one (size | size,probe | xxhash64) count -> exact dup members
-    -> sigs     shingle -> MinHash signatures
-    -> cands    LSH band buckets -> candidate pairs (skew-capped)
+    -> sigs     shingle -> MinHash -> LSH band hashes (id, bands)
+    -> cands    band buckets -> candidate pairs (skew-capped), paired
+                straight off the sigs checkpoint
     -> span_cand (optional) long-shingle candidate index
     (exact, sigs->cands and span_cand depend only on canon and run
     CONCURRENTLY from a driver thread pool — guide §2.6 back-fill)
@@ -49,7 +50,11 @@ from app_dupfind_spark.operators.exact import (
     keep_first,
 )
 from app_dupfind_spark.operators.jaccard import exact_jaccard_for_pairs
-from app_dupfind_spark.operators.minhash_lsh import candidate_pairs, signatures
+from app_dupfind_spark.operators.minhash_lsh import (
+    bucket_pairs,
+    lsh_bands,
+    signatures,
+)
 from app_dupfind_spark.operators.spans import span_candidates, shared_span_pairs
 from app_dupfind_spark.plans.pipeline import PipelineRunner, input_fingerprint
 
@@ -87,24 +92,17 @@ def _exact_verify(
     id_col: str,
     text_col: str,
 ) -> DataFrame:
-    """Every candidate pair passes the exact
+    """(a, b, jaccard): every candidate pair passes the exact
     shingle-Jaccard gate jaccard >= tau (operators/jaccard.py, one row
-    per pair over the candidate docs' shingle arrays), so est_jaccard
-    is the EXACT value for every accepted pair and the verdict has no
-    estimator noise at the threshold."""
+    per pair over the candidate docs' shingle arrays), so the verdict
+    has no estimator noise at the threshold."""
     return (
         exact_jaccard_for_pairs(
             cands, docs, cfg.shingle_k, id_col, text_col,
             barrier_strategy=cfg.barrier_strategy,
         )
         .where(F.col("jaccard") >= cfg.jaccard_threshold)
-        .select(
-            "a",
-            "b",
-            F.col("jaccard").alias("est_jaccard"),
-            F.lit(None).cast("int").alias("hamming"),
-            F.lit("jaccard").alias("method"),
-        )
+        .select("a", "b", "jaccard")
     )
 
 
@@ -173,30 +171,20 @@ def near_dup_pipeline(
     # below (the run summary stays deterministic).
 
     def _sigs_fn() -> DataFrame:
-        # signatures are HASH-partitioned on the doc key before the
-        # checkpoint write: balanced files, and downstream per-doc
-        # joins (verify stage) read a clustered layout.  Hash, not
-        # range (r6): a range exchange SAMPLES its child to compute
-        # bounds, and the child here is the MinHash/SimHash UDF
-        # lineage — the sampling pass re-evaluated the whole
-        # Arrow/pandas stage before the real one (measured 2.4-3.9 s
-        # vs 1.5-1.7 s for the hash exchange on the 50k point, guide
-        # §2.4: no shuffle should run twice).  Every consumer re-keys
-        # by equi-join/groupBy, so range clustering bought nothing
-        # hash clustering doesn't.  No SimHash (r6): verify gates on
-        # exact Jaccard alone and never reads it, so the stage skips
-        # the second Arrow kernel and halves the checkpoint's signature
-        # payload.
-        return signatures(
-            canon.df, cfg, id_col, text_col, with_simhash=False
-        ).repartition(cfg.shuffle_partitions, id_col)
+        # the checkpoint stores only what cands reads: 32 band hashes
+        # per doc, not the 128-long signature.  No SimHash: verify
+        # gates on exact Jaccard alone and never reads it.
+        return lsh_bands(
+            signatures(canon.df, cfg, id_col, text_col, with_simhash=False),
+            cfg, id_col,
+        )
 
     def _lsh_chain():
         s = runner.run_stage("sigs", _sigs_fn, upstream_fingerprint=fp)
         return runner.run_stage(
             "cands",
             # s.df reads from the stage checkpoint — already a barrier
-            lambda: candidate_pairs(s.df, cfg, id_col)[0],
+            lambda: bucket_pairs(s.df, cfg, id_col)[0],
             upstream_fingerprint=runner.fingerprint("sigs"),
         )
 
@@ -234,11 +222,7 @@ def near_dup_pipeline(
     # Q1: no candidates -> skip verification outright
     if cands.rows == 0:
         empty_verified = cands.df.select(
-            "a",
-            "b",
-            F.lit(None).cast("double").alias("est_jaccard"),
-            F.lit(None).cast("int").alias("hamming"),
-            F.lit(None).cast("string").alias("method"),
+            "a", "b", F.lit(None).cast("double").alias("jaccard")
         ).limit(0)
         verified = runner.skip_stage(
             "verify", empty_verified, "no candidate pairs",

@@ -10,6 +10,8 @@ Plan shape:
   pages -> [JVM] normalize/shingle/xxhash64       (one codegen pass)
         -> [Arrow] minhash pandas UDF             (numpy batch math)
         -> [JVM] band hashes (xxhash64 on slices) (one codegen pass)
+        -> barrier: (id, bands), 32 longs per doc (lsh_bands; the
+           pipeline's sigs stage checkpoint)
         -> posexplode -> (band, band_hash) buckets
         -> operators.cobucket.key_pairs           (bucket sizes, cap,
                                                    sorted member arrays,
@@ -27,10 +29,10 @@ Skew handling:
 - Under the cap, per-bucket pair emission is bounded by cap(cap-1)/2 —
   the cap IS the skew bound.
 - The sizing join shuffles on (band, band_hash); AQE skew-join
-  splitting handles residual imbalance.  The pipeline's signature
-  checkpoint is hash-partitioned on the doc key, not range-partitioned
-  on the band key: a range exchange samples its child, which re-ran the
-  MinHash UDF (operators.dedup_pipeline, the sigs stage).
+  splitting handles residual imbalance.  The pipeline checkpoints the
+  band arrays themselves (`lsh_bands`, the sigs stage) and pairs them
+  straight off that read-back (`bucket_pairs`): the checkpoint is the
+  one barrier between the MinHash UDF and the bucket pipeline.
 """
 
 from __future__ import annotations
@@ -65,7 +67,7 @@ def signatures(
     """
     # Parallelism guard: the Arrow/pandas stage must not run on one
     # core when a checkpoint read-back arrives narrow, and fans out to
-    # the cores, not to shuffle_partitions (see plans.partitioning).
+    # the cores (see plans.partitioning).
     df = ensure_min_partitions(
         df, df.sparkSession.sparkContext.defaultParallelism, id_col
     )
@@ -87,57 +89,52 @@ def signatures(
     return out
 
 
-def candidate_pairs(
-    sigs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    materialize: bool = True,
+def lsh_bands(
+    sigs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
+) -> DataFrame:
+    """(id, bands): the cfg.lsh_bands band hashes of each MinHash
+    signature, NULL for a doc without one.
+
+    The when() is needed: band_hashes(NULL) is a non-NULL array that
+    would bucket every shingle-less doc together in all bands.  32
+    longs per doc instead of the 128-long signature: this is all the
+    bucket pipeline reads, so it is what a barrier or checkpoint should
+    store (a localCheckpoint materializes every input column — column
+    pruning does not reach through it)."""
+    return sigs.select(
+        id_col,
+        F.when(
+            F.col("minhash").isNotNull(),
+            band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
+        ).alias("bands"),
+    )
+
+
+def bucket_pairs(
+    bands: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (a, b, n_bands) with a < b, plus the skew
-    report (band, band_hash, bucket_size) of truncated buckets.
+    report (band, band_hash, bucket_size) of truncated buckets, from
+    `lsh_bands` output.
 
-    The materialized path binds the band-hash arrays behind a barrier
-    (which reads `sigs` exactly once); materialize=False reads the same
-    projection without it.
+    `bands` must already be bound (a barrier or a stage checkpoint
+    read-back): the bucket pipeline reads it twice (sizing aggregate +
+    member probe), and fed the raw MinHash UDF plan it re-evaluated the
+    UDF per read (measured 30x).  No barrier is taken here.
 
     J1 in SURVEY §2.5: same-key self-pairing, the grouping-as-join
     pattern the reference uses everywhere (A1–A3).  Buckets are the
     keys of `operators.cobucket.key_pairs` (sizes by map-side-combined
     count, capped sorted member arrays, nested i<j explode); the skew
-    report is its `sizes` frame above the cap.  Both the sizing
-    aggregate and the member probe read the band-hash barrier, so the
-    Arrow/pandas UDF evaluates once.
+    report is its `sizes` frame above the cap.
     """
-    # bind the band-hash pass behind a barrier: the bucket pipeline
-    # reads its input twice (sizing aggregate + member probe) and
-    # measured a 30x re-evaluation penalty when fed the raw UDF plan.
-    # The barrier stores the BAND-HASH ARRAYS, not the raw MinHash
-    # (r6): band_hashes computes ONCE before the barrier instead of
-    # once per read side, and the stored row is 32 longs instead of
-    # 128 (a localCheckpoint materializes every input column — column
-    # pruning does not reach through it — guide §4.1: keep only what
-    # the consumer needs).  Measured 2.7-3.2 s -> 2.3 s for the
-    # standalone pair query at 50k; with sigs already checkpointed
-    # (the pipeline's cands stage) the extra barrier job still nets
-    # ~10% because sigs is then read once, not twice.
     # NULL-signature rows keep a NULL band array through the barrier;
     # the isNotNull filter runs AFTER it — a filter on the raw plan
     # would be pushed below ensure_min_partitions' repartition with the
     # UDF inlined and evaluate the whole Arrow stage serially on the
     # narrow scan layout (the q_minhash_signatures pushdown hazard).
-    # The when() is needed: band_hashes(NULL) is a non-NULL array that
-    # would bucket every shingle-less doc together in all bands.
-    banded_arr = sigs.select(
-        id_col,
-        F.when(
-            F.col("minhash").isNotNull(),
-            band_hashes(F.col("minhash"), cfg.lsh_bands, cfg.lsh_rows),
-        ).alias("__bands"),
-    )
-    if materialize:
-        banded_arr = materialize_barrier(banded_arr, cfg)
-    buckets = banded_arr.where(F.col("__bands").isNotNull()).select(
-        id_col, F.posexplode("__bands").alias("band", "band_hash")
+    buckets = bands.where(F.col("bands").isNotNull()).select(
+        id_col, F.posexplode("bands").alias("band", "band_hash")
     )
     # one bucket per doc per band -> (a, b) unique per band -> the
     # per-pair count IS the co-bucketed band count
@@ -149,3 +146,15 @@ def candidate_pairs(
         F.col("size") > cfg.lsh_bucket_cap
     ).withColumnRenamed("size", "bucket_size")
     return pairs, skew_report
+
+
+def candidate_pairs(
+    sigs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
+) -> tuple[DataFrame, DataFrame]:
+    """`bucket_pairs` over raw signatures: the band-hash arrays are
+    bound behind one barrier (which reads `sigs` exactly once), so
+    band_hashes and the MinHash UDF evaluate once for both reads of
+    the bucket pipeline."""
+    return bucket_pairs(
+        materialize_barrier(lsh_bands(sigs, cfg, id_col), cfg), cfg, id_col
+    )

@@ -177,7 +177,6 @@ def keep_canonical(
     cluster (the lex-first member), all non-cluster rows untouched.
     On Iceberg the same policy is an in-place MERGE DELETE — see
     `keep_canonical_merge` below; this DataFrame is that post-state."""
-    survivors = clusters.where(F.col("is_canonical")).select(id_col)
     losers = clusters.where(~F.col("is_canonical")).select(id_col)
     return pages.join(losers, id_col, "left_anti")
 

@@ -5,11 +5,49 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from app_dupfind_spark.operators.components import (
+    _canonical_edges,
     connected_components,
-    label_propagation_components,
 )
+
+
+def _label_propagation_components(
+    pairs: DataFrame, max_iterations: int = 50, a: str = "a", b: str = "b"
+) -> DataFrame:
+    """Cross-check implementation: iterate label(u) = min(label(u),
+    min over neighbors' labels) until fixpoint.  O(diameter) rounds."""
+    edges = _canonical_edges(pairs, a, b)
+    sym = edges.unionByName(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+    ).localCheckpoint(eager=True)
+    labels = sym.select("u").distinct().withColumn("label", F.col("u"))
+    for _ in range(max_iterations):
+        neigh = (
+            sym.join(labels.withColumnRenamed("u", "v"), "v")
+            .groupBy("u")
+            .agg(F.min("label").alias("nmin"))
+        )
+        new_labels = (
+            labels.join(neigh, "u", "left")
+            .select(
+                "u",
+                F.least(F.col("label"), F.coalesce("nmin", "label")).alias("label"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "u")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
 
 
 def _union_find(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -56,7 +94,7 @@ def test_label_propagation_agrees(spark):
     ]
     df = spark.createDataFrame(edges, "a long, b long")
     a = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    b = {r["node"]: r["component"] for r in label_propagation_components(df).collect()}
+    b = {r["node"]: r["component"] for r in _label_propagation_components(df).collect()}
     assert a == b
 
 

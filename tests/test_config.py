@@ -58,6 +58,7 @@ def test_cli_empty_weed_passes_skips_weeding(spark, pages):
         "weed_enabled=false",
         "est_clear_margin=0.2",
         "verify_mode=estimate",
+        "shuffle_partitions=8",
     ],
 )
 def test_cli_rejects_removed_fields(kv):

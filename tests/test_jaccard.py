@@ -96,7 +96,7 @@ def _fixture_candidates(pages, cfg):
 
 def test_exact_verify_matches_set_oracle(spark, pages, corpus, cfg):
     """The verify stage gates EVERY LSH candidate on exact Jaccard:
-    its (a, b, est_jaccard) equals the candidates with oracle J >= tau,
+    its (a, b) -> jaccard equals the candidates with oracle J >= tau,
     including pairs whose MinHash estimate lies far above tau (once
     accepted on the estimate alone)."""
     from pyspark.sql import functions as F
@@ -109,7 +109,7 @@ def test_exact_verify_matches_set_oracle(spark, pages, corpus, cfg):
 
     sigs, cands = _fixture_candidates(pages, cfg)
     got = {
-        (r["a"], r["b"]): (r["est_jaccard"], r["method"])
+        (r["a"], r["b"]): r["jaccard"]
         for r in _exact_verify(cands, pages, cfg, "url", "text").collect()
     }
     texts = {r["url"]: r["text"] for r in corpus.rows}
@@ -121,7 +121,7 @@ def test_exact_verify_matches_set_oracle(spark, pages, corpus, cfg):
         inter = len(sa & sb)
         j = round(inter / (len(sa) + len(sb) - inter), 6) if inter else 0.0
         if j >= tau:
-            want[(r["a"], r["b"])] = (j, "jaccard")
+            want[(r["a"], r["b"])] = j
     assert got == want
 
     est = {

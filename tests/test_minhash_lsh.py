@@ -152,11 +152,12 @@ def test_candidate_plan_has_no_bucket_window(spark):
     """r5: bucket sizing must be groupBy-count + join, never a count
     window over (band, band_hash) — a boilerplate mega-bucket would
     funnel through one window partition just to learn the size that
-    disqualifies it.  materialize=False so the pre-barrier plan is
-    visible."""
+    disqualifies it.  bucket_pairs binds nothing, so the pre-barrier
+    plan is visible."""
     from app_dupfind_spark.config import DedupConfig
     from app_dupfind_spark.operators.minhash_lsh import (
-        candidate_pairs,
+        bucket_pairs,
+        lsh_bands,
         signatures,
     )
 
@@ -165,9 +166,9 @@ def test_candidate_plan_has_no_bucket_window(spark):
         [(i, " ".join(f"w{j}" for j in range(30))) for i in range(4)],
         "doc_id long, text string",
     )
-    pairs, skew = candidate_pairs(
-        signatures(df, cfg, "doc_id", "text"), cfg, "doc_id",
-        materialize=False,
+    pairs, skew = bucket_pairs(
+        lsh_bands(signatures(df, cfg, "doc_id", "text"), cfg, "doc_id"),
+        cfg, "doc_id",
     )
     for df_ in (pairs, skew):
         plan = df_._jdf.queryExecution().executedPlan().toString()

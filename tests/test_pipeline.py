@@ -258,3 +258,27 @@ def test_unpopulated_observation_leaves_a_counter(spark, tmp_path, persist_mode)
     runner.track("stage", "lost", Observation())
     runner.run_stage("stage", lambda: spark.range(3))
     assert runner.counters["stage"] == {"unobserved_lost": 1}
+
+
+def test_cands_pairs_the_sigs_checkpoint_without_a_barrier(
+    spark, pages, tmp_path, monkeypatch
+):
+    """The sigs checkpoint holds only what cands reads, (url, bands),
+    and cands pairs that read-back directly: the checkpoint is already
+    a barrier, so the stage binds nothing again."""
+    from app_dupfind_spark.operators import minhash_lsh
+
+    calls = []
+    original = minhash_lsh.materialize_barrier
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(minhash_lsh, "materialize_barrier", spy)
+    _, runner = near_dup_pipeline(
+        spark, pages, DedupConfig(), str(tmp_path / "ck")
+    )
+    assert runner.io.read("sigs").columns == ["url", "bands"]
+    assert {m["stage"]: m["resumed"] for m in runner.metrics}["cands"] is False
+    assert calls == []

@@ -175,7 +175,7 @@ def test_exact_surface_has_no_digest_keyed_window(spark):
     ]
     for name, df in surfaces:
         for line in _plan_window_nodes(df):
-            assert "__digest#" not in line, (name, line)
+            assert "digest#" not in line, (name, line)
 
 
 def test_pipeline_path_has_no_digest_keyed_window(spark):
