@@ -1,37 +1,34 @@
 """Similarity search over embedding columns.
 
-Three paths, per the training-data-pipeline requirements:
+Four paths over two shared kernels — `cobucket.key_pairs` for the LSH
+buckets and `_fold_cos` for every exact cosine:
 
-1. `cosine_topk` — brute-force exact top-k of a (small, broadcast)
-   query set against the corpus.  JVM-only math (zip_with/aggregate),
-   the corpus side streams through one codegen stage; the only shuffle
-   is the final per-query top-k window, which is tiny (corpus_rows ×
-   |queries| never materializes — the broadcast nested-loop join emits
-   and filters in-line... practically: |queries| must be small, that is
-   the contract of the brute-force baseline).
-
-2. `embedding_near_dup_pairs` — EXACT all-pairs cosine join.  All-pairs
-   is inherently O(n²) compute; the scale question is only how that
-   work is laid out.  With `n_blocks=B` the rows are hashed into B
-   blocks and the join runs over the B(B+1)/2 block pairs as an
-   equi-join on the target block — every task gets an equal (n/B)²
-   chunk, nothing is broadcast, no single straggler task holds the
-   whole cartesian (the plan the naive crossJoin degenerates into).
-   Use this for exact small/medium-n verification; at web scale the
-   exact all-pairs is the oracle baseline, not the production path.
-
+1. `cosine_topk` / `cosine_pairs_vs_queries` — exact search against a
+   small query set: the query matrix (`_query_matrix`, capped at
+   `max_queries`) rides to every task and the corpus streams through
+   one mapInPandas GEMM pass.
+2. `embedding_near_dup_pairs` — exact all-pairs cosine as a plain
+   crossJoin with the JVM fold; only for oracle-sized inputs, it is the
+   truth the other paths are tested against.  `blocked_gemm_pairs` is
+   the same pair set laid out as B(B+1)/2 block-pair GEMM tasks.
 3. `banded_lsh_neighbors` — the scale path: banded random-hyperplane
    (sign) LSH.  Each vector gets `bands` codes of `rows_per_band` sign
-   bits; two vectors are candidates if they share any band's bucket
-   (multi-probe optionally also probes all single-bit flips of each
-   band code).  Candidates are exact-cosine re-ranked within buckets,
-   so precision is exact and only recall is approximate — the same
-   shape as the MinHash/LSH text path (operators/minhash_lsh.py).
-   Buckets above `bucket_cap` are dropped from pair generation and
-   REPORTED (skew report), mirroring minhash_lsh.py:118-160: a
-   mega-bucket at web scale is a degenerate direction (zero vectors,
-   boilerplate embeddings) and m² pair explosion from one key is the
-   classic straggler.
+   bits, and the candidates are `cobucket.key_pairs` over one
+   membership frame keyed (band, probe, code) — the same group/drop
+   singletons/pair move as the MinHash text path.  Plain banding keys
+   the full code (probe = -1); multi-probe keys every code with one bit
+   cleared (probe = i, code & ~(1 << i)), so two codes share a key
+   exactly when their Hamming distance is <= 1.  Keys above
+   `bucket_cap` (per masked key under multi-probe) are dropped from
+   pair generation and REPORTED: a mega-bucket is a degenerate
+   direction (zero vectors, boilerplate embeddings) and m² pairs from
+   one key is the classic straggler.
+4. `ivf_topk` — coarse-quantizer top-k: each query re-ranks only the
+   members of its `nprobe` nearest cells.
+
+`_fold_cos` sums in the JVM fold's order, so every emitted cos_sim is
+the SQL expression's value and precision is exact; only recall is
+approximate on the LSH and IVF paths.
 """
 
 from __future__ import annotations
@@ -49,7 +46,121 @@ from pyspark.sql.types import (
 )
 
 from app_dupfind_spark.functions.vectors import as_double_array, dot, l2_norm
+from app_dupfind_spark.operators.cobucket import key_pairs
 from app_dupfind_spark.plans.barriers import materialize_barrier
+
+
+def _fold_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products accumulated strictly left to right
+    (np.cumsum) — the operation order of the JVM `aggregate` fold
+    (functions/vectors.dot) and DuckDB's list_dot_product, so the sums
+    are bit-identical to both."""
+    return np.cumsum(A * B, axis=1)[:, -1]
+
+
+def _fold_cos(A, B, na, nb) -> np.ndarray:
+    """Exact cosine in fold order, rounded to 6dp: `na`/`nb` are the
+    fold-order norms (np.sqrt(_fold_dot(V, V)) or the JVM `l2_norm`)."""
+    return np.round(_fold_dot(A, B) / (na * nb), 6)
+
+
+def _gemm_norms(V: np.ndarray) -> np.ndarray:
+    return np.sqrt(np.einsum("ij,ij->i", V, V))
+
+
+def _cos_schema(df: DataFrame, id_col: str, left: str, right: str) -> StructType:
+    """(left, right, cos_sim) with both ids typed like `df.id_col`."""
+    id_type = df.select(F.col(id_col)).schema.fields[0].dataType
+    return StructType(
+        [
+            StructField(left, id_type),
+            StructField(right, id_type),
+            StructField("cos_sim", DoubleType()),
+        ]
+    )
+
+
+def _query_matrix(queries: DataFrame, id_col: str, vec_col: str, max_queries: int):
+    """(qids, Q, GEMM norms, fold norms) of the query side, collected to
+    the driver — broadcasting it is the whole plan, so more than
+    `max_queries` rows is an error, never a silent truncation."""
+    rows = (
+        queries.select(
+            F.col(id_col).alias("qid"),
+            as_double_array(F.col(vec_col)).alias("qv"),
+        )
+        .limit(max_queries + 1)
+        .collect()
+    )
+    if len(rows) > max_queries:
+        raise ValueError(
+            f"queries side exceeds max_queries={max_queries}; the query "
+            "matrix is broadcast — split the query set or use "
+            "blocked_gemm_pairs, banded_lsh_neighbors or ivf_topk"
+        )
+    qids = np.array([r["qid"] for r in rows])
+    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in rows])
+    return qids, Q, _gemm_norms(Q), np.sqrt(_fold_dot(Q, Q))
+
+
+def _corpus(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("cid"), as_double_array(F.col(vec_col)).alias("cv")
+    )
+
+
+def _batch(pdf: pd.DataFrame):
+    V = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
+    return pdf["cid"].to_numpy(), V, _gemm_norms(V)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, cos_sim): rounded sim
+    desc, neighbor_id asc (deterministic ties)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cos_sim")
+    )
+
+
+def _rerank_pairs(
+    joined: DataFrame, schema: StructType, threshold: float | None = None
+) -> DataFrame:
+    """Exact-cosine re-rank of candidate pairs, vectorized: `joined`
+    holds the two id columns named in `schema` plus (va, na, vb, nb),
+    the norms bound per row before the pair join.  An interpreted
+    per-pair `dot` was the dominant cost at 20k vectors (~17 s -> ~2 s).
+    Pairs below `threshold` (None = keep all) are dropped."""
+    left, right = schema.names[:2]
+
+    def rerank(it):
+        for pdf in it:
+            if pdf.empty:
+                continue
+            cos = _fold_cos(
+                np.stack(pdf["va"].to_numpy()).astype(np.float64),
+                np.stack(pdf["vb"].to_numpy()).astype(np.float64),
+                pdf["na"].to_numpy(),
+                pdf["nb"].to_numpy(),
+            )
+            keep = np.full(len(cos), True) if threshold is None else cos >= threshold
+            if not keep.any():
+                continue
+            yield pd.DataFrame(
+                {
+                    left: pdf[left].to_numpy()[keep],
+                    right: pdf[right].to_numpy()[keep],
+                    "cos_sim": cos[keep],
+                }
+            )
+
+    return joined.select(left, right, "va", "na", "vb", "nb").mapInPandas(
+        rerank, schema
+    )
 
 
 def cosine_topk(
@@ -62,7 +173,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-match excluded).
 
-    Returns (query_id, neighbor_id, rank, cos_sim) with cos_sim rounded
+    Returns (query_id, rank, neighbor_id, cos_sim) with cos_sim rounded
     to 6dp; ties broken by neighbor_id (deterministic).
 
     Plan: the (small, capped) query matrix rides to every task and the
@@ -76,48 +187,19 @@ def cosine_topk(
     1e-6, so nothing outside the band can reach the final top-k; a
     fixed +8 margin could drop quantum-tied low ids when many
     near-identical vectors crowd the boundary — the normal dedup-corpus
-    case).  Band survivors then recompute dot/norms in strict
-    sequential cumsum order (bit-identical to the JVM fold / DuckDB)
-    and the batch applies the final (rounded sim desc, id asc) order
-    itself, so batch-local top-k IS globally sufficient."""
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("qid"),
-            as_double_array(F.col(vec_col)).alias("qv"),
-        )
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"queries side exceeds max_queries={max_queries}; "
-            "broadcasting the query matrix is the whole plan — split "
-            "the query set or use the LSH/IVF paths"
-        )
-    qids = np.array([r["qid"] for r in q_rows])
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    nq_gemm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-    nq_seq = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-
-    id_type = [f for f in corpus.select(F.col(id_col)).schema.fields][0]
-    out_schema = StructType(
-        [
-            StructField("query_id", id_type.dataType),
-            StructField("neighbor_id", id_type.dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
+    case).  Band survivors are re-scored by `_fold_cos` and the batch
+    applies the final (rounded sim desc, id asc) order itself, so
+    batch-local top-k IS globally sufficient."""
+    qids, Q, nq_gemm, nq_seq = _query_matrix(queries, id_col, vec_col, max_queries)
 
     def score(it):
         for pdf in it:
             if pdf.empty:
                 continue
-            V = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            ids = pdf["cid"].to_numpy()
-            nv = np.sqrt(np.einsum("ij,ij->i", V, V))
+            ids, V, nv = _batch(pdf)
             sims = (V @ Q.T) / np.outer(nv, nq_gemm)
             sims[ids[:, None] == qids[None, :]] = -np.inf   # self-match
-            nv_seq = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
+            nv_seq = np.sqrt(_fold_dot(V, V))
             out_q, out_n, out_c = [], [], []
             for j in range(len(qids)):
                 # candidate BAND under 6dp-rounded GEMM sims: everything
@@ -132,8 +214,7 @@ def cosine_topk(
                     band = order0[r[order0] >= r[order0[k - 1]] - 2.5e-6]
                 else:
                     band = order0
-                num = np.cumsum(V[band] * Q[j], axis=1)[:, -1]
-                cos = np.round(num / (nv_seq[band] * nq_seq[j]), 6)
+                cos = _fold_cos(V[band], Q[j], nv_seq[band], nq_seq[j])
                 # final order applied IN the batch: the selection metric
                 # now EQUALS the global window's, so batch top-k suffices
                 sel = np.lexsort((ids[band], -cos))[:k]
@@ -146,18 +227,8 @@ def cosine_topk(
                      "cos_sim": out_c}
                 )
 
-    scored = corpus.select(
-        F.col(id_col).alias("cid"),
-        as_double_array(F.col(vec_col)).alias("cv"),
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-    )
+    schema = _cos_schema(corpus, id_col, "query_id", "neighbor_id")
+    return _top_k(_corpus(corpus, id_col, vec_col).mapInPandas(score, schema), k)
 
 
 def cosine_pairs_vs_queries(
@@ -182,46 +253,18 @@ def cosine_pairs_vs_queries(
     the next scale point.
 
     Parity contract (same as blocked_gemm_pairs): the GEMM is a
-    prefilter with one rounding quantum of slack; survivors recompute
-    dot and norms in strict sequential (cumsum) order, so emitted
-    cos_sim values and threshold decisions are bit-identical to the
-    JVM `aggregate` fold and DuckDB's list_dot_product.
+    prefilter with one rounding quantum of slack; survivors are
+    re-scored by `_fold_cos`, so emitted cos_sim values and threshold
+    decisions are bit-identical to the JVM `aggregate` fold and
+    DuckDB's list_dot_product.
     """
-    q_rows = (
-        queries.select(
-            F.col(id_col).alias("qid"),
-            as_double_array(F.col(vec_col)).alias("qv"),
-        )
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"queries side exceeds max_queries={max_queries}; this "
-            "operator broadcasts the query matrix — use "
-            "blocked_gemm_pairs or banded_lsh_neighbors for large sides"
-        )
-    qids = np.array([r["qid"] for r in q_rows])
-    Q = np.stack([np.asarray(r["qv"], dtype=np.float64) for r in q_rows])
-    nq_gemm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
-    nq_seq = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-
-    id_field = [f for f in corpus.select(F.col(id_col)).schema.fields][0]
-    out_schema = StructType(
-        [
-            StructField("a", id_field.dataType),
-            StructField("b", id_field.dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
+    qids, Q, nq_gemm, nq_seq = _query_matrix(queries, id_col, vec_col, max_queries)
 
     def score(it):
         for pdf in it:
             if pdf.empty:
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            ids = pdf["cid"].to_numpy()
-            nv = np.sqrt(np.einsum("ij,ij->i", V, V))
+            ids, V, nv = _batch(pdf)
             sims = (V @ Q.T) / np.outer(nv, nq_gemm)
             mask = (sims >= threshold - 1e-6) & (
                 ids[:, None] != qids[None, :]
@@ -229,9 +272,8 @@ def cosine_pairs_vs_queries(
             ci, qi = np.nonzero(mask)
             if len(ci) == 0:
                 continue
-            num = np.cumsum(V[ci] * Q[qi], axis=1)[:, -1]
-            nv_seq = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-            cos = np.round(num / (nv_seq[ci] * nq_seq[qi]), 6)
+            nv_seq = np.sqrt(_fold_dot(V, V))
+            cos = _fold_cos(V[ci], Q[qi], nv_seq[ci], nq_seq[qi])
             keep = cos >= threshold
             ci, qi, cos = ci[keep], qi[keep], cos[keep]
             if len(ci) == 0:
@@ -244,10 +286,9 @@ def cosine_pairs_vs_queries(
                 }
             )
 
-    cand = corpus.select(
-        F.col(id_col).alias("cid"),
-        as_double_array(F.col(vec_col)).alias("v"),
-    ).mapInPandas(score, out_schema)
+    cand = _corpus(corpus, id_col, vec_col).mapInPandas(
+        score, _cos_schema(corpus, id_col, "a", "b")
+    )
     # a pair with BOTH endpoints in the query set meets twice (each
     # side once in the query role) — dedupe; cos_sim identical both
     # times (same sequential recompute), max is a deterministic pick
@@ -259,84 +300,32 @@ def embedding_near_dup_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str | None = None,
-    n_blocks: int | None = None,
 ) -> DataFrame:
-    """All unordered pairs (a < b) with cosine >= threshold — EXACT.
-
-    Layout options (mutually exclusive):
-    - `block_col`: a user-supplied equi-key (e.g. an LSH bucket) — the
-      join only compares same-key rows (approximate completeness,
-      exact values).
-    - `n_blocks=B`: exact-complete blocked cartesian.  Rows are hashed
-      into B blocks; the left side explodes to every target block
-      j >= own block, the right side keys on its own block, and the
-      equi-join on j covers each unordered block pair exactly once.
-      Work per task is (n/B)², replication factor ~B/2 on one side —
-      pick B ≈ sqrt(cluster cores) so tasks saturate the cluster with
-      bounded memory.  AQE skew-split further divides residual
-      imbalance.
-    - neither: plain crossJoin — ONLY for oracle-sized inputs.
-    """
+    """All unordered pairs (a < b) with cosine >= threshold — EXACT, as
+    a plain crossJoin scored by the JVM fold (functions/vectors.dot).
+    ONLY for oracle-sized inputs: it is the SQL-expression truth the
+    GEMM and LSH paths are tested against."""
     base = df.select(
         F.col(id_col).alias("id"),
         as_double_array(F.col(vec_col)).alias("v"),
-        *([F.col(block_col).alias("blk")] if block_col else []),
     ).withColumn("n", l2_norm(F.col("v")))  # norm once per row, pre-join
-
-    if block_col is not None:
-        a = base.select(
-            F.col("id").alias("a"), F.col("v").alias("va"),
-            F.col("n").alias("na"), "blk",
-        )
-        b = base.select(
-            F.col("id").alias("b"), F.col("v").alias("vb"),
-            F.col("n").alias("nb"), "blk",
-        )
-        joined = a.join(b, "blk").where(F.col("a") < F.col("b"))
-    elif n_blocks and n_blocks > 1:
-        B = int(n_blocks)
-        blocked = base.withColumn(
-            "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int")
-        )
-        a = blocked.select(
-            F.col("id").alias("a"), F.col("v").alias("va"),
-            F.col("n").alias("na"), F.col("blk").alias("blk_a"),
-            # left side participates in every block pair (blk, j>=blk)
-            F.explode(F.sequence(F.col("blk"), F.lit(B - 1))).alias("j"),
-        )
-        b = blocked.select(
-            F.col("id").alias("b"), F.col("v").alias("vb"),
-            F.col("n").alias("nb"), F.col("blk").alias("j"),
-        )
-        # each unordered pair meets exactly once: the smaller-block row
-        # is always the left role; same-block pairs dedup via id order
-        joined = a.join(b, "j").where(
-            (F.col("blk_a") < F.col("j")) | (F.col("a") < F.col("b"))
-        )
-    else:
-        a = base.select(
-            F.col("id").alias("a"), F.col("v").alias("va"), F.col("n").alias("na")
-        )
-        b = base.select(
-            F.col("id").alias("b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-        )
-        joined = a.crossJoin(b).where(F.col("a") < F.col("b"))
-
+    a = base.select(
+        F.col("id").alias("a"), F.col("v").alias("va"), F.col("n").alias("na")
+    )
+    b = base.select(
+        F.col("id").alias("b"), F.col("v").alias("vb"), F.col("n").alias("nb")
+    )
     return (
-        joined.withColumn(
-            "cos_sim",
+        a.crossJoin(b)
+        .where(F.col("a") < F.col("b"))
+        .select(
+            "a",
+            "b",
             F.round(
                 dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6
-            ),
+            ).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
-        # cross-block pairs can surface with a > b; normalize
-        .select(
-            F.least("a", "b").alias("a"),
-            F.greatest("a", "b").alias("b"),
-            "cos_sim",
-        )
     )
 
 
@@ -355,16 +344,17 @@ def blocked_gemm_pairs(
     same layout).  Only thresholded pairs leave Python; the dense sim
     matrix never crosses Arrow.
 
+    Layout: the left side explodes to every target block j >= its own
+    block, the right side keys on its own block, and same-block pairs
+    keep only a < b, so each unordered pair meets exactly once.
     Memory contract: one block (n/B rows x dim doubles) must fit a
     task — pick B accordingly; replication factor is ~B/2 per side.
 
     Parity: the GEMM is a PREFILTER (threshold minus one rounding
-    quantum of slack); surviving pairs are recomputed in strict
-    sequential fold order (np.cumsum accumulates left-to-right — the
-    exact operation order of the JVM `aggregate` fold and DuckDB's
-    list_dot_product), so the emitted cos_sim and the threshold
-    decision are bit-identical to the SQL-expression baseline
-    (`embedding_near_dup_pairs`) while the O(n²) bulk stays BLAS."""
+    quantum of slack); surviving pairs are re-scored by `_fold_cos`, so
+    the emitted cos_sim and the threshold decision are bit-identical to
+    the SQL-expression baseline (`embedding_near_dup_pairs`) while the
+    O(n²) bulk stays BLAS."""
     B = int(n_blocks)
     base = df.select(
         F.col(id_col).alias("id"),
@@ -383,24 +373,13 @@ def blocked_gemm_pairs(
         F.col("blk").alias("j"),
     )
 
-    id_field = [f for f in base.schema.fields if f.name == "id"][0]
-    out_schema = StructType(
-        [
-            StructField("a", id_field.dataType),
-            StructField("b", id_field.dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
     def score(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if lpdf.empty or rpdf.empty:
             return pd.DataFrame({"a": [], "b": [], "cos_sim": []})
         i, j = key
         A = np.stack(lpdf["v"].to_numpy())
         Bm = np.stack(rpdf["v_r"].to_numpy())
-        na = np.sqrt(np.einsum("ij,ij->i", A, A))
-        nb = np.sqrt(np.einsum("ij,ij->i", Bm, Bm))
-        sims = (A @ Bm.T) / np.outer(na, nb)
+        sims = (A @ Bm.T) / np.outer(_gemm_norms(A), _gemm_norms(Bm))
         ids_a = lpdf["id"].to_numpy()
         ids_b = rpdf["id_r"].to_numpy()
         # GEMM as prefilter only: one rounding quantum of slack covers
@@ -411,13 +390,9 @@ def blocked_gemm_pairs(
         ai, bi = np.nonzero(mask)
         if len(ai) == 0:
             return pd.DataFrame({"a": [], "b": [], "cos_sim": []})
-        # sequential-fold recompute for survivors only: cumsum
-        # accumulates strictly left-to-right, matching the JVM
-        # aggregate() fold and DuckDB's list_dot_product bit-for-bit
-        num = np.cumsum(A[ai] * Bm[bi], axis=1)[:, -1]
-        na_seq = np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
-        nb_seq = np.sqrt(np.cumsum(Bm * Bm, axis=1)[:, -1])
-        cos = np.round(num / (na_seq[ai] * nb_seq[bi]), 6)
+        na_seq = np.sqrt(_fold_dot(A, A))
+        nb_seq = np.sqrt(_fold_dot(Bm, Bm))
+        cos = _fold_cos(A[ai], Bm[bi], na_seq[ai], nb_seq[bi])
         keep = cos >= threshold
         ai, bi, cos = ai[keep], bi[keep], cos[keep]
         lo = np.minimum(ids_a[ai], ids_b[bi])
@@ -427,7 +402,7 @@ def blocked_gemm_pairs(
     return (
         left.groupBy("i", "j")
         .cogroup(right.groupBy("i", "j"))
-        .applyInPandas(score, out_schema)
+        .applyInPandas(score, _cos_schema(base, "id", "a", "b"))
     )
 
 
@@ -503,60 +478,23 @@ def ivf_topk(
     celln = make_ivf_cells_udf(centroids, nprobe)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
-        as_double_array(F.col(vec_col)).alias("cv"),
-    ).withColumn("cn", l2_norm(F.col("cv"))).withColumn(
-        "cell", F.element_at(cell1(F.col("cv")), 1)
+        as_double_array(F.col(vec_col)).alias("vb"),
+    ).withColumn("nb", l2_norm(F.col("vb"))).withColumn(
+        "cell", F.element_at(cell1(F.col("vb")), 1)
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        as_double_array(F.col(vec_col)).alias("qv"),
-    ).withColumn("qn", l2_norm(F.col("qv"))).withColumn(
-        "cell", F.explode(celln(F.col("qv")))
+        as_double_array(F.col(vec_col)).alias("va"),
+    ).withColumn("na", l2_norm(F.col("va"))).withColumn(
+        "cell", F.explode(celln(F.col("va")))
     )
     # a query probing several cells never sees a neighbor twice
-    # (corpus rows live in exactly one cell) — no dedup needed.
-    # Scoring is a vectorized mapInPandas cumsum (bit-identical fold
-    # order; norms bound per-row pre-join) — an interpreted per-pair
-    # `dot` was the same hot-path flaw the banded-LSH re-rank had.
+    # (corpus rows live in exactly one cell) — no dedup needed
     joined = q.join(c, "cell").where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    id_type = [f for f in c.schema.fields if f.name == "neighbor_id"][0]
-    out_schema = StructType(
-        [
-            StructField("query_id", id_type.dataType),
-            StructField("neighbor_id", id_type.dataType),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
-    def rerank(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            Qv = np.stack(pdf["qv"].to_numpy()).astype(np.float64)
-            Cv = np.stack(pdf["cv"].to_numpy()).astype(np.float64)
-            num = np.cumsum(Qv * Cv, axis=1)[:, -1]
-            cos = np.round(
-                num / (pdf["qn"].to_numpy() * pdf["cn"].to_numpy()), 6
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                    "cos_sim": cos,
-                }
-            )
-
-    scored = joined.mapInPandas(rerank, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank"), "neighbor_id", "cos_sim")
-    )
+    schema = _cos_schema(corpus, id_col, "query_id", "neighbor_id")
+    return _top_k(_rerank_pairs(joined, schema), k)
 
 
 def lsh_planes(
@@ -602,17 +540,17 @@ def banded_lsh_neighbors(
     vec_col: str = "embedding",
     bucket_cap: int = 2000,
     probe_bits: int = 0,
-    materialize: bool = True,
     barrier_strategy: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """Scale path: (near-dup pairs, skew report).
 
-    Pairs sharing any band bucket (optionally within `probe_bits`
-    bit-flips of one, multi-probe) are exact-cosine re-ranked; output
-    is (a, b, cos_sim) with cos_sim >= threshold, a < b.  `dim` is a
-    required parameter (array columns carry no length in the schema,
-    and probing a row for it would put a driver action inside operator
-    construction).
+    Pairs sharing any band bucket (with `probe_bits=1`, any band code
+    within one bit-flip) are exact-cosine re-ranked; output is
+    (a, b, cos_sim) with cos_sim >= threshold, a < b.  The skew report
+    is (band, probe, code, bucket_size) for every key above
+    `bucket_cap`.  `dim` is a required parameter (array columns carry
+    no length in the schema, and probing a row for it would put a
+    driver action inside operator construction).
 
     Recall calibration: a pair at cosine c shares a band with
     probability p(c)^rows_per_band per band, p(c) = 1 - arccos(c)/pi;
@@ -623,101 +561,42 @@ def banded_lsh_neighbors(
     """
     if dim is None or dim <= 0:
         raise ValueError("dim must be provided (array schemas carry no length)")
+    if probe_bits not in (0, 1):
+        raise ValueError(
+            f"probe_bits={probe_bits}: only 0 (plain banding) and 1 "
+            "(single-bit multi-probe) are supported"
+        )
     codes = make_band_codes_udf(dim, bands, rows_per_band, seed)
-    base = (
+    # the UDF lineage fans out three ways (the bucket members + both
+    # re-rank vector lookups) — bind it once
+    base = materialize_barrier(
         df.select(
             F.col(id_col).alias("id"),
             as_double_array(F.col(vec_col)).alias("v"),
         )
         .withColumn("n", l2_norm(F.col("v")))
-        .withColumn("codes", codes(F.col("v")))
+        .withColumn("codes", codes(F.col("v"))),
+        strategy=barrier_strategy,
     )
-    if materialize:
-        # the UDF lineage fans out three ways (both join sides of the
-        # bucket join + the re-rank vector lookup) — bind it once
-        base = materialize_barrier(base, strategy=barrier_strategy)
 
     memb = base.select("id", F.posexplode("codes").alias("band", "code"))
-
-    # bucket sizes from a partial-aggregated groupBy-count + join back,
-    # never a count WINDOW (r5, same fix as minhash_lsh): an embedding
-    # mega-bucket — a dense mass of near-identical vectors sharing a
-    # band code, the normal dedup-corpus case — would funnel through
-    # one window partition just to learn the size that disqualifies
-    # it; the aggregate gets map-side combine and the join is
-    # AQE-skew-splittable.  Buckets above the cap are excluded from
-    # pair generation and surfaced in the skew report.
-    sizes = memb.groupBy("band", "code").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    )
-    ok = memb.join(
-        sizes.where(F.col("bucket_size") <= bucket_cap).select("band", "code"),
-        ["band", "code"],
-    ).select("id", "band", "code")
-    skew_report = sizes.where(F.col("bucket_size") > bucket_cap)
-
-    if probe_bits >= 1:
-        # multi-probe: the probe side also visits every single-bit flip
-        # of each band code — catches pairs whose codes differ by one
-        # plane per band (symmetric, so one-sided expansion suffices)
-        probe_codes = F.array(
-            F.col("code"),
-            *[F.col("code").bitwiseXOR(F.lit(1 << b)) for b in range(rows_per_band)],
+    if probe_bits:
+        # key i clears bit i: codes within Hamming distance 1 share it
+        masked = F.array(
+            *[F.col("code").bitwiseAND(F.lit(~(1 << i))) for i in range(rows_per_band)]
         )
-        probe = memb.select(
-            "id", "band", F.explode(probe_codes).alias("code")
-        )
+        member = memb.select("id", "band", F.posexplode(masked).alias("probe", "code"))
     else:
-        probe = memb
-
-    cand = (
-        probe.withColumnRenamed("id", "a")
-        .join(ok.withColumnRenamed("id", "b"), ["band", "code"])
-        .where(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
+        member = memb.select("id", "band", F.lit(-1).alias("probe"), "code")
+    cand, sizes = key_pairs(
+        member, ["band", "probe", "code"], "id", max_size=bucket_cap
+    )
+    skew_report = sizes.where(F.col("size") > bucket_cap).withColumnRenamed(
+        "size", "bucket_size"
     )
 
     va = base.select(F.col("id").alias("a"), F.col("v").alias("va"), F.col("n").alias("na"))
     vb = base.select(F.col("id").alias("b"), F.col("v").alias("vb"), F.col("n").alias("nb"))
-    joined = cand.join(va, "a").join(vb, "b")
-
-    # exact-cosine re-rank, VECTORIZED: correlated corpora put many
-    # pairs in shared buckets, and an interpreted per-pair `dot` fold
-    # was the dominant cost at 20k vectors (~17 s -> ~2 s).  The numpy
-    # row-wise cumsum accumulates strictly left-to-right — the same
-    # operation order as the JVM aggregate fold / DuckDB
-    # list_dot_product — and the norms were bound per-row pre-join, so
-    # emitted values and threshold decisions are unchanged bit-for-bit.
-    id_type = [f for f in base.schema.fields if f.name == "id"][0].dataType
-    rerank_schema = StructType(
-        [
-            StructField("a", id_type),
-            StructField("b", id_type),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-
-    def rerank(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            A = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            Bv = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
-            num = np.cumsum(A * Bv, axis=1)[:, -1]
-            cos = np.round(
-                num / (pdf["na"].to_numpy() * pdf["nb"].to_numpy()), 6
-            )
-            keep = cos >= threshold
-            if not keep.any():
-                continue
-            yield pd.DataFrame(
-                {
-                    "a": pdf["a"].to_numpy()[keep],
-                    "b": pdf["b"].to_numpy()[keep],
-                    "cos_sim": cos[keep],
-                }
-            )
-
-    pairs = joined.mapInPandas(rerank, rerank_schema)
+    joined = cand.select("a", "b").join(va, "a").join(vb, "b")
+    pairs = _rerank_pairs(joined, _cos_schema(base, "id", "a", "b"), threshold)
     return pairs, skew_report

@@ -2,10 +2,14 @@
 what is left — the one move every near-dup stage makes (the
 reference's Common.pm:38-68 grouping and Guts.pm:100-164 cascade).
 
-`key_pairs` is the single copy behind the LSH bucket pairs
-(`minhash_lsh.candidate_pairs`, key (band, band_hash)), the span
-candidate index (`spans.span_candidates`, key sh) and the exact-Jaccard
-inverted index (`jaccard.jaccard_pairs`, key shingle).
+`key_pairs` is the single copy behind four sites:
+- the MinHash LSH bucket pairs (`minhash_lsh.bucket_pairs`, key
+  (band, band_hash));
+- the span candidate index (`spans.span_candidates`, key sh);
+- the exact-Jaccard inverted index (`jaccard.jaccard_pairs`, key
+  shingle);
+- the embedding hyperplane-LSH buckets (`ann.banded_lsh_neighbors`,
+  key (band, probe, code)).
 
 Plan shape (3 exchanges end to end):
   member -> count per key (map-side combined)      = sizes

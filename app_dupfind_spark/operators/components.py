@@ -119,7 +119,9 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component
     is the minimum node id of the connected component (matching the
-    reference's min-member cluster identity, Common.pm:248-251)."""
+    reference's min-member cluster identity, Common.pm:248-251).
+    Raises RuntimeError when `max_iterations` rounds pass without a
+    fixpoint."""
     # lazy barrier: the checksum action right after it both
     # materializes the barrier and reads the aggregate — ONE Spark
     # job per iteration instead of two (driver job latency is the fixed
@@ -138,6 +140,13 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
+    else:
+        # unconverged edges are not a star forest: labelling them would
+        # split components silently
+        raise RuntimeError(
+            f"connected_components did not reach a fixpoint in "
+            f"{max_iterations} rounds; raise max_iterations"
+        )
     # converged: every edge points node -> component min (or min -> min)
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))

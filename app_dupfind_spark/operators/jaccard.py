@@ -115,8 +115,8 @@ def exact_jaccard_for_pairs(
     to avoid.
 
     Each input row yields at most one output row, so a duplicated input
-    pair is scored twice: callers pass distinct pairs
-    (`candidate_pairs` guarantees it).  Pairs with zero common shingles
+    pair is scored twice: callers pass distinct pairs (the `(a, b)`
+    aggregate of `cobucket.key_pairs` guarantees it).  Pairs with zero common shingles
     (or an unshingleable side) drop out — callers gate on
     jaccard >= tau > 0, so absence == rejection.
     Returns (a, b, n_common, n_a, n_b, jaccard).

@@ -1,6 +1,6 @@
-"""Embedding similarity: brute-force top-k vs numpy oracle, exact
-blocked all-pairs parity, banded-LSH recall/precision, multi-probe,
-bucket cap + skew report, code determinism."""
+"""Embedding similarity: brute-force top-k vs numpy oracle, blocked-GEMM
+all-pairs parity, banded-LSH recall/precision, multi-probe, bucket cap
++ skew report, code determinism."""
 
 from __future__ import annotations
 
@@ -72,23 +72,6 @@ def test_near_dup_pairs_find_cluster_members(spark, vecs):
     assert not [p for p in got if p[0] in noise or p[1] in noise]
 
 
-def test_blocked_exact_equals_crossjoin(spark, vecs):
-    """The blocked cartesian layout must return the identical pair set
-    (values included) as the naive cross join — it is a physical
-    re-layout, not an approximation."""
-    df, _ = vecs
-    naive = {
-        (r["a"], r["b"], r["cos_sim"])
-        for r in ann.embedding_near_dup_pairs(df, 0.5).collect()
-    }
-    for B in (2, 4, 7):
-        blocked = {
-            (r["a"], r["b"], r["cos_sim"])
-            for r in ann.embedding_near_dup_pairs(df, 0.5, n_blocks=B).collect()
-        }
-        assert blocked == naive, B
-
-
 def test_banded_lsh_recall_and_precision(spark, vecs):
     df, _ = vecs
     exact = {(r["a"], r["b"]) for r in ann.embedding_near_dup_pairs(df, 0.9).collect()}
@@ -131,6 +114,32 @@ def test_banded_lsh_bucket_cap_reports_skew(spark):
     report = skew.collect()
     assert len(report) == 4  # one over-cap bucket per band
     assert all(r["bucket_size"] == 40 for r in report)
+
+
+def test_banded_lsh_multiprobe_cap_is_per_masked_key(spark):
+    """Multi-probe keys every band code once per bit with that bit
+    cleared; 40 identical vectors fill each of the bands x rows_per_band
+    masked keys, every one trips the cap and is reported."""
+    rows = [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    pairs, skew = ann.banded_lsh_neighbors(
+        df, 0.5, dim=4, bands=4, rows_per_band=4, bucket_cap=10,
+        probe_bits=1,
+    )
+    assert pairs.count() == 0
+    report = skew.collect()
+    assert len(report) == 4 * 4
+    assert {(r["band"], r["probe"]) for r in report} == {
+        (b, i) for b in range(4) for i in range(4)
+    }
+    assert all(r["bucket_size"] == 40 for r in report)
+
+
+@pytest.mark.parametrize("probe_bits", [-1, 2])
+def test_banded_lsh_rejects_unsupported_probe_bits(spark, vecs, probe_bits):
+    df, _ = vecs
+    with pytest.raises(ValueError, match="probe_bits"):
+        ann.banded_lsh_neighbors(df, 0.9, dim=16, probe_bits=probe_bits)
 
 
 def test_band_codes_deterministic_across_partitionings(spark, vecs):
@@ -238,15 +247,14 @@ def test_banded_plan_has_no_bucket_window(spark):
     """r5: ANN bucket sizing must be groupBy-count + join, never a
     count window over (band, code) — a dense mass of near-identical
     embeddings sharing a band code would funnel through one window
-    partition.  materialize=False so the pre-barrier plan is
-    visible."""
+    partition.  Checked on the default (barriered) path: the bucket
+    sizing sits above the code barrier."""
     vecs = spark.createDataFrame(
         [(i, [float(i % 3), 1.0, 0.5, 0.0]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
     pairs, skew = ann.banded_lsh_neighbors(
         vecs, threshold=0.5, dim=4, bands=2, rows_per_band=4,
-        materialize=False,
     )
     for d in (pairs, skew):
         plan = d._jdf.queryExecution().executedPlan().toString()

@@ -11,6 +11,7 @@ import pytest
 
 from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.operators import jaccard as jaccard_mod
+from app_dupfind_spark.operators.ann import banded_lsh_neighbors
 from app_dupfind_spark.operators.cobucket import key_pairs
 from app_dupfind_spark.operators.jaccard import jaccard_pairs
 from app_dupfind_spark.operators.spans import span_candidates
@@ -100,15 +101,27 @@ def _generators(df) -> list[str]:
     ]
 
 
-@pytest.mark.parametrize("op", ["jaccard_pairs", "span_candidates"])
+@pytest.mark.parametrize(
+    "op", ["jaccard_pairs", "span_candidates", "banded_lsh_neighbors"]
+)
 def test_pairs_come_from_the_nested_generate_not_a_self_join(spark, pages, op):
-    """The inverted indexes pair co-members through one sorted member
-    array per key (posexplode x explode(slice)), never by joining the
-    exploded index to itself on the key (an m^2 shuffled join)."""
+    """The inverted indexes and the embedding LSH buckets pair
+    co-members through one sorted member array per key
+    (posexplode x explode(slice)), never by joining the exploded index
+    to itself on the key (an m^2 shuffled join)."""
     if op == "jaccard_pairs":
         df, key = jaccard_pairs(pages, 5, 0.5, "url", "text"), "shingle"
-    else:
+    elif op == "span_candidates":
         df, key = span_candidates(pages, DedupConfig(), "url", "text"), "sh"
+    else:
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 3), 1.0, 0.5, 0.0]) for i in range(8)],
+            "vec_id long, embedding array<double>",
+        )
+        df, _ = banded_lsh_neighbors(
+            vecs, 0.5, dim=4, bands=2, rows_per_band=4
+        )
+        key = "code"
     assert _index_self_joins(df, key) == []
     gens = _generators(df)
     assert any(g.startswith("posexplode(") for g in gens), gens

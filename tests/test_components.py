@@ -115,6 +115,14 @@ def test_long_chain_converges(spark):
     assert len(got) == n + 1
 
 
+def test_unconverged_cc_raises(spark):
+    """A path graph needs several star rounds; one round must not
+    return its unconverged edges as components."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(16)], "a long, b long")
+    with pytest.raises(RuntimeError, match="1 rounds"):
+        connected_components(df, max_iterations=1)
+
+
 def test_fixpoint_checksum_distinguishes_old_sum_collision(spark):
     """Round-2 defect: the fixpoint test compared (count, sum of
     40-bit-masked xxhash64) — these two DIFFERENT edge sets collide

@@ -57,11 +57,11 @@ def test_lcs_self_is_length(x):
     st.integers(min_value=1, max_value=9),
 )
 def test_block_pair_layout_covers_every_pair_once(ids, B):
-    """The blocked all-pairs layout rule (ann.embedding_near_dup_pairs /
-    blocked_gemm_pairs): left side explodes to blocks [blk, B), right
-    side keys its own block, same-block ties break by id — prove every
-    unordered pair is generated exactly once for ANY deterministic
-    block assignment (the implementations use pmod(xxhash64(id), B))."""
+    """The blocked all-pairs layout rule (ann.blocked_gemm_pairs): left
+    side explodes to blocks [blk, B), right side keys its own block,
+    same-block ties break by id — prove every unordered pair is
+    generated exactly once for ANY deterministic block assignment (the
+    implementation uses pmod(xxhash64(id), B))."""
 
     def blk(i):
         return i % B  # any deterministic assignment has the property
