@@ -7,8 +7,8 @@ reference (tommybutler/App-dupfind: size grouping -> byte-sample
 every stage; see /root/reference/lib/App/dupfind/Common.pm:38-204) as
 an idiomatic Spark DataFrame pipeline, and generalizes it to web-scale
 text dedup: exact xxhash64 pruning, MinHash signatures over k-shingles,
-LSH band-bucket candidate generation, SimHash Hamming verification, and
-connected-components clustering.
+LSH band-bucket candidate generation, exact shingle-Jaccard
+verification, and connected-components clustering.
 
 Everything here is stock PySpark 4.x: DataFrame/SQL expressions for the
 relational skeleton, vectorized pandas/Arrow UDFs for the signature

@@ -49,7 +49,6 @@ class DedupConfig:
 
     # --- shingling / MinHash ---
     shingle_k: int = 5          # word k-grams
-    num_perm: int = 128         # MinHash permutations
     seed: int = 42
 
     # --- LSH banding: num_perm = bands * rows_per_band ---
@@ -89,18 +88,12 @@ class DedupConfig:
     # (spans past the cap are out of contract, documented in spans.py)
     span_max_chars: int = 20_000
 
-    # --- execution ---
-    # intra-stage fan-out barrier strategy (plans/barriers.py):
-    # 'local' (localCheckpoint — fastest, not executor-loss tolerant),
-    # 'reliable' (checkpoint to sc checkpoint dir — cluster default)
-    barrier_strategy: str = "local"
+    @property
+    def num_perm(self) -> int:
+        """MinHash permutations: one per row of every LSH band."""
+        return self.lsh_bands * self.lsh_rows
 
     def __post_init__(self) -> None:
-        if self.num_perm != self.lsh_bands * self.lsh_rows:
-            raise ValueError(
-                f"num_perm ({self.num_perm}) must equal lsh_bands*lsh_rows "
-                f"({self.lsh_bands}*{self.lsh_rows})"
-            )
         unknown = [p for p in self.weed_passes if p not in WEED_PASS_NAMES]
         if unknown:
             # plan-time validation, like the reference's death on unknown
@@ -110,11 +103,6 @@ class DedupConfig:
             )
         if self.shingle_k < 1 or self.probe_width < 1:
             raise ValueError("shingle_k and probe_width must be >= 1")
-        if self.barrier_strategy not in ("local", "reliable"):
-            raise ValueError(
-                f"barrier_strategy must be 'local' or 'reliable', "
-                f"got {self.barrier_strategy!r}"
-            )
 
     def config_hash(self) -> str:
         """Stable hash of the config — stamped into checkpoint manifests

@@ -2,7 +2,7 @@
 LSH band hashing (pure JVM expressions).
 
 The JVM side produces the 64-bit shingle-hash universe once
-(functions.text.shingle_hashes — built-in xxhash64 inside transform());
+(functions.text.window_hashes — built-in xxhash64 inside transform());
 the Python side is numpy-only integer math over those arrays, crossing
 the boundary in Arrow batches.  No strings ever cross into Python and
 nothing is per-row Python.

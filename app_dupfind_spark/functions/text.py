@@ -32,25 +32,9 @@ QUALITY_STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it")
 FINGERPRINT_MOD = 1_000_000_007  # < 2^30: (h*31 + c) stays in int64
 
 
-def normalize_text(col: Column) -> Column:
-    """Canonical text form for near-dup comparison: lowercase, collapse
-    all whitespace runs to single spaces, trim.  (Exact-dup stages hash
-    the RAW text — byte-identical per url is the input invariant.)"""
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
-
-
 def tokens(col: Column) -> Column:
-    """Whitespace tokens of normalized text; empty text -> empty array.
-
-    Splits the lowercased text on `\\s+` directly instead of routing
-    through `normalize_text` (r6): collapsing runs to single spaces
-    only to re-split on them built a full normalized copy of every
-    document first — one extra regex pass plus a string allocation the
-    split then threw away (guide §1.2 per-task work; measured 0.85 s
-    -> 0.61 s for the token pass at the 50k point).  Token-for-token
-    identical: split-on-`\\s+` yields the same tokens as
-    collapse-then-split-on-space, with boundary empties removed by the
-    same filter."""
+    """Whitespace tokens of the lowercased text, split on `\\s+`; empty
+    text -> empty array (the filter drops the boundary empties)."""
     return F.filter(F.split(F.lower(col), r"\s+"), lambda t: t != F.lit(""))
 
 
@@ -69,14 +53,6 @@ def word_shingles(tok: Column, k: int) -> Column:
             lambda i: F.concat_ws(" ", F.slice(tok, i + 1, k)),
         )
     )).otherwise(F.array().cast("array<string>"))
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """xxhash64 of every shingle — the 64-bit feature universe that both
-    MinHash and SimHash consume.  Computed once, reused by both (the
-    reference's 'never hash the same bytes twice' cache spirit,
-    Common.pm:160-193, as compute-once column reuse)."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
 
 
 def token_hashes(col: Column) -> Column:

@@ -540,7 +540,6 @@ def banded_lsh_neighbors(
     vec_col: str = "embedding",
     bucket_cap: int = 2000,
     probe_bits: int = 0,
-    barrier_strategy: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """Scale path: (near-dup pairs, skew report).
 
@@ -575,8 +574,7 @@ def banded_lsh_neighbors(
             as_double_array(F.col(vec_col)).alias("v"),
         )
         .withColumn("n", l2_norm(F.col("v")))
-        .withColumn("codes", codes(F.col("v"))),
-        strategy=barrier_strategy,
+        .withColumn("codes", codes(F.col("v")))
     )
 
     memb = base.select("id", F.posexplode("codes").alias("band", "code"))

@@ -16,11 +16,10 @@ tests/test_components.py as a cross-check.
 
 Scale notes:
 - A lazy barrier after every round cuts the lineage — iterative
-  self-joins otherwise compound the plan exponentially.  The barrier
-  strategy is selectable (`barrier_strategy`, plans/barriers.py):
-  'local' (default) is fastest but an executor loss mid-CC rewinds the
-  whole iterative stage to its input checkpoint; 'reliable' makes each
-  ROUND durable, so recovery replays at most one round.
+  self-joins otherwise compound the plan exponentially.  Off a local
+  master the barrier is a reliable checkpoint (plans/barriers.py), so
+  each ROUND is durable and an executor loss mid-CC replays at most
+  one round instead of rewinding to the stage's input checkpoint.
 - Fixpoint detection compares the edge multiset via a count+checksum
   aggregate (one cheap job), not exceptAll (a full shuffle).
 """
@@ -115,7 +114,6 @@ def connected_components(
     max_iterations: int = 50,
     a: str = "a",
     b: str = "b",
-    barrier_strategy: str = "local",
 ) -> DataFrame:
     """(node, component) for every node appearing in `pairs`; component
     is the minimum node id of the connected component (matching the
@@ -126,16 +124,10 @@ def connected_components(
     # materializes the barrier and reads the aggregate — ONE Spark
     # job per iteration instead of two (driver job latency is the fixed
     # cost that caps scaling efficiency of the iterative stage)
-    edges = materialize_barrier(
-        _canonical_edges(pairs, a, b),
-        strategy=barrier_strategy, eager=False,
-    )
+    edges = materialize_barrier(_canonical_edges(pairs, a, b), eager=False)
     prev = _edge_checksum(edges)
     for _ in range(max_iterations):
-        edges = materialize_barrier(
-            _small_star(_large_star(edges)),
-            strategy=barrier_strategy, eager=False,
-        )
+        edges = materialize_barrier(_small_star(_large_star(edges)), eager=False)
         cur = _edge_checksum(edges)
         if cur == prev:
             break

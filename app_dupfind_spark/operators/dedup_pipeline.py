@@ -98,8 +98,7 @@ def _exact_verify(
     has no estimator noise at the threshold."""
     return (
         exact_jaccard_for_pairs(
-            cands, docs, cfg.shingle_k, id_col, text_col,
-            barrier_strategy=cfg.barrier_strategy,
+            cands, docs, cfg.shingle_k, id_col, text_col
         )
         .where(F.col("jaccard") >= cfg.jaccard_threshold)
         .select("a", "b", "jaccard")
@@ -172,12 +171,10 @@ def near_dup_pipeline(
 
     def _sigs_fn() -> DataFrame:
         # the checkpoint stores only what cands reads: 32 band hashes
-        # per doc, not the 128-long signature.  No SimHash: verify
-        # gates on exact Jaccard alone and never reads it.
-        return lsh_bands(
-            signatures(canon.df, cfg, id_col, text_col, with_simhash=False),
-            cfg, id_col,
-        )
+        # per doc, not the 128-long signature.  No SimHash: lsh_bands
+        # never reads it, so the optimizer prunes its UDF (verify gates
+        # on exact Jaccard alone).
+        return lsh_bands(signatures(canon.df, cfg, id_col, text_col), cfg, id_col)
 
     def _lsh_chain():
         s = runner.run_stage("sigs", _sigs_fn, upstream_fingerprint=fp)
@@ -280,10 +277,7 @@ def near_dup_pipeline(
             edges = near_edges.unionByName(ex_edges)
             if span_edges is not None:
                 edges = edges.unionByName(span_edges)
-            return connected_components(
-                edges, cfg.cc_max_iterations,
-                barrier_strategy=cfg.barrier_strategy,
-            )
+            return connected_components(edges, cfg.cc_max_iterations)
 
         cc = runner.run_stage(
             "cc",

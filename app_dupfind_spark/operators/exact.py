@@ -145,8 +145,7 @@ def exact_dup_cascade(
             F.col("size"),
             *([weed_key(cfg, text_col).alias("__probe")] if cfg.weed_passes else []),
             text_digest(text_col).alias("digest"),
-        ),
-        cfg,
+        )
     )
 
     # grouping_id() sets bit (len(keys)-1-i) when keys[i] is NOT grouped
@@ -175,7 +174,7 @@ def exact_dup_cascade(
                 F.count(F.when(hit, F.lit(1))).alias(f"{name}_groups"),
             ]
         groups = groups.observe(counters, *exprs)
-    dup_groups = materialize_barrier(groups.where(F.col("__n") >= 2), cfg)
+    dup_groups = materialize_barrier(groups.where(F.col("__n") >= 2))
     dup_digests = dup_groups.where(F.col("__gid") == gid(["digest"])).select("digest")
     return skinny.join(dup_digests, "digest", "left_semi").select(
         id_col, "size", "digest"

@@ -44,7 +44,6 @@ def doc_shingle_arrays(
     k: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    barrier_strategy: str = "local",
 ) -> DataFrame:
     """(id, shingles): each doc's DISTINCT word k-shingles as one array
     of 64-bit xxhash64 keys (empty below k tokens), bound behind a
@@ -75,8 +74,7 @@ def doc_shingle_arrays(
             F.col(id_col), token_hashes(F.col(text_col)).alias("__th")
         ).select(
             F.col(id_col), window_hashes(F.col("__th"), k).alias("shingles")
-        ),
-        strategy=barrier_strategy,
+        )
     )
 
 
@@ -98,7 +96,6 @@ def exact_jaccard_for_pairs(
     k: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    barrier_strategy: str = "local",
 ) -> DataFrame:
     """Exact shingle-Jaccard for a GIVEN list of DISTINCT pairs (a, b) —
     the pair-targeted verifier behind the pipeline's verify stage.
@@ -127,7 +124,7 @@ def exact_jaccard_for_pairs(
         .distinct()
     )
     sub = docs.join(ids, id_col, "left_semi")
-    arr = doc_shingle_arrays(sub, k, id_col, text_col, barrier_strategy)
+    arr = doc_shingle_arrays(sub, k, id_col, text_col)
     sa = arr.select(F.col(id_col).alias("a"), F.col("shingles").alias("sa"))
     sb = arr.select(F.col(id_col).alias("b"), F.col("shingles").alias("sb"))
     # bound, not aliased: callers gate on jaccard, and a gate over an
@@ -151,7 +148,6 @@ def jaccard_pairs(
     text_col: str = "text",
     max_shingle_df: int | None = None,
     capped_count_col: str | None = None,
-    barrier_strategy: str = "local",
 ) -> DataFrame:
     """All unordered pairs (a < b) with exact shingle-Jaccard >= threshold.
 
@@ -165,7 +161,7 @@ def jaccard_pairs(
     # member probe of the shared key-pair kernel), each branch replaying
     # a cheap explode of the barriered per-doc arrays; n_a/n_b (the
     # Jaccard denominators) are read off the arrays, one row per doc
-    arr = doc_shingle_arrays(df, k, id_col, text_col, barrier_strategy)
+    arr = doc_shingle_arrays(df, k, id_col, text_col)
     member = arr.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     sizes = key_sizes(member, ["shingle"])
     if capped_count_col is not None and max_shingle_df is not None:
@@ -173,7 +169,7 @@ def jaccard_pairs(
         # bind the aggregate once instead of re-running the full
         # explode+groupBy per branch; unbarriered, the aggregate would
         # roughly DOUBLE the most expensive stage (ADVICE r3).
-        sizes = materialize_barrier(sizes, strategy=barrier_strategy)
+        sizes = materialize_barrier(sizes)
     shared, _ = key_pairs(
         member, ["shingle"], id_col, max_size=max_shingle_df,
         n_col="n_common", sizes=sizes,

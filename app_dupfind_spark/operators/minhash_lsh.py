@@ -57,7 +57,6 @@ def signatures(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    with_simhash: bool = True,
 ) -> DataFrame:
     """(id, n_shingles, minhash:array<long>, simhash:long).
 
@@ -84,7 +83,7 @@ def signatures(
         id_col,
         F.size("sh_hashes").alias("n_shingles"),
         minhash_udf("sh_hashes").alias("minhash"),
-        *( [make_simhash_udf(cfg)("sh_hashes").alias("simhash")] if with_simhash else [] ),
+        make_simhash_udf(cfg)("sh_hashes").alias("simhash"),
     )
     return out
 
@@ -156,5 +155,5 @@ def candidate_pairs(
     band_hashes and the MinHash UDF evaluate once for both reads of
     the bucket pipeline."""
     return bucket_pairs(
-        materialize_barrier(lsh_bands(sigs, cfg, id_col), cfg), cfg, id_col
+        materialize_barrier(lsh_bands(sigs, cfg, id_col)), cfg, id_col
     )

@@ -9,14 +9,12 @@ each side's text, then a `mapInPandas` computes LCS per Arrow batch.
 The per-pair check is inherently algorithmic (not expressible as a
 column expression); the kernel is a numpy double-rolling-hash binary
 search over the span length — O(n log n) per pair, ~100x faster than a
-quadratic DP and exact up to ~2^-60 hash-collision odds.  A
-pydivsufsort-style suffix array drops in behind the same `_lcs_len`
-interface when available.
+quadratic DP and exact up to ~2^-60 hash-collision odds.
 
 Scale: this stage NEVER sees the corpus — only verified-candidate
 pairs, the reference's "expensive verify last, on the fewest rows"
 posture (Common.pm:112-204).  Texts are capped at `max_chars` before
-the quadratic kernel.
+the LCS kernel.
 """
 
 from __future__ import annotations
@@ -95,8 +93,7 @@ def span_candidates(
     arr = materialize_barrier(
         df.select(
             F.col(id_col).alias("id"), token_hashes(capped).alias("__th")
-        ).select("id", wh.alias("__wh")),
-        cfg,
+        ).select("id", wh.alias("__wh"))
     )
     sh = arr.select("id", F.explode("__wh").alias("sh"))
     # the shared key-pair kernel (operators.cobucket): the collect_list

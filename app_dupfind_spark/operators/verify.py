@@ -8,7 +8,7 @@ Verifiers, cheapest-first (the cascade discipline again):
 1. `minhash_estimate` — estimated Jaccard = matching fraction of the
    two MinHash signatures.  Pure JVM (zip_with + filter + size) on
    columns already in hand; unbiased estimator with σ ≈ 0.044 at
-   num_perm=128.  This is the primary gate (Broder's operating point).
+   num_perm=128 (Broder's operating point).
 2. `simhash` — bit_count(xor) Hamming gate, for the near-identical
    regime (hamming <= 3 of 64 ≈ cosine > 0.995).  Catches template
    pages whose shingle sets differ more than their weighted bits.

@@ -1,32 +1,29 @@
-"""Intra-stage materialization barriers with a selectable strategy.
+"""Intra-stage materialization barriers, chosen by the platform.
 
 Operators bind fan-out points — a UDF-produced or aggregate table that
 several plan branches re-reference — behind a barrier so the expensive
 lineage evaluates once (see the call sites' PERF notes; the measured
 penalty without one is up to 30x on the LSH signature table).
 
-`localCheckpoint` is the right LOCAL default, but its blocks live in
-executor block managers with the lineage truncated: on a multi-executor
-cluster, losing one executor mid-stage makes the blocks unrecoverable
-and fails the job instead of recomputing (VERDICT r3 #2 — the analog of
-the reference's stage-resume contract, /root/reference/t/006_weed.t:
-20-23: a failure mid-run must not lose the run).  The strategy is
-therefore config-gated via ``DedupConfig.barrier_strategy`` and
-threaded through this ONE helper:
+Which barrier is a property of the master, not of the run, so it is
+not part of `DedupConfig` (a run's identity: switching barriers changes
+no output row and must not invalidate a finished stage):
 
-- ``local`` (default): ``df.localCheckpoint(eager=True)``.  Fastest;
-  single-box or fault-intolerant runs.  BASELINE.md measured it ~equal
-  to parquet at low parallelism and SLOWER at high (heap pressure).
-- ``reliable``: ``df.checkpoint(eager=True)`` — blocks written to the
+- local master (`local`, `local[N]`): ``df.localCheckpoint()``.  The
+  blocks live in the one JVM's block manager; no executor can be lost
+  without losing the driver too, so nothing more durable is needed.
+  BASELINE.md measured it ~equal to parquet at low parallelism and
+  SLOWER at high (heap pressure).
+- any other master: ``df.checkpoint()`` — blocks written to the
   SparkContext checkpoint directory (HDFS / object store on a real
-  cluster), recoverable after executor loss.  Requires
-  ``sc.setCheckpointDir`` — the pipeline runner and job entry set it
-  automatically (``ensure_checkpoint_dir``); standalone operator calls
-  must do the same or get a clear error here, at plan time.
+  cluster), so an executor lost mid-stage costs a re-read, not the job
+  (a localCheckpoint's blocks die with their executor, lineage
+  truncated).  Requires ``sc.setCheckpointDir``: the pipeline runner
+  sets it under its checkpoint root (``ensure_checkpoint_dir``);
+  standalone operator calls must do the same or get a clear error
+  here, at plan time.
 
-Cluster recommendation (SCALE.md): ``reliable`` on multi-executor
-clusters whenever a stage's wall-clock is long enough that an executor
-loss is plausible mid-stage; ``local`` otherwise.
+`is_local_master` is the one place the choice is made.
 
 `bind_columns` is the other kind of barrier: it writes nothing and only
 stops the optimizer from copying an expensive expression into the
@@ -38,42 +35,35 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BARRIER_STRATEGIES = ("local", "reliable")
+
+def is_local_master(spark: SparkSession) -> bool:
+    """True when driver and executors share one JVM (a `local` or
+    `local[N]` master)."""
+    return spark.sparkContext._jsc.isLocal()
 
 
 def ensure_checkpoint_dir(spark: SparkSession, path: str) -> None:
-    """Set the reliable-checkpoint directory iff none is set yet.
-    Idempotent so runner + job entry can both call it."""
+    """Set the reliable-checkpoint directory iff none is set yet, so
+    every runner in a session may call it."""
     sc = spark.sparkContext
     if not sc.getCheckpointDir():
         sc.setCheckpointDir(str(path))
 
 
-def materialize_barrier(
-    df: DataFrame,
-    cfg=None,
-    *,
-    strategy: str | None = None,
-    eager: bool = True,
-) -> DataFrame:
+def materialize_barrier(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """Materialize `df` once so downstream fan-out replays rows instead
-    of recomputing lineage.  Strategy resolution: explicit `strategy`
-    arg > `cfg.barrier_strategy` > 'local'."""
-    s = strategy or (getattr(cfg, "barrier_strategy", None) or "local")
-    if s == "local":
+    of recomputing lineage: a localCheckpoint on a local master, a
+    reliable checkpoint on any other."""
+    spark = df.sparkSession
+    if is_local_master(spark):
         return df.localCheckpoint(eager=eager)
-    if s == "reliable":
-        sc = df.sparkSession.sparkContext
-        if not sc.getCheckpointDir():
-            raise RuntimeError(
-                "barrier_strategy='reliable' needs a checkpoint dir: call "
-                "spark.sparkContext.setCheckpointDir(...) (the pipeline "
-                "runner and jobs/run_pipeline.py do this automatically)"
-            )
-        return df.checkpoint(eager=eager)
-    raise ValueError(
-        f"unknown barrier strategy {s!r}; valid: {BARRIER_STRATEGIES}"
-    )
+    if not spark.sparkContext.getCheckpointDir():
+        raise RuntimeError(
+            "a barrier on a non-local master needs a checkpoint dir: call "
+            "spark.sparkContext.setCheckpointDir(...) (the pipeline "
+            "runner does this automatically)"
+        )
+    return df.checkpoint(eager=eager)
 
 
 def bind_columns(df: DataFrame, keep: list[str], **exprs: Column) -> DataFrame:

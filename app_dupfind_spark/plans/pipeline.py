@@ -51,8 +51,10 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
+from app_dupfind_spark.plans import barriers
 
 MANIFEST_NAME = "_manifest.json"
+PERSIST_MODES = ("parquet", "iceberg", "memory")
 
 
 def _partition_lineage(data_dir: Path) -> list[dict]:
@@ -155,12 +157,6 @@ class IcebergTableIO:
     def table(self, name: str) -> str:
         return f"{self.catalog}.{self.namespace}.{name}"
 
-    def exists(self, name: str) -> bool:
-        return (
-            self.spark.catalog.tableExists(self.table(name))
-            and self.manifest(name) is not None
-        )
-
     def manifest(self, name: str) -> dict | None:
         if not self.spark.catalog.tableExists(self.table(name)):
             return None
@@ -240,9 +236,6 @@ class TableIO:
     def path(self, name: str) -> Path:
         return self.root / name
 
-    def exists(self, name: str) -> bool:
-        return (self.path(name) / MANIFEST_NAME).exists()
-
     def manifest(self, name: str) -> dict | None:
         p = self.path(name) / MANIFEST_NAME
         if not p.exists():
@@ -309,6 +302,10 @@ class PipelineRunner:
     _skip_fp: dict[str, str] = field(default_factory=dict, repr=False)
 
     def __post_init__(self):
+        if self.persist_mode not in PERSIST_MODES:
+            raise ValueError(
+                f"persist_mode={self.persist_mode!r}; valid: {PERSIST_MODES}"
+            )
         self.io = make_table_io(
             self.spark,
             self.checkpoint_dir,
@@ -320,13 +317,12 @@ class PipelineRunner:
         )
         if self.persist_mode != "iceberg":
             Path(self.checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.cfg.barrier_strategy == "reliable":
-            # intra-stage reliable barriers need an RDD checkpoint dir;
-            # nest it under the stage-checkpoint root (on a cluster
-            # both live on the shared store)
-            from app_dupfind_spark.plans.barriers import ensure_checkpoint_dir
-
-            ensure_checkpoint_dir(
+        if not barriers.is_local_master(self.spark):
+            # intra-stage barriers off a local master are reliable
+            # checkpoints and need an RDD checkpoint dir; nest it under
+            # the stage-checkpoint root (on a cluster both live on the
+            # shared store)
+            barriers.ensure_checkpoint_dir(
                 self.spark, str(Path(str(self.checkpoint_dir)) / "_rdd_ckpt")
             )
 

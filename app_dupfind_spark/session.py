@@ -2,7 +2,8 @@
 
 Scale posture: AQE on (runtime re-plan + skew-join splitting), Arrow on
 (every pandas UDF crosses the JVM/Python boundary in columnar batches),
-shuffle partitions sized by config.  On a real cluster these same confs
+shuffle partitions set by `get_spark(shuffle_partitions=)` or
+``SPARK_GRAFT_SHUFFLE_PARTITIONS``.  On a real cluster these same confs
 ship via spark-submit; locally we pin them here so tests and bench runs
 are reproducible.
 """

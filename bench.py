@@ -25,7 +25,8 @@ Every query is forced through the noop datasource sink (full plan
 executes JVM-side, nothing collects to the driver).
 
 Scaling evidence (north_rule N vs 4N): scripts/scaling_bench.py runs
-this file at two parallelism levels in fresh JVMs.
+the pipeline job scripts/_scaling_job.py at two parallelism levels in
+fresh JVMs.
 """
 
 from __future__ import annotations

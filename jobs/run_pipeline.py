@@ -10,10 +10,9 @@ Cluster usage (north_rule contract):
         --output <clusters sink path> \\
         [--config k=v ...]
 
-Multi-executor cluster profile (SCALE.md): add
-`--config barrier_strategy=reliable` so intra-stage fan-out barriers
-survive executor loss (the runner auto-sets the RDD checkpoint dir
-under --checkpoint-dir).
+On a multi-executor master the intra-stage fan-out barriers are
+reliable checkpoints, written under `<checkpoint-dir>/_rdd_ckpt`, so
+they survive executor loss (plans/barriers.py; SCALE.md).
 
 Local smoke:
 
@@ -24,6 +23,7 @@ Local smoke:
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import json
 import sys
 from pathlib import Path
@@ -32,15 +32,19 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from app_dupfind_spark.config import DedupConfig  # noqa: E402
 from app_dupfind_spark.operators.dedup_pipeline import near_dup_pipeline  # noqa: E402
+from app_dupfind_spark.plans.pipeline import PERSIST_MODES  # noqa: E402
 from app_dupfind_spark.session import get_spark  # noqa: E402
 
 
 def parse_config(kvs: list[str]) -> DedupConfig:
     overrides: dict = {}
-    defaults = DedupConfig()
+    defaults = {f.name: f.default for f in dataclasses.fields(DedupConfig)}
     for kv in kvs:
         k, v = kv.split("=", 1)
-        cur = getattr(defaults, k)  # raises on unknown key — plan-time
+        if k not in defaults:
+            # plan-time death on an unknown or derived key (num_perm)
+            raise AttributeError(f"DedupConfig has no field {k!r}")
+        cur = defaults[k]
         if isinstance(cur, bool):
             overrides[k] = v.lower() in ("1", "true", "yes")
         elif isinstance(cur, int):
@@ -78,7 +82,7 @@ def main() -> None:
     )
     ap.add_argument(
         "--persist-mode", default="parquet",
-        choices=("parquet", "iceberg", "memory"),
+        choices=PERSIST_MODES,
         help="stage-checkpoint storage: parquet+manifest (default), "
              "an Iceberg catalog (needs --iceberg-catalog + runtime "
              "jar), or in-memory (no resume)",

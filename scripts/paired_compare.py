@@ -3,8 +3,8 @@
 The box's timing noise is slow drift (co-tenant load), documented at
 +/-30% across days.  A single-pass round-over-round comparison cannot
 distinguish a real 25% regression from that drift.  This script makes
-the comparison decidable: it checks out two git refs into throwaway
-worktrees and runs the SAME bench queries alternately A,B,A,B,... in
+the comparison decidable: it extracts two code versions into throwaway
+trees and runs the SAME bench queries alternately A,B,A,B,... in
 fresh JVMs, so drift is shared between the two sample sets, then
 reports per-query median + IQR for each side and whether the
 inter-quartile intervals overlap.
@@ -13,11 +13,17 @@ Usage:
   python scripts/paired_compare.py REF_A REF_B [--reps K] [--out FILE]
       [--sf-dir DIR] [--cpus N] [query ...]
 
-REF_A/REF_B are git refs (commit, branch) or literal 'WORKTREE' for the
-current working tree.  Default queries: the full HEADLINE suite of the
-NEWER side.  Each of the K rounds runs one fresh-JVM bench pass per
-side (SPARK_GRAFT_BENCH_REPS=1, SPARK_GRAFT_SCALE2=0), alternating
-sides within the round.
+REF_A/REF_B are git refs (commit, branch), extracted with `git archive`,
+or literal 'WORKTREE' for a copy of the working tree's tracked and
+untracked, non-ignored files.  Both trees are deleted at the end, and
+bench.py's BENCH_DETAIL.json lands in them, never in the repo.
+Default queries: the full HEADLINE suite of the NEWER side.  Each of
+the K rounds runs one fresh-JVM bench pass per side
+(SPARK_GRAFT_BENCH_REPS=2, SPARK_GRAFT_SCALE2=0), alternating sides
+within the round.  A pass's sample for a query is the faster of its
+two calls: the first call in a fresh JVM pays start-up the second
+does not, and BENCH_DETAIL.json's `samples` are sorted, so the faster
+call is `samples[0]`.
 
 Verdict per query: 'B_faster' / 'A_faster' when the [q25,q75] intervals
 do not overlap, else 'overlap' (no decidable change).
@@ -26,57 +32,63 @@ do not overlap, else 'overlap' (no decidable change).
 from __future__ import annotations
 
 import argparse
+import io
 import json
+import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 
 
-def _worktree(ref: str, stack: list[Path]) -> Path:
-    if ref == "WORKTREE":
-        return REPO
+def _tree(ref: str, stack: list[Path]) -> Path:
+    """A throwaway copy of `ref` (or of the working tree)."""
     d = Path(tempfile.mkdtemp(prefix=f"paired_{ref[:12].replace('/', '_')}_"))
-    subprocess.run(
-        ["git", "worktree", "add", "--detach", str(d), ref],
-        cwd=REPO, check=True, capture_output=True,
-    )
     stack.append(d)
+    if ref == "WORKTREE":
+        listed = subprocess.run(
+            ["git", "ls-files", "-z", "-co", "--exclude-standard"],
+            cwd=REPO, check=True, capture_output=True, text=True,
+        ).stdout.split("\0")
+        for rel in filter(None, listed):
+            src = REPO / rel
+            if src.is_file():  # listed but deleted in the working tree
+                (d / rel).parent.mkdir(parents=True, exist_ok=True)
+                shutil.copy2(src, d / rel)
+    else:
+        blob = subprocess.run(
+            ["git", "archive", ref], cwd=REPO, check=True, capture_output=True,
+        ).stdout
+        with tarfile.open(fileobj=io.BytesIO(blob)) as tar:
+            tar.extractall(d, filter="data")
     return d
 
 
-def _cleanup(stack: list[Path]) -> None:
-    for d in stack:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", str(d)],
-            cwd=REPO, capture_output=True,
-        )
-
-
 def _run_once(tree: Path, queries: list[str], sf_dir: str, cpus: int) -> dict:
-    """One fresh-JVM bench pass (1 rep per query) in `tree`."""
+    """One fresh-JVM bench pass (2 calls per query) in `tree`; returns
+    each query's faster call."""
     env = {
         "SPARK_GRAFT_SF_DIR": sf_dir,
         "SPARK_GRAFT_CPUS": str(cpus),
-        "SPARK_GRAFT_BENCH_REPS": "1",
+        "SPARK_GRAFT_BENCH_REPS": "2",
         "SPARK_GRAFT_SCALE2": "0",
     }
-    import os
-
-    full_env = {**os.environ, **env}
     proc = subprocess.run(
         [sys.executable, "bench.py", *queries],
-        cwd=tree, env=full_env, capture_output=True, text=True, timeout=3600,
+        cwd=tree, env={**os.environ, **env}, capture_output=True, text=True,
+        timeout=3600,
     )
     if proc.returncode != 0:
         raise RuntimeError(
             f"bench in {tree} failed:\n{proc.stderr[-4000:]}"
         )
-    line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
-    return json.loads(line)["queries"]
+    spread = json.loads((tree / "BENCH_DETAIL.json").read_text())["spread"]
+    return {q: spread[q]["samples"][0] for q in queries}
 
 
 def _quart(s: list[float], p: float) -> float:
@@ -105,12 +117,12 @@ def main() -> None:
     ap.add_argument("--out", default=None)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
     ap.add_argument("--cpus", type=int, default=32)
-    args = ap.parse_args()
+    args = ap.parse_intermixed_args()
 
     stack: list[Path] = []
     try:
-        tree_a = _worktree(args.ref_a, stack)
-        tree_b = _worktree(args.ref_b, stack)
+        tree_a = _tree(args.ref_a, stack)
+        tree_b = _tree(args.ref_b, stack)
         queries = args.queries
         if not queries:
             sys.path.insert(0, str(tree_b))
@@ -155,7 +167,8 @@ def main() -> None:
         if args.out:
             Path(args.out).write_text(json.dumps(result, indent=2) + "\n")
     finally:
-        _cleanup(stack)
+        for d in stack:
+            shutil.rmtree(d, ignore_errors=True)
 
 
 if __name__ == "__main__":

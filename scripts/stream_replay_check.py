@@ -66,7 +66,7 @@ def run_check(spark, workdir: str, seed: int = 42, scale: int = 1) -> dict:
     docs = pages_df(spark, corpus).where(F.col("text").isNotNull())
 
     # ---- batch truth: LSH candidates + estimate-mode OR gate ----
-    sigs = signatures(docs, cfg, "url", "text", with_simhash=True)
+    sigs = signatures(docs, cfg, "url", "text")
     cands, _skew = candidate_pairs(sigs, cfg, "url")
 
     def _gate(sig_df):

@@ -1,8 +1,9 @@
-"""Barrier strategy selection (plans/barriers.py, VERDICT r3 #2).
+"""Barrier selection by master (plans/barriers.py, VERDICT r3 #2).
 
 One helper serves every intra-stage fan-out point; these tests pin the
-strategy dispatch so the cluster profile ('reliable') cannot
-silently fall back to the non-fault-tolerant localCheckpoint."""
+dispatch so a non-local master cannot silently fall back to the
+non-fault-tolerant localCheckpoint.  The test session runs on a local
+master, so the non-local cases patch `barriers.is_local_master`."""
 
 from __future__ import annotations
 
@@ -12,6 +13,7 @@ import tempfile
 import pytest
 
 from app_dupfind_spark.config import DedupConfig
+from app_dupfind_spark.plans import barriers
 from app_dupfind_spark.plans.barriers import (
     ensure_checkpoint_dir,
     materialize_barrier,
@@ -20,6 +22,11 @@ from app_dupfind_spark.plans.barriers import (
 
 def _df(spark):
     return spark.range(100).withColumnRenamed("id", "x")
+
+
+@pytest.fixture
+def non_local(monkeypatch):
+    monkeypatch.setattr(barriers, "is_local_master", lambda spark: False)
 
 
 def test_local_default_truncates_lineage(spark):
@@ -31,49 +38,55 @@ def test_local_default_truncates_lineage(spark):
     assert "Range" not in plan
 
 
-def test_reliable_requires_checkpoint_dir(spark):
+def test_reliable_requires_checkpoint_dir(spark, non_local):
     # only meaningful when no dir is set yet (test-order independent:
     # skip if an earlier test in this session already set one)
     if spark.sparkContext.getCheckpointDir():
         pytest.skip("checkpoint dir already set in this session")
     with pytest.raises(RuntimeError, match="checkpoint dir"):
-        materialize_barrier(_df(spark), strategy="reliable")
+        materialize_barrier(_df(spark))
 
 
-def test_reliable_checkpoints_when_dir_set(spark):
+def test_reliable_checkpoints_when_dir_set(spark, non_local):
     ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
-    out = materialize_barrier(_df(spark), strategy="reliable")
+    out = materialize_barrier(_df(spark))
     assert out.count() == 100
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Range" not in plan
 
 
-def test_cfg_threads_strategy(spark):
-    # 'reliable' writes the RDD into the checkpoint dir; 'local' never
-    # does, so a new rdd-* directory proves the config was honoured
-    ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
+def _new_rdd_dirs(spark, tmp_path, fn) -> set[str]:
+    ensure_checkpoint_dir(spark, str(tmp_path))
     ckpt = spark.sparkContext.getCheckpointDir().removeprefix("file:")
     before = set(os.listdir(ckpt))
-    out = materialize_barrier(_df(spark), DedupConfig(barrier_strategy="reliable"))
-    assert out.count() == 100
-    assert any(d.startswith("rdd-") for d in set(os.listdir(ckpt)) - before)
+    assert fn().count() == 100
+    return {d for d in set(os.listdir(ckpt)) - before if d.startswith("rdd-")}
 
 
-def test_unknown_strategy_rejected(spark):
-    with pytest.raises(ValueError, match="barrier strategy"):
-        materialize_barrier(_df(spark), strategy="bogus")
+def test_cfg_threads_strategy(spark, tmp_path, non_local):
+    # a reliable barrier writes the RDD into the checkpoint dir; a
+    # local one never does, so a new rdd-* directory proves the
+    # non-local master was honoured
+    assert _new_rdd_dirs(spark, tmp_path, lambda: materialize_barrier(_df(spark)))
 
 
-@pytest.mark.parametrize("strategy", ["bogus", "persist"])
-def test_config_validates_strategy(strategy):
-    with pytest.raises(ValueError, match="barrier_strategy"):
-        DedupConfig(barrier_strategy=strategy)
+def test_barrier_follows_the_master(spark, tmp_path, monkeypatch):
+    # local master: a localCheckpoint, nothing in the checkpoint dir
+    assert barriers.is_local_master(spark)
+
+    def barrier():
+        return materialize_barrier(_df(spark))
+
+    assert not _new_rdd_dirs(spark, tmp_path, barrier)
+    # any other master: exactly one reliable checkpoint
+    monkeypatch.setattr(barriers, "is_local_master", lambda spark: False)
+    assert len(_new_rdd_dirs(spark, tmp_path, barrier)) == 1
 
 
-def test_connected_components_under_reliable_barriers(spark):
-    # the iterative stage's per-round lineage cut honors the strategy:
-    # under 'reliable' each round is durable (recovery replays at most
-    # one round instead of rewinding the whole stage)
+def test_connected_components_under_reliable_barriers(spark, non_local):
+    # the iterative stage's per-round lineage cut follows the master:
+    # off a local master each round is durable (recovery replays at
+    # most one round instead of rewinding the whole stage)
     from app_dupfind_spark.operators.components import connected_components
 
     ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
@@ -82,24 +95,21 @@ def test_connected_components_under_reliable_barriers(spark):
     )
     out = {
         (r["node"], r["component"])
-        for r in connected_components(
-            pairs, barrier_strategy="reliable"
-        ).collect()
+        for r in connected_components(pairs).collect()
     }
     assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_cascade_end_to_end_under_reliable_barriers(spark, pages):
+def test_cascade_end_to_end_under_reliable_barriers(spark, pages, monkeypatch):
     # the exact cascade's skinny-projection barrier is the hottest
     # site; the full operator must produce identical dup membership
-    # under the cluster-profile strategy
+    # under reliable barriers
     from app_dupfind_spark.operators.exact import exact_dup_cascade
 
     ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
     base = exact_dup_cascade(pages, DedupConfig(), "url", "text")
-    rel = exact_dup_cascade(
-        pages, DedupConfig(barrier_strategy="reliable"), "url", "text"
-    )
+    monkeypatch.setattr(barriers, "is_local_master", lambda spark: False)
+    rel = exact_dup_cascade(pages, DedupConfig(), "url", "text")
     assert sorted(r["url"] for r in base.collect()) == sorted(
         r["url"] for r in rel.collect()
     )

@@ -138,9 +138,9 @@ def test_capped_counter_reuses_the_one_shingle_count(spark, pages, monkeypatch):
 
     plans = []
 
-    def spy(df, cfg=None, **kw):
+    def spy(df, **kw):
         plans.append(plan(df))
-        return materialize_barrier(df, cfg, **kw)
+        return materialize_barrier(df, **kw)
 
     monkeypatch.setattr(jaccard_mod, "materialize_barrier", spy)
     out = jaccard_pairs(

@@ -9,6 +9,16 @@ def test_default_config_valid():
     assert c.config_hash() == DedupConfig().config_hash()
 
 
+def test_config_fields_are_the_run_identity():
+    # num_perm is derived from the banding, and the barrier follows
+    # the master: neither is a field, so neither moves the config hash
+    import dataclasses
+
+    assert len(dataclasses.fields(DedupConfig)) == 16
+    assert DedupConfig().num_perm == 128
+    assert DedupConfig(lsh_bands=8, lsh_rows=2).num_perm == 16
+
+
 def test_config_hash_changes_with_params():
     assert (
         DedupConfig().config_hash()
@@ -20,11 +30,6 @@ def test_unknown_weed_pass_dies_at_plan_time():
     # reference parity: Guts.pm:62-63 dies on unknown --wpass name
     with pytest.raises(ValueError, match="unknown weed pass"):
         DedupConfig(weed_passes=("first", "nope"))
-
-
-def test_num_perm_band_row_invariant():
-    with pytest.raises(ValueError, match="num_perm"):
-        DedupConfig(num_perm=64)  # bands*rows = 128
 
 
 def test_weed_pass_ordering_is_part_of_identity():
@@ -59,6 +64,8 @@ def test_cli_empty_weed_passes_skips_weeding(spark, pages):
         "est_clear_margin=0.2",
         "verify_mode=estimate",
         "shuffle_partitions=8",
+        "barrier_strategy=reliable",
+        "num_perm=128",
     ],
 )
 def test_cli_rejects_removed_fields(kv):

@@ -131,9 +131,9 @@ def test_cascade_is_one_grouping_sets_aggregate(spark, pages, cfg, monkeypatch):
 
     plans = []
 
-    def spy(df, cfg=None, **kw):
+    def spy(df, **kw):
         plans.append(plan(df))
-        return materialize_barrier(df, cfg, **kw)
+        return materialize_barrier(df, **kw)
 
     monkeypatch.setattr(exact_mod, "materialize_barrier", spy)
     plans.append(plan(exact_dup_cascade(pages, cfg)))

@@ -282,3 +282,43 @@ def test_cands_pairs_the_sigs_checkpoint_without_a_barrier(
     assert runner.io.read("sigs").columns == ["url", "bands"]
     assert {m["stage"]: m["resumed"] for m in runner.metrics}["cands"] is False
     assert calls == []
+
+
+def test_barrier_switch_resumes_every_stage(spark, pages, tmp_path, monkeypatch):
+    """The barrier follows the master and is no part of the run's
+    identity: a run re-started on a non-local master (reliable
+    barriers, checkpoint dir set by the runner) resumes every stage a
+    local run finished."""
+    from app_dupfind_spark.plans import barriers
+
+    ckpt = str(tmp_path / "ck")
+    clusters1, _ = near_dup_pipeline(spark, pages, DedupConfig(), ckpt)
+    rows1 = sorted((r["url"], r["cluster_id"]) for r in clusters1.collect())
+
+    monkeypatch.setattr(barriers, "is_local_master", lambda spark: False)
+    clusters2, runner2 = near_dup_pipeline(spark, pages, DedupConfig(), ckpt)
+    assert spark.sparkContext.getCheckpointDir()
+    assert [m["stage"] for m in runner2.metrics if not m["resumed"]] == []
+    rows2 = sorted((r["url"], r["cluster_id"]) for r in clusters2.collect())
+    assert rows1 == rows2
+
+
+def test_sigs_stage_evaluates_no_simhash(spark, pages, tmp_path, monkeypatch):
+    """The sigs stage stores band hashes only: its plan runs the
+    MinHash UDF and the optimizer prunes the unread SimHash UDF."""
+    from app_dupfind_spark.operators import dedup_pipeline
+
+    plans = []
+    original = dedup_pipeline.lsh_bands
+
+    def spy(*args, **kwargs):
+        out = original(*args, **kwargs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(dedup_pipeline, "lsh_bands", spy)
+    near_dup_pipeline(
+        spark, pages, DedupConfig(), str(tmp_path / "ck"), persist_mode="memory"
+    )
+    assert len(plans) == 1
+    assert "minhash_sig" in plans[0] and "simhash" not in plans[0], plans[0]

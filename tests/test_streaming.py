@@ -246,7 +246,7 @@ def test_near_dup_stream_rejects_narrow_minhash(spark):
     )
     with pytest.raises(ValueError, match="SKETCH_PERMS"):
         near_dup_stream(
-            stream, DedupConfig(num_perm=16, lsh_bands=4, lsh_rows=4)
+            stream, DedupConfig(lsh_bands=4, lsh_rows=4)
         )
 
 

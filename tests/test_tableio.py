@@ -66,6 +66,14 @@ def test_runner_iceberg_mode_routes_through_seam(spark):
         )
 
 
+@pytest.mark.parametrize("mode", ["Iceberg", "delta", ""])
+def test_unknown_persist_mode_rejected(spark, mode):
+    """A misspelt persist_mode dies at construction instead of falling
+    back to the local parquet seam."""
+    with pytest.raises(ValueError, match="persist_mode"):
+        PipelineRunner(spark, DedupConfig(), tempfile.mkdtemp(), persist_mode=mode)
+
+
 def test_keep_canonical_merge_statement():
     sql = keep_canonical_merge_sql("cat.ns.pages", "clusters_v", "url")
     assert sql == (
