@@ -109,7 +109,7 @@ def near_dup_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     cfg: DedupConfig,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None,
     id_col: str = "url",
     text_col: str = "text",
     order_col: str = "warc_ts",
@@ -126,10 +126,11 @@ def near_dup_pipeline(
 
     `source_fingerprint` pins the INPUT identity into the resume chain
     (pass an Iceberg snapshot id on a real cluster).  When omitted and
-    resuming durably, a content fingerprint (count + id-hash sum) is
+    the store resumes, a content fingerprint (count + id-hash sum) is
     computed in one column-pruned pass — re-pointing the same
     checkpoint dir at a different input can never silently resume the
     old corpus (the staleness hazard of count-only fingerprints).
+    `persist_mode='memory'` takes `checkpoint_dir=None`.
     """
     from app_dupfind_spark.session import ensure_session_hygiene
 
@@ -139,8 +140,9 @@ def near_dup_pipeline(
         iceberg_catalog=iceberg_catalog, iceberg_namespace=iceberg_namespace,
     )
 
-    if source_fingerprint is None and persist_mode in ("parquet", "iceberg"):
+    if source_fingerprint is None and runner.io.resumes:
         source_fingerprint = input_fingerprint(pages, id_col)
+    runner.add_source("pages", source_fingerprint or "")
 
     def _canon() -> DataFrame:
         src = runner.observed(
@@ -148,10 +150,7 @@ def near_dup_pipeline(
         )
         return keep_first(src, [id_col], order_col, id_col).select(id_col, text_col)
 
-    canon = runner.run_stage(
-        "canon", _canon, upstream_fingerprint=source_fingerprint or ""
-    )
-    fp = runner.fingerprint("canon")
+    canon = runner.run_stage("canon", _canon, inputs=("pages",))
 
     def _exact() -> DataFrame:
         obs = Observation()
@@ -177,12 +176,12 @@ def near_dup_pipeline(
         return lsh_bands(signatures(canon.df, cfg, id_col, text_col), cfg, id_col)
 
     def _lsh_chain():
-        s = runner.run_stage("sigs", _sigs_fn, upstream_fingerprint=fp)
+        s = runner.run_stage("sigs", _sigs_fn, inputs=("canon",))
         return runner.run_stage(
             "cands",
             # s.df reads from the stage checkpoint — already a barrier
             lambda: bucket_pairs(s.df, cfg, id_col)[0],
-            upstream_fingerprint=runner.fingerprint("sigs"),
+            inputs=("sigs",),
         )
 
     from concurrent.futures import ThreadPoolExecutor
@@ -190,7 +189,7 @@ def near_dup_pipeline(
     with ThreadPoolExecutor(max_workers=3) as pool:
         f_lsh = pool.submit(_lsh_chain)
         f_exact = pool.submit(
-            runner.run_stage, "exact", _exact, upstream_fingerprint=fp
+            runner.run_stage, "exact", _exact, inputs=("canon",)
         )
         f_span_cand = None
         if cfg.span_enabled:
@@ -201,7 +200,7 @@ def near_dup_pipeline(
                 runner.run_stage,
                 "span_cand",
                 lambda: span_candidates(canon.df, cfg, id_col, text_col),
-                upstream_fingerprint=fp,
+                inputs=("canon",),
             )
         exact = f_exact.result()
         cands = f_lsh.result()
@@ -222,14 +221,13 @@ def near_dup_pipeline(
             "a", "b", F.lit(None).cast("double").alias("jaccard")
         ).limit(0)
         verified = runner.skip_stage(
-            "verify", empty_verified, "no candidate pairs",
-            upstream_fingerprint=runner.fingerprint("cands"),
+            "verify", empty_verified, "no candidate pairs", inputs=("cands",)
         )
     else:
         verified = runner.run_stage(
             "verify",
             lambda: _exact_verify(cands.df, canon.df, cfg, id_col, text_col),
-            upstream_fingerprint=runner.fingerprint("cands"),
+            inputs=("cands",),
         )
 
     # Span stage (M5): long-shared-span pairs the whole-doc LSH cannot
@@ -247,18 +245,14 @@ def near_dup_pipeline(
                 max_chars=cfg.span_max_chars,
             )
 
-        spans = runner.run_stage(
-            "spans",
-            _spans,
-            upstream_fingerprint=runner.fingerprint("span_cand")
-            + "|" + runner.fingerprint("verify"),
-        )
+        spans = runner.run_stage("spans", _spans, inputs=("span_cand", "verify"))
         span_edges = spans.df.select("a", "b")
         n_span_edges = spans.rows
     else:
         span_edges = None
         n_span_edges = 0
 
+    cc_inputs = ("verify", "exact") + (("spans",) if cfg.span_enabled else ())
     # Q1: no edges at all -> skip CC, clusters are all singletons
     if exact.rows == 0 and verified.rows == 0 and n_span_edges == 0:
         empty_cc = canon.df.select(
@@ -266,9 +260,7 @@ def near_dup_pipeline(
         ).limit(0)
         cc = runner.skip_stage(
             "cc", empty_cc, "no dup evidence (NO DUPLICATES FOUND)",
-            upstream_fingerprint=runner.fingerprint("verify")
-            + "|" + runner.fingerprint("exact")
-            + ("|" + runner.fingerprint("spans") if cfg.span_enabled else ""),
+            inputs=cc_inputs,
         )
     else:
         def _cc() -> DataFrame:
@@ -279,16 +271,11 @@ def near_dup_pipeline(
                 edges = edges.unionByName(span_edges)
             return connected_components(edges, cfg.cc_max_iterations)
 
-        cc = runner.run_stage(
-            "cc",
-            _cc,
-            upstream_fingerprint=runner.fingerprint("verify") + "|" + runner.fingerprint("exact")
-            + ("|" + runner.fingerprint("spans") if cfg.span_enabled else ""),
-        )
+        cc = runner.run_stage("cc", _cc, inputs=cc_inputs)
 
     clusters = runner.run_stage(
         "clusters",
         lambda: assemble_clusters(canon.df, cc.df, id_col),
-        upstream_fingerprint=runner.fingerprint("cc"),
+        inputs=("cc",),
     )
     return clusters.df, runner

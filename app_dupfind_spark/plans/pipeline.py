@@ -10,21 +10,23 @@ Graft realization (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics"):
 
 - Each stage is a pure DataFrame -> DataFrame function.
-- Stage outputs are checkpointed through a thin `TableIO` seam: an
-  Iceberg catalog when configured, else plain parquet + a JSON manifest
-  (this sandbox has no Iceberg runtime jar; the seam keeps the call
-  sites identical).
+- Stage outputs go to a store, `make_table_io(persist_mode)`: parquet +
+  a JSON manifest, an Iceberg catalog, or localCheckpoints that never
+  resume.  All three share `manifest`/`write`/`read`, so `run_stage`
+  has one path.
 - The manifest pins: config hash, upstream fingerprint, row count, wall
   seconds, and PER-PARTITION lineage rows (partition id, rows).  A
   resume replays a stage only if its manifest is missing or its config
   hash / upstream fingerprint changed — otherwise the checkpoint is
   read back, like the reference's tests resuming from a golden IR.
+- A stage names its inputs (as the reference hands `prune`'s output to
+  `weed`); its upstream fingerprint is the '|'-join of theirs.
   Fingerprints chain the write timestamp, so a re-run of any upstream
   stage (new input, forced rebuild) transitively invalidates everything
-  below it; the pipeline's root fingerprint is a CONTENT fingerprint of
-  the source table (count + id-hash sum, or a caller-supplied snapshot
-  id), so pointing the same checkpoint dir at a different input can
-  never silently resume the old corpus.
+  below it; the root's input is the source table (`add_source`), whose
+  fingerprint is a CONTENT fingerprint (count + id-hash sum, or a
+  caller-supplied snapshot id), so pointing the same checkpoint dir at
+  a different input can never silently resume the old corpus.
 - In-flight metrics via `df.observe()` (A6, the reference's
   scan/size-dup/real-dup counter triplet, App.pm:424-429): counters
   ride the stage's own action — no second pass over the data.  An
@@ -143,6 +145,7 @@ class IcebergTableIO:
     """
 
     MANIFEST_PROP = "dupfind.manifest"
+    resumes = True
 
     def __init__(
         self, spark: SparkSession, catalog: str, namespace: str = "dupfind"
@@ -199,19 +202,21 @@ class IcebergTableIO:
 
 def make_table_io(
     spark: SparkSession,
-    checkpoint_dir: str | Path,
-    table_format: str = "parquet",
+    checkpoint_dir: str | Path | None,
+    persist_mode: str = "parquet",
     iceberg_catalog: str | None = None,
     iceberg_namespace: str = "dupfind",
 ):
-    """Storage-seam selection, config-gated: `table_format='iceberg'`
-    (+ catalog name) binds the stage checkpoints to an Iceberg catalog;
-    anything else is the local parquet+manifest seam.  Call sites are
-    identical either way — a real cluster switches by config alone."""
-    if table_format == "iceberg":
+    """The stage store for `persist_mode`, the one place that reads and
+    validates it: 'parquet' (`TableIO`), 'iceberg' (`IcebergTableIO`;
+    a real cluster switches by config alone) or 'memory' (`MemoryStore`,
+    no `checkpoint_dir`)."""
+    if persist_mode == "memory":
+        return MemoryStore()
+    if persist_mode == "iceberg":
         if not iceberg_catalog:
             raise ValueError(
-                "table_format='iceberg' requires iceberg_catalog "
+                "persist_mode='iceberg' requires iceberg_catalog "
                 "(a configured Spark catalog name)"
             )
         if not iceberg_runtime_available(spark):
@@ -220,6 +225,10 @@ def make_table_io(
                 "iceberg-spark-runtime + catalog conf (SURVEY §7)"
             )
         return IcebergTableIO(spark, iceberg_catalog, iceberg_namespace)
+    if persist_mode != "parquet":
+        raise ValueError(f"persist_mode={persist_mode!r}; valid: {PERSIST_MODES}")
+    if checkpoint_dir is None:
+        raise ValueError("persist_mode='parquet' requires a checkpoint_dir")
     return TableIO(spark, checkpoint_dir)
 
 
@@ -229,9 +238,12 @@ class TableIO:
     writes are `writeTo(...).createOrReplace()` snapshot commits and
     deletes become MERGE/DELETE (operators/report.py)."""
 
+    resumes = True
+
     def __init__(self, spark: SparkSession, root: str | Path):
         self.spark = spark
         self.root = Path(root)
+        self.root.mkdir(parents=True, exist_ok=True)
 
     def path(self, name: str) -> Path:
         return self.root / name
@@ -260,6 +272,40 @@ class TableIO:
         return self.spark.read.parquet(str(self.path(name) / "data"))
 
 
+class MemoryStore:
+    """Stage outputs as eager localCheckpoints, rows counted by
+    `observe()` on that single scan: the same stage graph, no storage
+    I/O, no directory.  Manifests live in this object, so a new runner
+    never resumes.  For the query surface and micro-benchmarks; NOTE
+    the round-3 measurement (BASELINE.md): at 3M docs parquet is FASTER
+    at high parallelism (571 s vs 929 s at local[8]) because
+    block-manager-resident outputs pressure the single JVM's heap when
+    all cores allocate, while parquet rides the OS page cache."""
+
+    resumes = False
+
+    def __init__(self):
+        self._manifests: dict[str, dict] = {}
+        self._frames: dict[str, DataFrame] = {}
+
+    def manifest(self, name: str) -> dict | None:
+        return self._manifests.get(name)
+
+    def write(self, name: str, df: DataFrame, meta: dict) -> dict:
+        rows = Observation()
+        self._frames[name] = df.observe(
+            rows, F.count(F.lit(1)).alias("rows")
+        ).localCheckpoint(eager=True)
+        manifest = dict(meta)
+        manifest["rows"] = int(rows.get["rows"])
+        manifest["written_at"] = time.time()
+        self._manifests[name] = manifest
+        return manifest
+
+    def read(self, name: str) -> DataFrame:
+        return self._frames[name]
+
+
 @dataclass
 class StageResult:
     name: str
@@ -274,50 +320,33 @@ class StageResult:
 class PipelineRunner:
     spark: SparkSession
     cfg: DedupConfig
-    checkpoint_dir: str | Path
+    # None is accepted by the memory store only
+    checkpoint_dir: str | Path | None
     metrics: list[dict] = field(default_factory=list)
     # named in-flight counters per stage, populated from df.observe()
     # observations registered during the stage's build (A6)
     counters: dict[str, dict[str, float]] = field(default_factory=dict)
-    # "parquet": durable checkpoints + manifests + resume (production).
-    # "iceberg": same contract against an Iceberg catalog (atomic
-    # snapshot commits, manifest in table properties) — requires the
-    # runtime jar + `iceberg_catalog`; identical stage graph.
-    # "memory": localCheckpoint per stage — same stage graph and
-    # materialization points, no durable storage, NO resume.  For
-    # micro-benchmarks that want zero storage I/O in the loop; NOTE the
-    # round-3 measurement (BASELINE.md): at 3M docs the parquet path is
-    # FASTER at high parallelism (571 s vs 929 s at local[8]) because
-    # block-manager-resident stage outputs pressure the single JVM's
-    # heap exactly when all cores allocate, while parquet rides the OS
-    # page cache — the durable path is also the fast path.
+    # the stage store, see make_table_io: "parquet" (durable, resumes),
+    # "iceberg" (same contract in a catalog) or "memory" (no resume)
     persist_mode: str = "parquet"
     iceberg_catalog: str | None = None
     iceberg_namespace: str = "dupfind"
     _pending_obs: dict[str, list[tuple[str, Observation]]] = field(
         default_factory=dict, repr=False
     )
-    # stages skipped THIS run (Q1): fingerprint() must not fall through
-    # to a stale manifest from an earlier, non-skipped run
-    _skip_fp: dict[str, str] = field(default_factory=dict, repr=False)
+    # fingerprints of the sources and of the stages this run ran,
+    # resumed or skipped: the only thing `fingerprint` reads
+    _fps: dict[str, str] = field(default_factory=dict, repr=False)
 
     def __post_init__(self):
-        if self.persist_mode not in PERSIST_MODES:
-            raise ValueError(
-                f"persist_mode={self.persist_mode!r}; valid: {PERSIST_MODES}"
-            )
         self.io = make_table_io(
             self.spark,
             self.checkpoint_dir,
-            table_format=(
-                "iceberg" if self.persist_mode == "iceberg" else "parquet"
-            ),
+            self.persist_mode,
             iceberg_catalog=self.iceberg_catalog,
             iceberg_namespace=self.iceberg_namespace,
         )
-        if self.persist_mode != "iceberg":
-            Path(self.checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if not barriers.is_local_master(self.spark):
+        if self.checkpoint_dir is not None and not barriers.is_local_master(self.spark):
             # intra-stage barriers off a local master are reliable
             # checkpoints and need an RDD checkpoint dir; nest it under
             # the stage-checkpoint root (on a cluster both live on the
@@ -359,14 +388,27 @@ class PipelineRunner:
                 if v is not None:
                     slot[k] = v
 
-    def _rows_in(self, stage: str):
-        return self.counters.get(stage, {}).get("rows_in")
-
     # ---- stage execution --------------------------------------------
+
+    def add_source(self, name: str, fingerprint: str) -> None:
+        """Name a source table, with its fingerprint, as a stage input:
+        the root stage lists it in `inputs`."""
+        self._fps[name] = fingerprint
+
+    def fingerprint(self, name: str) -> str:
+        """Chainable fingerprint of a source, or of a stage this run ran,
+        resumed or skipped (else KeyError): name, config hash, row count
+        AND write timestamp — any upstream re-run (even to identical
+        rows) transitively invalidates downstream resumes (staleness is
+        never silent; the cost is one conservative rebuild)."""
+        return self._fps[name]
+
+    def _upstream(self, inputs: tuple[str, ...]) -> str:
+        return "|".join(self.fingerprint(i) for i in inputs)
 
     def skip_stage(
         self, name: str, empty_df: DataFrame, reason: str,
-        upstream_fingerprint: str = "",
+        inputs: tuple[str, ...] = (),
     ) -> StageResult:
         """Q1 early-exit: record a skipped stage (empty upstream) and
         pass an empty, correctly-typed frame downstream — the
@@ -374,11 +416,11 @@ class PipelineRunner:
         (App.pm:268-319) without killing the independent branches.
 
         The stage's fingerprint becomes `<name>:skipped:<upstream>` for
-        the rest of this run, chained from the upstream fingerprints
-        that caused the skip — so downstream resumes can neither reuse
-        a stale manifest of this stage nor survive the empty->non-empty
-        transition unnoticed."""
-        self._skip_fp[name] = f"{name}:skipped:{upstream_fingerprint}"
+        the rest of this run, chained from the inputs that caused the
+        skip — so downstream resumes can neither reuse a stale manifest
+        of this stage nor survive the empty->non-empty transition
+        unnoticed."""
+        self._fps[name] = f"{name}:skipped:{self._upstream(inputs)}"
         self.metrics.append(
             {"stage": name, "rows_out": 0, "seconds": 0.0, "resumed": False,
              "skipped": True, "reason": reason}
@@ -389,75 +431,30 @@ class PipelineRunner:
         self,
         name: str,
         fn: Callable[[], DataFrame],
-        upstream_fingerprint: str = "",
+        inputs: tuple[str, ...] = (),
         force: bool = False,
     ) -> StageResult:
-        """Run (or resume) one checkpointed stage."""
-        if self.persist_mode == "memory":
-            t0 = time.time()
-            # row count rides the checkpoint materialization job via
-            # observe() instead of a second count() job per stage (r6):
-            # the observed node is evaluated exactly once (the eager
-            # localCheckpoint IS the single scan), so the count is
-            # exact — same discipline as the parquet seam, which reads
-            # counts from footers without a second pass.
-            row_obs = Observation()
-            out = fn().observe(
-                row_obs, F.count(F.lit(1)).alias("rows")
-            ).localCheckpoint(eager=True)
-            rows = int(row_obs.get["rows"])
-            self._harvest(name)
-            dt = time.time() - t0
-            self.metrics.append(
-                {"stage": name, "rows_out": rows, "seconds": round(dt, 3),
-                 "resumed": False, "skipped": False,
-                 "rows_in": self._rows_in(name)}
-            )
-            return StageResult(name, out, dt, rows, False)
-        cfg_hash = self.cfg.config_hash()
-        existing = self.io.manifest(name)
-        if (
-            not force
-            and existing
-            and existing.get("config_hash") == cfg_hash
-            and existing.get("upstream") == upstream_fingerprint
-        ):
-            df = self.io.read(name)
-            self.metrics.append(
-                {"stage": name, "rows_out": existing["rows"], "seconds": 0.0,
-                 "resumed": True, "skipped": False}
-            )
-            return StageResult(name, df, 0.0, existing["rows"], True)
-
-        t0 = time.time()
-        out = fn()
-        manifest = self.io.write(
-            name,
-            out,
-            {"config_hash": cfg_hash, "upstream": upstream_fingerprint,
-             "stage": name},
-        )
-        self._harvest(name)
-        dt = time.time() - t0
-        self.metrics.append(
-            {"stage": name, "rows_out": manifest["rows"], "seconds": round(dt, 3),
-             "resumed": False, "skipped": False, "rows_in": self._rows_in(name)}
-        )
-        return StageResult(name, self.io.read(name), dt, manifest["rows"], False)
-
-    def fingerprint(self, name: str) -> str:
-        """Chainable upstream fingerprint of a completed stage: name,
-        config hash, row count AND write timestamp — any upstream
-        re-run (even to identical rows) transitively invalidates
-        downstream resumes (staleness is never silent; the cost is one
-        conservative rebuild)."""
-        if name in self._skip_fp:
-            return self._skip_fp[name]
+        """Run (or resume) one checkpointed stage: its manifest resumes
+        it when the config hash and the upstream (the '|'-join of the
+        fingerprints of `inputs`) match."""
+        meta = {"config_hash": self.cfg.config_hash(),
+                "upstream": self._upstream(inputs), "stage": name}
         m = self.io.manifest(name) or {}
-        return (
-            f"{name}:{m.get('config_hash','')}:{m.get('rows','')}"
-            f":{m.get('written_at','')}"
+        resumed = not force and all(
+            m.get(k) == meta[k] for k in ("config_hash", "upstream")
         )
+        t0 = time.time()
+        if not resumed:
+            m = self.io.write(name, fn(), meta)
+            self._harvest(name)
+        dt = 0.0 if resumed else time.time() - t0
+        self._fps[name] = f"{name}:{m['config_hash']}:{m['rows']}:{m['written_at']}"
+        self.metrics.append(
+            {"stage": name, "rows_out": m["rows"], "seconds": round(dt, 3),
+             "resumed": resumed, "skipped": False,
+             "rows_in": self.counters.get(name, {}).get("rows_in")}
+        )
+        return StageResult(name, self.io.read(name), dt, m["rows"], resumed)
 
     def metrics_df(self) -> DataFrame:
         return self.spark.createDataFrame(

@@ -29,7 +29,6 @@ duplicates and the oracle replicates the planting literally.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -265,21 +264,20 @@ def q_near_dup_clusters(spark, sf_dir):
     """Flagship: full exact+near pipeline over documents (LSH candidates,
     exact-Jaccard gate at 0.7, exact-dup union, CC)."""
     d = _docs(spark, sf_dir).withColumn("__ord", F.col("doc_id"))
-    # memory-mode checkpoints + pinned source fingerprint: the query
-    # surface creates a FRESH checkpoint dir per call, so durable
-    # parquet round-trips and the input-content scan buy nothing here
-    # (resume + staleness are exercised by the job entrypoint and the
-    # pipeline tests); the stage graph and barriers are identical
+    # the memory store: a query never resumes, so durable parquet
+    # round-trips, a checkpoint dir and the input-content scan buy
+    # nothing here (resume + staleness are exercised by the job
+    # entrypoint and the pipeline tests); the stage graph and barriers
+    # are identical
     clusters, _ = near_dup_pipeline(
         spark,
         d,
         NEAR_CFG,
-        tempfile.mkdtemp(prefix="ndp_q_"),
+        None,
         id_col="doc_id",
         text_col="text",
         order_col="__ord",
         persist_mode="memory",
-        source_fingerprint="driver-query-fresh-dir",
     )
     return clusters.select("doc_id", "cluster_id", "is_canonical")
 

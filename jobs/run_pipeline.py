@@ -83,9 +83,9 @@ def main() -> None:
     ap.add_argument(
         "--persist-mode", default="parquet",
         choices=PERSIST_MODES,
-        help="stage-checkpoint storage: parquet+manifest (default), "
+        help="stage store (make_table_io): parquet+manifest (default), "
              "an Iceberg catalog (needs --iceberg-catalog + runtime "
-             "jar), or in-memory (no resume)",
+             "jar), or in-memory localCheckpoints (never resumes)",
     )
     ap.add_argument("--iceberg-catalog", default=None)
     ap.add_argument("--iceberg-namespace", default="dupfind")

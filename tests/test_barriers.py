@@ -8,7 +8,6 @@ master, so the non-local cases patch `barriers.is_local_master`."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -47,8 +46,8 @@ def test_reliable_requires_checkpoint_dir(spark, non_local):
         materialize_barrier(_df(spark))
 
 
-def test_reliable_checkpoints_when_dir_set(spark, non_local):
-    ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
+def test_reliable_checkpoints_when_dir_set(spark, tmp_path, non_local):
+    ensure_checkpoint_dir(spark, str(tmp_path))
     out = materialize_barrier(_df(spark))
     assert out.count() == 100
     plan = out._jdf.queryExecution().optimizedPlan().toString()
@@ -83,13 +82,13 @@ def test_barrier_follows_the_master(spark, tmp_path, monkeypatch):
     assert len(_new_rdd_dirs(spark, tmp_path, barrier)) == 1
 
 
-def test_connected_components_under_reliable_barriers(spark, non_local):
+def test_connected_components_under_reliable_barriers(spark, tmp_path, non_local):
     # the iterative stage's per-round lineage cut follows the master:
     # off a local master each round is durable (recovery replays at
     # most one round instead of rewinding the whole stage)
     from app_dupfind_spark.operators.components import connected_components
 
-    ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
+    ensure_checkpoint_dir(spark, str(tmp_path))
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (5, 5)], "a long, b long"
     )
@@ -100,13 +99,15 @@ def test_connected_components_under_reliable_barriers(spark, non_local):
     assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_cascade_end_to_end_under_reliable_barriers(spark, pages, monkeypatch):
+def test_cascade_end_to_end_under_reliable_barriers(
+    spark, pages, tmp_path, monkeypatch
+):
     # the exact cascade's skinny-projection barrier is the hottest
     # site; the full operator must produce identical dup membership
     # under reliable barriers
     from app_dupfind_spark.operators.exact import exact_dup_cascade
 
-    ensure_checkpoint_dir(spark, tempfile.mkdtemp(prefix="rdd_ckpt_"))
+    ensure_checkpoint_dir(spark, str(tmp_path))
     base = exact_dup_cascade(pages, DedupConfig(), "url", "text")
     monkeypatch.setattr(barriers, "is_local_master", lambda spark: False)
     rel = exact_dup_cascade(pages, DedupConfig(), "url", "text")

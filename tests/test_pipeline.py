@@ -108,6 +108,117 @@ def test_manifest_has_partition_lineage(result):
     assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
 
 
+def test_manifest_upstreams_follow_the_stage_graph(spark, pages, result):
+    """Every manifest's upstream is the '|'-join of its inputs'
+    fingerprints, `<stage>:<config_hash>:<rows>:<written_at>` of the
+    manifests on disk, in the order checkpoint dirs have always been
+    written with (so they keep resuming); the root's is the input's
+    content fingerprint."""
+    import json
+
+    from app_dupfind_spark.plans.pipeline import input_fingerprint
+
+    _, _, ckpt = result
+    m = {
+        s: json.loads((ckpt / s / "_manifest.json").read_text())
+        for s in ["canon", "exact", "sigs", "cands", "span_cand", "verify",
+                  "spans", "cc", "clusters"]
+    }
+
+    def fp(s):
+        return f"{s}:{m[s]['config_hash']}:{m[s]['rows']}:{m[s]['written_at']}"
+
+    expected = {
+        "canon": input_fingerprint(pages, "url"),
+        "exact": fp("canon"),
+        "sigs": fp("canon"),
+        "cands": fp("sigs"),
+        "span_cand": fp("canon"),
+        "verify": fp("cands"),
+        "spans": fp("span_cand") + "|" + fp("verify"),
+        "cc": fp("verify") + "|" + fp("exact") + "|" + fp("spans"),
+        "clusters": fp("cc"),
+    }
+    assert {s: m[s]["upstream"] for s in m} == expected
+
+
+def test_failed_stage_leaves_no_manifest_and_resumes_upstream(
+    spark, pages, result, tmp_path, monkeypatch
+):
+    """A stage that raises inside the concurrent pool fails the run and
+    writes no manifest; a re-run on the same dir resumes the stages
+    that finished (canon, exact, sigs -> cands) and runs the failed
+    stage and everything below it, to the same clusters."""
+    from app_dupfind_spark.operators import dedup_pipeline
+
+    def lost(*args, **kwargs):
+        raise RuntimeError("span index lost")
+
+    ckpt = tmp_path / "ck_fault"
+    with monkeypatch.context() as m:
+        m.setattr(dedup_pipeline, "span_candidates", lost)
+        with pytest.raises(RuntimeError, match="span index lost"):
+            near_dup_pipeline(spark, pages, DedupConfig(), str(ckpt))
+    assert not (ckpt / "span_cand" / "_manifest.json").exists()
+
+    clusters, runner = near_dup_pipeline(spark, pages, DedupConfig(), str(ckpt))
+    assert {m["stage"]: m["resumed"] for m in runner.metrics} == {
+        "canon": True, "exact": True, "sigs": True, "cands": True,
+        "span_cand": False, "verify": False, "spans": False, "cc": False,
+        "clusters": False,
+    }
+    rows1, _, _ = result
+    rows2 = [(r["url"], r["cluster_id"]) for r in clusters.collect()]
+    assert sorted(rows1) == sorted(rows2)
+
+
+def test_memory_pipeline_takes_no_checkpoint_dir(spark, pages, result, monkeypatch):
+    """persist_mode='memory' runs with checkpoint_dir=None: it creates
+    no directory, skips the input-content scan (nothing can resume),
+    and a second runner resumes nothing."""
+    import os
+
+    from app_dupfind_spark.operators import dedup_pipeline
+
+    made = []
+    real_mkdir = os.mkdir
+
+    def spy_mkdir(path, *args, **kwargs):
+        made.append(path)
+        return real_mkdir(path, *args, **kwargs)
+
+    def no_scan(*args, **kwargs):
+        raise AssertionError("input_fingerprint called")
+
+    monkeypatch.setattr(os, "mkdir", spy_mkdir)
+    monkeypatch.setattr(dedup_pipeline, "input_fingerprint", no_scan)
+    rows1, _, _ = result
+    for _ in range(2):
+        clusters, runner = near_dup_pipeline(
+            spark, pages, DedupConfig(), None, persist_mode="memory"
+        )
+        assert not any(m["resumed"] for m in runner.metrics)
+        rows = [(r["url"], r["cluster_id"]) for r in clusters.collect()]
+        assert sorted(rows) == sorted(rows1)
+    assert made == []
+
+
+def test_unknown_stage_input_raises(spark):
+    """A stage may only name inputs this runner ran, resumed, skipped
+    or was given as a source; anything else is a KeyError, never a
+    silently empty fingerprint."""
+    from app_dupfind_spark.plans.pipeline import PipelineRunner
+
+    runner = PipelineRunner(spark, DedupConfig(), None, persist_mode="memory")
+    runner.add_source("pages", "input:1:0")
+    runner.run_stage("a", lambda: spark.range(1), inputs=("pages",))
+    with pytest.raises(KeyError, match="never_ran"):
+        runner.run_stage("b", lambda: spark.range(1), inputs=("a", "never_ran"))
+    with pytest.raises(KeyError, match="never_ran"):
+        runner.skip_stage("c", spark.range(0), "empty", inputs=("never_ran",))
+    assert [m["stage"] for m in runner.metrics] == ["a"]
+
+
 def test_partial_resume_recomputes_only_downstream(spark, pages, tmp_path):
     """Kill-and-resume at a stage boundary (SURVEY §5 item 5): wiping
     one mid-pipeline checkpoint replays that stage and everything

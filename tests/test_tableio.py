@@ -1,4 +1,4 @@
-"""Storage-seam selection: parquet TableIO vs Iceberg branch.
+"""Storage-seam selection: parquet TableIO, MemoryStore, Iceberg branch.
 
 The sandbox ships no iceberg-spark-runtime jar (SURVEY §7), so the
 Iceberg write path cannot execute here; these tests pin the seam's
@@ -17,6 +17,7 @@ from app_dupfind_spark.config import DedupConfig
 from app_dupfind_spark.operators.report import keep_canonical_merge_sql
 from app_dupfind_spark.plans.pipeline import (
     IcebergTableIO,
+    MemoryStore,
     PipelineRunner,
     TableIO,
     iceberg_runtime_available,
@@ -24,23 +25,37 @@ from app_dupfind_spark.plans.pipeline import (
 )
 
 
-def test_default_seam_is_parquet(spark):
-    io = make_table_io(spark, tempfile.mkdtemp())
+def test_default_seam_is_parquet(spark, tmp_path):
+    io = make_table_io(spark, tmp_path)
     assert isinstance(io, TableIO)
+    assert io.resumes
 
 
-def test_iceberg_seam_requires_catalog(spark):
+def test_parquet_seam_requires_checkpoint_dir(spark):
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        make_table_io(spark, None, persist_mode="parquet")
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        PipelineRunner(spark, DedupConfig(), None)
+
+
+def test_memory_seam_takes_no_dir(spark):
+    io = make_table_io(spark, None, persist_mode="memory")
+    assert isinstance(io, MemoryStore)
+    assert not io.resumes
+
+
+def test_iceberg_seam_requires_catalog(spark, tmp_path):
     with pytest.raises(ValueError, match="iceberg_catalog"):
-        make_table_io(spark, tempfile.mkdtemp(), table_format="iceberg")
+        make_table_io(spark, tmp_path, persist_mode="iceberg")
 
 
-def test_iceberg_seam_selection(spark):
+def test_iceberg_seam_selection(spark, tmp_path):
     """With a catalog named, selection reaches the Iceberg branch: a
     clear runtime-jar error in this sandbox, a real IcebergTableIO
     when the jar is present."""
     if iceberg_runtime_available(spark):
         io = make_table_io(
-            spark, tempfile.mkdtemp(), table_format="iceberg",
+            spark, tmp_path, persist_mode="iceberg",
             iceberg_catalog="local",
         )
         assert isinstance(io, IcebergTableIO)
@@ -48,12 +63,12 @@ def test_iceberg_seam_selection(spark):
     else:
         with pytest.raises(RuntimeError, match="runtime jar"):
             make_table_io(
-                spark, tempfile.mkdtemp(), table_format="iceberg",
+                spark, tmp_path, persist_mode="iceberg",
                 iceberg_catalog="local",
             )
 
 
-def test_runner_iceberg_mode_routes_through_seam(spark):
+def test_runner_iceberg_mode_routes_through_seam(spark, tmp_path):
     """persist_mode='iceberg' on the runner selects the catalog seam
     (and therefore fails loudly without the jar — never a silent
     parquet fallback)."""
@@ -61,7 +76,7 @@ def test_runner_iceberg_mode_routes_through_seam(spark):
         pytest.skip("runtime present: covered by test_iceberg_round_trip")
     with pytest.raises(RuntimeError, match="runtime jar"):
         PipelineRunner(
-            spark, DedupConfig(), tempfile.mkdtemp(),
+            spark, DedupConfig(), tmp_path,
             persist_mode="iceberg", iceberg_catalog="local",
         )
 
@@ -108,11 +123,11 @@ def test_manifest_blob_survives_sql_hostile_values():
     "not config.getoption('--run-iceberg', default=False)",
     reason="needs iceberg-spark-runtime jar + catalog conf",
 )
-def test_iceberg_round_trip(spark):
+def test_iceberg_round_trip(spark, tmp_path):
     """Write/read/manifest/fingerprint round-trip — runnable on any
     cluster with the runtime jar (spark.sql.catalog.local=...hadoop)."""
     io = make_table_io(
-        spark, tempfile.mkdtemp(), table_format="iceberg",
+        spark, tmp_path, persist_mode="iceberg",
         iceberg_catalog="local",
     )
     df = spark.range(10).withColumnRenamed("id", "doc_id")
