@@ -56,8 +56,9 @@ class DedupConfig:
     lsh_rows: int = 4
     # buckets larger than this are truncated (boilerplate guard; at web
     # scale a mega-bucket is a stop-shingle artifact, not a dup cluster).
-    # candidate_pairs returns them as a skew report, which the pipeline
-    # drops: a truncation is silent today (ROADMAP direction 3).
+    # bucket_pairs returns them as a skew report, which the pipeline
+    # drops (it keeps bucket_pairs(...)[0]): a truncation is silent
+    # today (ROADMAP direction 3).
     lsh_bucket_cap: int = 2000
 
     # --- verification ---

@@ -4,15 +4,25 @@ The reference's clusters are single-key equivalence classes (one digest
 = one cluster, Common.pm:187) so closure is trivial there; near-dup
 pairs form an arbitrary graph and need real CC.
 
-Primary algorithm: alternating large-star / small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14 — named by the
-north_star).  Each round is two DataFrame aggregations + joins; the
+Distributed algorithm: alternating large-star / small-star (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14 — named by
+the north_star).  Each round is two DataFrame aggregations + joins; the
 edge set converges to a star forest where every node points at its
-component minimum.  O(log^2 n) rounds; dup clusters are near-cliques so
-it converges in 2–3 rounds in practice.
+component minimum, in O(log^2 n) rounds.  Every round pays driver
+planning and job latency whatever its size.
 
-A simpler O(diameter) min-label propagation (hash-min) lives in
-tests/test_components.py as a cross-check.
+Driver finish: once the edge count is at or below
+`DRIVER_FINISH_MAX_EDGES` (checked on the input and after every round,
+from the count the fixpoint checksum already returns) the edges are
+collected through Arrow and finished in numpy (`_driver_components`):
+dense ids by `np.unique`, then min-label hooking plus pointer jumping.
+Dup graphs are small near-cliques, so a typical run takes no star
+round at all; a large graph runs star rounds until it shrinks below
+the bound, and star rounds keep the node set and the partition, so
+finishing part-way gives the same components.
+
+A simpler O(diameter) min-label propagation (hash-min) and a python
+union-find live in tests/test_components.py as cross-checks.
 
 Scale notes:
 - A lazy barrier after every round cuts the lineage — iterative
@@ -26,10 +36,21 @@ Scale notes:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.plans.barriers import materialize_barrier
+
+DRIVER_FINISH_MAX_EDGES = 1_000_000
+"""Largest edge set `connected_components` finishes on the driver.
+
+Driver memory is roughly edges x (2 x id bytes + 16) bytes: both edge
+ends as ids plus their dense int64 ids, ~32 MB at 1M long-id edges
+(each hooking pass adds ~32 B/edge of transient arrays).  Url-string
+ids are Python objects on the driver, ~50-100 B each.  Not a
+`DedupConfig` field: it changes no output row."""
 
 
 def _canonical_edges(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -109,37 +130,9 @@ def _edge_checksum(edges: DataFrame) -> tuple[int, int, int]:
     return row["n"], row["xr"], row["chk"]
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 50,
-    a: str = "a",
-    b: str = "b",
-) -> DataFrame:
-    """(node, component) for every node appearing in `pairs`; component
-    is the minimum node id of the connected component (matching the
-    reference's min-member cluster identity, Common.pm:248-251).
-    Raises RuntimeError when `max_iterations` rounds pass without a
-    fixpoint."""
-    # lazy barrier: the checksum action right after it both
-    # materializes the barrier and reads the aggregate — ONE Spark
-    # job per iteration instead of two (driver job latency is the fixed
-    # cost that caps scaling efficiency of the iterative stage)
-    edges = materialize_barrier(_canonical_edges(pairs, a, b), eager=False)
-    prev = _edge_checksum(edges)
-    for _ in range(max_iterations):
-        edges = materialize_barrier(_small_star(_large_star(edges)), eager=False)
-        cur = _edge_checksum(edges)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        # unconverged edges are not a star forest: labelling them would
-        # split components silently
-        raise RuntimeError(
-            f"connected_components did not reach a fixpoint in "
-            f"{max_iterations} rounds; raise max_iterations"
-        )
-    # converged: every edge points node -> component min (or min -> min)
+def _star_labels(edges: DataFrame) -> DataFrame:
+    """(node, component) of a star forest: every edge points node ->
+    component min (or min -> min)."""
     sym = edges.unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -147,3 +140,88 @@ def connected_components(
         F.col("u").alias("node"), "component"
     )
 
+
+def _min_labels(eu: np.ndarray, ev: np.ndarray, n_nodes: int) -> np.ndarray:
+    """Component min of every dense node id 0..n_nodes-1, given edges
+    (eu[i], ev[i]).
+
+    Invariant: label[x] <= x and label[x] lies in x's component.  Each
+    pass hooks both edge ends and both of their labels to the smaller
+    label, then jumps pointers to the root.  A pass that changes
+    nothing leaves equal labels across every edge and label[label] ==
+    label, so each component carries one self-labelled node: its min."""
+    label = np.arange(n_nodes)
+    while True:
+        prev = label.copy()
+        lu, lv = label[eu], label[ev]
+        low = np.minimum(lu, lv)
+        np.minimum.at(label, np.concatenate([eu, ev, lu, lv]), np.tile(low, 4))
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+        if np.array_equal(label, prev):
+            return label
+
+
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """(node, component) of a small edge set, computed in numpy on the
+    driver; one partition, node/component typed like the input ids."""
+    pdf = edges.toPandas()
+    n = len(pdf)
+    # sorted: the smallest dense id of a component is its min node
+    nodes, dense = np.unique(
+        np.concatenate([pdf["u"].to_numpy(), pdf["v"].to_numpy()]),
+        return_inverse=True,
+    )
+    label = _min_labels(dense[:n], dense[n:], len(nodes))
+    id_type = edges.schema["u"].dataType.simpleString()
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": nodes[label]}),
+        f"node {id_type}, component {id_type}",
+    ).coalesce(1)
+
+
+def connected_components(
+    pairs: DataFrame,
+    max_iterations: int = 50,
+    a: str = "a",
+    b: str = "b",
+    counters: dict[str, float] | None = None,
+) -> DataFrame:
+    """(node, component) for every node appearing in `pairs`; component
+    is the minimum node id of the connected component (matching the
+    reference's min-member cluster identity, Common.pm:248-251).
+
+    Star rounds run while the edge set is larger than
+    `DRIVER_FINISH_MAX_EDGES`; the rest is finished on the driver.
+    Raises RuntimeError when `max_iterations` star rounds pass without
+    a fixpoint or a small enough edge set.  `counters`, when given,
+    receives `rounds` (star rounds run) and `driver_edges` (edges
+    finished on the driver, 0 if none)."""
+    # lazy barrier: the checksum action right after it both
+    # materializes the barrier and reads the aggregate — ONE Spark
+    # job per iteration instead of two (driver job latency is the fixed
+    # cost that caps scaling efficiency of the iterative stage)
+    edges = materialize_barrier(_canonical_edges(pairs, a, b), eager=False)
+    prev = _edge_checksum(edges)
+    stats = counters if counters is not None else {}
+    rounds = 0
+    while prev[0] > DRIVER_FINISH_MAX_EDGES:
+        if rounds == max_iterations:
+            # unconverged edges are not a star forest: labelling them
+            # would split components silently
+            raise RuntimeError(
+                f"connected_components did not reach a fixpoint in "
+                f"{max_iterations} rounds; raise max_iterations"
+            )
+        edges = materialize_barrier(_small_star(_large_star(edges)), eager=False)
+        rounds += 1
+        cur = _edge_checksum(edges)
+        if cur == prev:
+            stats.update(rounds=rounds, driver_edges=0)
+            return _star_labels(edges)
+        prev = cur
+    stats.update(rounds=rounds, driver_edges=prev[0])
+    return _driver_components(edges)

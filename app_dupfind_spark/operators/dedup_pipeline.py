@@ -34,7 +34,9 @@ EXACT dup set must NOT exit: the near-dup branch is independent.
 
 A6 run counters (App.pm:424-429 scan/size-dup/real-dup triplet): ride
 the stages' own actions via df.observe() — see runner.counters /
-counters_df(); no second pass over any stage input.
+counters_df(); no second pass over any stage input.  The cc stage adds
+`rounds` (star rounds run) and `driver_edges` (edges finished on the
+driver) from connected_components.
 """
 
 from __future__ import annotations
@@ -269,7 +271,10 @@ def near_dup_pipeline(
             edges = near_edges.unionByName(ex_edges)
             if span_edges is not None:
                 edges = edges.unionByName(span_edges)
-            return connected_components(edges, cfg.cc_max_iterations)
+            return connected_components(
+                edges, cfg.cc_max_iterations,
+                counters=runner.counters.setdefault("cc", {}),
+            )
 
         cc = runner.run_stage("cc", _cc, inputs=cc_inputs)
 

@@ -82,21 +82,32 @@ def test_barrier_follows_the_master(spark, tmp_path, monkeypatch):
     assert len(_new_rdd_dirs(spark, tmp_path, barrier)) == 1
 
 
-def test_connected_components_under_reliable_barriers(spark, tmp_path, non_local):
+def test_connected_components_under_reliable_barriers(
+    spark, tmp_path, non_local, monkeypatch
+):
     # the iterative stage's per-round lineage cut follows the master:
     # off a local master each round is durable (recovery replays at
-    # most one round instead of rewinding the whole stage)
-    from app_dupfind_spark.operators.components import connected_components
+    # most one round instead of rewinding the whole stage).  Bound 0
+    # forces star rounds on a graph this small.
+    from app_dupfind_spark.operators import components
 
-    ensure_checkpoint_dir(spark, str(tmp_path))
+    monkeypatch.setattr(components, "DRIVER_FINISH_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (5, 5)], "a long, b long"
     )
+    ensure_checkpoint_dir(spark, str(tmp_path))
+    ckpt = spark.sparkContext.getCheckpointDir().removeprefix("file:")
+    before = set(os.listdir(ckpt))
+    stats: dict = {}
     out = {
         (r["node"], r["component"])
-        for r in connected_components(pairs).collect()
+        for r in components.connected_components(pairs, counters=stats).collect()
     }
     assert out == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    # one reliable checkpoint for the input and one per round
+    new_dirs = {d for d in set(os.listdir(ckpt)) - before if d.startswith("rdd-")}
+    assert stats["rounds"] >= 1
+    assert len(new_dirs) == stats["rounds"] + 1
 
 
 def test_cascade_end_to_end_under_reliable_barriers(

@@ -340,6 +340,24 @@ def test_a6_counters_reference_triplet(result, corpus):
     assert ex["digest_members"] == n_exact_members
 
 
+def test_cc_counters_explain_the_finish(result):
+    """The cc stage reports its star rounds and the edges it finished
+    on the driver; the fixture's dup graph is far below the bound, so
+    it takes no round, and a spanning forest of its clusters bounds
+    the edge count from below."""
+    rows, runner, _ = result
+    cc = {
+        r["counter"]: r["value"]
+        for r in runner.counters_df().where("stage = 'cc'").collect()
+    }
+    assert cc["rounds"] == 0
+    sizes = defaultdict(int)
+    for _, cid in rows:
+        sizes[cid] += 1
+    multi = [n for n in sizes.values() if n >= 2]
+    assert cc["driver_edges"] >= sum(multi) - len(multi) > 0
+
+
 def test_input_change_invalidates_same_checkpoint_dir(spark, pages, tmp_path):
     """Resume staleness (ADVICE): same checkpoint dir, different input
     -> the content fingerprint forces a rebuild instead of silently

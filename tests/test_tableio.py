@@ -9,8 +9,6 @@ runtime IS present.
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from app_dupfind_spark.config import DedupConfig
@@ -82,11 +80,11 @@ def test_runner_iceberg_mode_routes_through_seam(spark, tmp_path):
 
 
 @pytest.mark.parametrize("mode", ["Iceberg", "delta", ""])
-def test_unknown_persist_mode_rejected(spark, mode):
+def test_unknown_persist_mode_rejected(spark, tmp_path, mode):
     """A misspelt persist_mode dies at construction instead of falling
     back to the local parquet seam."""
     with pytest.raises(ValueError, match="persist_mode"):
-        PipelineRunner(spark, DedupConfig(), tempfile.mkdtemp(), persist_mode=mode)
+        PipelineRunner(spark, DedupConfig(), tmp_path, persist_mode=mode)
 
 
 def test_keep_canonical_merge_statement():
