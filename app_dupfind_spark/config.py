@@ -56,9 +56,9 @@ class DedupConfig:
     lsh_rows: int = 4
     # buckets larger than this are truncated (boilerplate guard; at web
     # scale a mega-bucket is a stop-shingle artifact, not a dup cluster).
-    # bucket_pairs returns them as a skew report, which the pipeline
-    # drops (it keeps bucket_pairs(...)[0]): a truncation is silent
-    # today (ROADMAP direction 3).
+    # bucket_pairs returns them as a skew report, and the pipeline's
+    # cands stage counts them (lsh_truncated_buckets and
+    # lsh_truncated_members in counters_df).
     lsh_bucket_cap: int = 2000
 
     # --- verification ---

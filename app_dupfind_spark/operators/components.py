@@ -12,14 +12,18 @@ component minimum, in O(log^2 n) rounds.  Every round pays driver
 planning and job latency whatever its size.
 
 Driver finish: once the edge count is at or below
-`DRIVER_FINISH_MAX_EDGES` (checked on the input and after every round,
-from the count the fixpoint checksum already returns) the edges are
-collected through Arrow and finished in numpy (`_driver_components`):
-dense ids by `np.unique`, then min-label hooking plus pointer jumping.
-Dup graphs are small near-cliques, so a typical run takes no star
-round at all; a large graph runs star rounds until it shrinks below
-the bound, and star rounds keep the node set and the partition, so
-finishing part-way gives the same components.
+`DRIVER_FINISH_MAX_EDGES` the edges are collected through Arrow and
+finished in numpy (`_driver_components`): dense ids by `np.unique`,
+then min-label hooking plus pointer jumping.  The input is checked
+first, by collecting at most the bound + 1 of its edges before any
+barrier or `distinct` (duplicates are dropped in pandas); a larger
+input is barriered, and the count the fixpoint checksum already
+returns is checked after the barrier and after every round.  Dup
+graphs are small near-cliques, so a typical run takes no star round
+and no barrier at all; a large graph pays that one bounded collect,
+then runs star rounds until it shrinks below the bound, and star
+rounds keep the node set and the partition, so finishing part-way
+gives the same components.
 
 A simpler O(diameter) min-label propagation (hash-min) and a python
 union-find live in tests/test_components.py as cross-checks.
@@ -54,11 +58,10 @@ ids are Python objects on the driver, ~50-100 B each.  Not a
 
 
 def _canonical_edges(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
-    """Undirected edge list, self-loops dropped, (u,v) with u != v."""
-    return (
-        pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
+    """Undirected edge list (u, v) with u != v: self-loops dropped, an
+    edge may repeat."""
+    return pairs.select(F.col(a).alias("u"), F.col(b).alias("v")).where(
+        F.col("u") != F.col("v")
     )
 
 
@@ -165,10 +168,10 @@ def _min_labels(eu: np.ndarray, ev: np.ndarray, n_nodes: int) -> np.ndarray:
             return label
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """(node, component) of a small edge set, computed in numpy on the
-    driver; one partition, node/component typed like the input ids."""
-    pdf = edges.toPandas()
+def _driver_components(pdf: pd.DataFrame, id_type: str, spark) -> DataFrame:
+    """(node, component) of a small, distinct (u, v) edge set, computed
+    in numpy on the driver; one partition, typed `id_type` like the
+    input ids."""
     n = len(pdf)
     # sorted: the smallest dense id of a component is its min node
     nodes, dense = np.unique(
@@ -176,8 +179,7 @@ def _driver_components(edges: DataFrame) -> DataFrame:
         return_inverse=True,
     )
     label = _min_labels(dense[:n], dense[n:], len(nodes))
-    id_type = edges.schema["u"].dataType.simpleString()
-    return edges.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame({"node": nodes, "component": nodes[label]}),
         f"node {id_type}, component {id_type}",
     ).coalesce(1)
@@ -200,13 +202,23 @@ def connected_components(
     a fixpoint or a small enough edge set.  `counters`, when given,
     receives `rounds` (star rounds run) and `driver_edges` (edges
     finished on the driver, 0 if none)."""
+    stats = counters if counters is not None else {}
+    edges = _canonical_edges(pairs, a, b)
+    id_type = edges.schema["u"].dataType.simpleString()
+    # a small edge set goes straight from the input to the driver: one
+    # bounded Arrow collect, duplicates dropped in pandas, no barrier
+    # or checksum job
+    head = edges.limit(DRIVER_FINISH_MAX_EDGES + 1).toPandas()
+    if len(head) <= DRIVER_FINISH_MAX_EDGES:
+        head = head.drop_duplicates(ignore_index=True)
+        stats.update(rounds=0, driver_edges=len(head))
+        return _driver_components(head, id_type, pairs.sparkSession)
     # lazy barrier: the checksum action right after it both
     # materializes the barrier and reads the aggregate — ONE Spark
     # job per iteration instead of two (driver job latency is the fixed
     # cost that caps scaling efficiency of the iterative stage)
-    edges = materialize_barrier(_canonical_edges(pairs, a, b), eager=False)
+    edges = materialize_barrier(edges.distinct(), eager=False)
     prev = _edge_checksum(edges)
-    stats = counters if counters is not None else {}
     rounds = 0
     while prev[0] > DRIVER_FINISH_MAX_EDGES:
         if rounds == max_iterations:
@@ -224,4 +236,4 @@ def connected_components(
             return _star_labels(edges)
         prev = cur
     stats.update(rounds=rounds, driver_edges=prev[0])
-    return _driver_components(edges)
+    return _driver_components(edges.toPandas(), id_type, edges.sparkSession)

@@ -34,9 +34,11 @@ EXACT dup set must NOT exit: the near-dup branch is independent.
 
 A6 run counters (App.pm:424-429 scan/size-dup/real-dup triplet): ride
 the stages' own actions via df.observe() — see runner.counters /
-counters_df(); no second pass over any stage input.  The cc stage adds
-`rounds` (star rounds run) and `driver_edges` (edges finished on the
-driver) from connected_components.
+counters_df(); no second pass over any stage input.  The cands stage
+adds `lsh_truncated_buckets` and `lsh_truncated_members` (LSH buckets
+above lsh_bucket_cap, dropped from pairing) from bucket_pairs; the cc
+stage adds `rounds` (star rounds run) and `driver_edges` (edges
+finished on the driver) from connected_components.
 """
 
 from __future__ import annotations
@@ -179,12 +181,14 @@ def near_dup_pipeline(
 
     def _lsh_chain():
         s = runner.run_stage("sigs", _sigs_fn, inputs=("canon",))
-        return runner.run_stage(
-            "cands",
+
+        def _cands() -> DataFrame:
+            obs = Observation()
+            runner.track("cands", "lsh_truncation", obs)
             # s.df reads from the stage checkpoint — already a barrier
-            lambda: bucket_pairs(s.df, cfg, id_col)[0],
-            inputs=("sigs",),
-        )
+            return bucket_pairs(s.df, cfg, id_col, counters=obs)[0]
+
+        return runner.run_stage("cands", _cands, inputs=("sigs",))
 
     from concurrent.futures import ThreadPoolExecutor
 

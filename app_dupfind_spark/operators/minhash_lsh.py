@@ -20,12 +20,12 @@ Plan shape:
 
 Skew handling:
 - Bucket sizes are measured first (one cheap aggregation).  Buckets
-  larger than cfg.lsh_bucket_cap are dropped from pair generation and
-  returned as the skew report (the pipeline drops it: ROADMAP
-  direction 3) — at web scale a mega-bucket is boilerplate/stop-shingle
-  mass, and m^2 pair explosion from one key is precisely the straggler
-  the reference's one-group-per-work-item queue suffered from
-  (MapReduce.pm:122-125).
+  larger than cfg.lsh_bucket_cap are dropped from pair generation,
+  returned as the skew report and counted (`counters=`: the pipeline's
+  cands stage reports them as lsh_truncated_buckets/_members) — at web
+  scale a mega-bucket is boilerplate/stop-shingle mass, and m^2 pair
+  explosion from one key is precisely the straggler the reference's
+  one-group-per-work-item queue suffered from (MapReduce.pm:122-125).
 - Under the cap, per-bucket pair emission is bounded by cap(cap-1)/2 —
   the cap IS the skew bound.
 - The sizing join shuffles on (band, band_hash); AQE skew-join
@@ -37,7 +37,7 @@ Skew handling:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from app_dupfind_spark.config import DedupConfig
@@ -110,11 +110,20 @@ def lsh_bands(
 
 
 def bucket_pairs(
-    bands: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
+    bands: DataFrame,
+    cfg: DedupConfig,
+    id_col: str = "doc_id",
+    counters: Observation | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH candidate pairs (a, b, n_bands) with a < b, plus the skew
     report (band, band_hash, bucket_size) of truncated buckets, from
     `lsh_bands` output.
+
+    `counters`, when given, is an Observation that receives
+    `lsh_truncated_buckets` (buckets above cfg.lsh_bucket_cap) and
+    `lsh_truncated_members` (their summed sizes), observed on the
+    bucket sizes the pair pipeline computes anyway: the pairs' own
+    action fills it, with no extra job.
 
     `bands` must already be bound (a barrier or a stage checkpoint
     read-back): the bucket pipeline reads it twice (sizing aggregate +
@@ -141,6 +150,25 @@ def bucket_pairs(
         buckets, ["band", "band_hash"], id_col,
         max_size=cfg.lsh_bucket_cap, n_col="n_bands",
     )
+    if counters is not None:
+        over = F.col("size") > cfg.lsh_bucket_cap
+        observed = sizes.observe(
+            counters,
+            F.count_if(over).alias("lsh_truncated_buckets"),
+            F.coalesce(F.sum(F.when(over, F.col("size"))), F.lit(0)).alias(
+                "lsh_truncated_members"
+            ),
+        )
+        # The counters ride the pairs' own action on a branch that is
+        # empty but not provably so (the sizes shuffle is reused).
+        # Observed below the pair aggregate they would be lost exactly
+        # when every bucket is truncated: AQE replaces a subtree whose
+        # shuffle stage came out empty, observations included.
+        pairs = pairs.unionByName(
+            observed.where(F.col("size") < 0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in pairs.schema]
+            )
+        )
     skew_report = sizes.where(
         F.col("size") > cfg.lsh_bucket_cap
     ).withColumnRenamed("size", "bucket_size")

@@ -7,9 +7,14 @@ common substring and keep pairs with LCS >= min_span_chars.
 Execution shape: the pair list (small — post-LSH survivors only) joins
 each side's text, then a `mapInPandas` computes LCS per Arrow batch.
 The per-pair check is inherently algorithmic (not expressible as a
-column expression); the kernel is a numpy double-rolling-hash binary
-search over the span length — O(n log n) per pair, ~100x faster than a
-quadratic DP and exact up to ~2^-60 hash-collision odds.
+column expression); the kernel is numpy over double rolling hashes.
+The gate hashes both sides' min_span_chars windows; the longest run of
+consecutive windows matched on each side bounds the LCS, the bound is
+probed first, and only if it fails is the length binary-searched below
+it.  A pair sharing one span costs the gate plus one substring search,
+O(n log n) for the sort inside the gate; the worst case adds a log n
+factor of hash probes — ~100x faster than a quadratic DP and exact up
+to ~2^-60 hash-collision odds.
 
 Scale: this stage NEVER sees the corpus — only verified-candidate
 pairs, the reference's "expensive verify last, on the fewest rows"
@@ -169,10 +174,38 @@ def _has_common(px, py, L: int) -> bool:
     return np.intersect1d(kx, ky).size > 0
 
 
+def _matched(s: np.ndarray, order: np.ndarray, other: np.ndarray) -> np.ndarray:
+    """Whether each window's key is among `other` (sorted keys), in
+    window order; `s` is the windows' keys sorted by `order`, since
+    searchsorted is several times faster with sorted queries."""
+    idx = np.searchsorted(other, s)
+    idx[idx == other.size] = 0
+    hit = np.empty(s.size, dtype=bool)
+    hit[order] = other[idx] == s
+    return hit
+
+
+def _longest_run(hit: np.ndarray) -> tuple[int, int]:
+    """(start, length) of the first longest run of True in `hit`."""
+    edges = np.flatnonzero(np.diff(hit, prepend=False, append=False))
+    starts, lengths = edges[::2], edges[1::2] - edges[::2]
+    k = int(lengths.argmax())
+    return int(starts[k]), int(lengths[k])
+
+
 def _lcs_len(x: str, y: str, min_len: int = 1) -> int:
     """Longest common substring length, certified by double rolling
     hash; returns 0 early when no common substring reaches min_len
-    (the gate), else binary-searches the exact maximum (common-substring
+    (the gate).
+
+    The gate's min_len window keys also bound the answer: a common
+    substring of length L covers L - min_len + 1 consecutive windows on
+    each side, every one of them matched by a window of the other side,
+    so L <= min_len - 1 + (the shorter of the two sides' longest
+    matched runs).  That bound is probed first, by a plain substring
+    search for the text under the shorter run (exact, and all a pair
+    sharing one span needs), then by the hash probe; only if both fail
+    is the exact maximum binary-searched below it (common-substring
     existence is monotone in L)."""
     cx, cy = _codes(x), _codes(y)
     hi_cap = min(cx.size, cy.size)
@@ -180,9 +213,19 @@ def _lcs_len(x: str, y: str, min_len: int = 1) -> int:
         return 0
     px = (_prefix(cx, _B1, _P1), _prefix(cx, _B2, _P2))
     py = (_prefix(cy, _B1, _P1), _prefix(cy, _B2, _P2))
-    if not _has_common(px, py, min_len):
+    kx = _window_keys_from_prefix(px[0], px[1], min_len)
+    ky = _window_keys_from_prefix(py[0], py[1], min_len)
+    ox, oy = np.argsort(kx), np.argsort(ky)
+    sx, sy = kx[ox], ky[oy]
+    hx = _matched(sx, ox, sy)
+    if not hx.any():
         return 0
-    lo, hi = min_len, hi_cap  # invariant: common substring of len lo exists
+    (ix, rx), (iy, ry) = _longest_run(hx), _longest_run(_matched(sy, oy, sx))
+    hi = min_len - 1 + min(rx, ry)
+    span, other = (x[ix : ix + hi], y) if rx <= ry else (y[iy : iy + hi], x)
+    if span in other or _has_common(px, py, hi):
+        return hi
+    lo, hi = min_len, hi - 1  # invariant: common substring of len lo exists
     while lo < hi:
         mid = (lo + hi + 1) // 2
         if _has_common(px, py, mid):
@@ -212,8 +255,9 @@ def shared_span_pairs(
     )
     joined = pairs.select("a", "b").join(ta, "a").join(tb, "b")
     # spread the Python LCS kernel across the cores — the pair table is
-    # small enough that AQE would otherwise coalesce it onto one core,
-    # and a Python task costs a fixed ~0.25 s (plans.partitioning)
+    # small enough that AQE would otherwise coalesce it onto one core —
+    # and no further: a Python task still has a fixed cost
+    # (plans.partitioning)
     joined = joined.repartition(
         joined.sparkSession.sparkContext.defaultParallelism, "a", "b"
     )

@@ -10,9 +10,10 @@ XXH64 algorithm (Collet's spec; Spark's XxHash64 expression chains it
 per input with the running hash as seed) from the spec, plus the
 repo's pinned signature math (same DedupConfig pins — the config IS
 part of a run's identity, config.py), and an INDEPENDENT longest-
-common-substring via suffix automaton (the Spark kernel uses rolling-
-hash binary search — a genuinely different algorithm, so agreement is
-evidence, mirroring the reference's golden-structure tests,
+common-substring via suffix automaton (the Spark kernel uses rolling
+hashes: a matched-window run bound, probed first, then a binary search
+below it — a genuinely different algorithm, so agreement is evidence,
+mirroring the reference's golden-structure tests,
 /root/reference/t/007_digest.t).
 
 Run:  python scripts/native_oracle.py [sf_dir] [out_json]
@@ -234,8 +235,8 @@ def native_lsh_pairs(sigs, cfg):
 # --------------------------------------------------- span stage oracle
 def lcs_suffix_automaton(x: str, y: str) -> int:
     """Longest common substring via suffix automaton over x — an
-    independent algorithm from the Spark kernel's rolling-hash binary
-    search (agreement is evidence, not self-comparison)."""
+    independent algorithm from the Spark kernel's rolling-hash run
+    bound and search (agreement is evidence, not self-comparison)."""
     # build SAM of x
     maxlen = [0, 0]
     link = [-1, -1]

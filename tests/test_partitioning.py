@@ -6,8 +6,10 @@ coalesces, so the static count is the runtime count."""
 
 from __future__ import annotations
 
+import sys
 from contextlib import contextmanager
 
+import pytest
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
@@ -74,3 +76,66 @@ def test_span_lcs_kernel_fans_out_to_default_parallelism(spark, monkeypatch):
     assert len(fed) == 1
     with _static_plan(spark):
         assert num_partitions(fed[0]) == 4
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="3.13's invalidate_caches only drops the cache"
+)
+def test_tasks_keep_spark_zip_directories(spark, tmp_path):
+    """Each task of a reused worker calls importlib.invalidate_caches()
+    (pyspark.worker_util.setup_spark_files): once the package is
+    imported, Spark's own archives keep their zip directory, and any
+    other zip on sys.path is still re-read.  It runs more tasks than
+    cores and checks inside every task, whichever worker runs it."""
+    root = str(tmp_path)
+
+    def task(batches):
+        import importlib
+        import os
+        import sys
+        import zipfile
+        import zipimport
+
+        import pandas as pd
+
+        import app_dupfind_spark  # noqa: F401  what unpickling a package UDF does
+
+        def spark_zip(path):
+            name = os.path.basename(path)
+            return name == "pyspark.zip" or name.startswith(("py4j-", "spark-core_"))
+
+        for pdf in batches:
+            part = int(pdf["id"].iloc[0])
+            mod = f"own_zip_mod_{part}"
+            own = os.path.join(root, f"{mod}.zip")
+            with zipfile.ZipFile(own, "w") as z:
+                z.writestr(f"{mod}.py", "X = 1\n")
+            sys.path.insert(0, own)
+            try:
+                importlib.import_module(mod)
+                cache = zipimport._zip_directory_cache
+                before = dict(cache)
+                importlib.invalidate_caches()
+                spark_zips = [k for k in before if spark_zip(k)]
+                kept = all(cache[k] is before[k] for k in spark_zips)
+                own_reread = cache[own] is not before[own]
+            finally:
+                sys.path.remove(own)
+                sys.path_importer_cache.pop(own, None)
+                sys.modules.pop(mod, None)
+            yield pd.DataFrame({
+                "spark_zips": [len(spark_zips)],
+                "kept": [kept],
+                "own_reread": [own_reread],
+            })
+
+    tasks = 2 * spark.sparkContext.defaultParallelism
+    rows = (
+        spark.range(tasks, numPartitions=tasks)
+        .mapInPandas(task, "spark_zips long, kept boolean, own_reread boolean")
+        .collect()
+    )
+    assert len(rows) == tasks
+    assert all(r.spark_zips >= 1 for r in rows)
+    assert all(r.kept for r in rows)
+    assert all(r.own_reread for r in rows)

@@ -284,9 +284,28 @@ def test_q1_early_exit_on_all_unique_corpus(spark, tmp_path):
     status = {m["stage"]: m for m in runner.metrics}
     assert status["verify"]["skipped"] is True
     assert status["cc"]["skipped"] is True
+    assert runner.counters["cands"]["lsh_truncated_buckets"] == 0
     got = [(r["url"], r["cluster_id"], r["is_canonical"]) for r in clusters.collect()]
     assert len(got) == 12
     assert all(u == cid and canon for u, cid, canon in got)
+
+
+def test_planted_mega_bucket_is_counted(spark):
+    """A truncated LSH bucket is never silent: 30 identical docs over
+    lsh_bucket_cap=10 fill one bucket per band, and the cands stage
+    counts all 32 buckets and their 30 x 32 members."""
+    text = " ".join(f"mega{j}" for j in range(40))
+    rows = [(f"u{i:02d}", BASE_TS, b"", text, "en") for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    cfg = DedupConfig(lsh_bucket_cap=10, span_enabled=False)
+    clusters, runner = near_dup_pipeline(spark, df, cfg, None, persist_mode="memory")
+    cands = runner.counters["cands"]
+    assert cands["lsh_truncated_buckets"] == cfg.lsh_bands == 32
+    assert cands["lsh_truncated_members"] == 30 * 32
+    # the exact stage still clusters them
+    assert clusters.select("cluster_id").distinct().count() == 1
 
 
 def test_q1_skip_does_not_poison_resume(spark, pages, tmp_path):
